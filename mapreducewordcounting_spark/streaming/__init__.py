@@ -29,26 +29,13 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
+
+from mapreducewordcounting_spark.catalog import (
+    load_table,
+    normalize_events_ts,
+    raw_table,
 )
-
-from mapreducewordcounting_spark.catalog import load_table
 from mapreducewordcounting_spark.registry import register
-
-def _events_raw_schema(ts_type) -> StructType:
-    return StructType([
-        StructField("event_id", LongType()),
-        StructField("ts", ts_type),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ])
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -57,35 +44,21 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The fixture's ts column has shipped as both µs TIMESTAMP (reads as
     TIMESTAMP_NTZ) and ns TIMESTAMP(NANOS) (readable only as raw int64
-    under nanosAsLong) across generations — see catalog.load_table.
-    A readStream needs its schema up front, so probe the batch reader's
-    view of the footer first and branch on the OBSERVED type; assuming
-    ns here while the file is µs would silently divide every timestamp
-    by an extra 1000 (2024 collapses to 1970-01-20)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "events.parquet")
-    # Footer probe with the batch reader: what type does ts REALLY have?
-    try:
-        raw_type = spark.read.parquet(path).schema["ts"].dataType
-    except Exception as exc:
-        if "PARQUET_TYPE_ILLEGAL" not in str(exc) and \
-                "Illegal Parquet type" not in str(exc):
-            raise
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw_type = spark.read.parquet(path).schema["ts"].dataType
-    def _stream(ts_type):
-        # file-stream source wants a DIRECTORY; select the one file by glob
-        return (
-            spark.readStream.schema(_events_raw_schema(ts_type))
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-
-    if isinstance(raw_type, LongType):
-        # ns fixture under nanosAsLong: ts arrives as epoch-nanos int64.
-        return _stream(LongType()).withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return _stream(raw_type).withColumn("ts", F.col("ts").cast("timestamp"))
+    under nanosAsLong) across generations — see catalog.raw_table.
+    A readStream needs its schema up front, so it takes the batch
+    reader's raw view of the footer (the catalog's per-session schema,
+    no job once the batch catalog has loaded events) and normalizes on
+    the OBSERVED type; assuming ns here while the file is µs would
+    silently divide every timestamp by an extra 1000 (2024 collapses
+    to 1970-01-20)."""
+    schema = raw_table(spark, sf_dir, "events").schema
+    # file-stream source wants a DIRECTORY; select the one file by glob
+    stream = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+    return normalize_events_ts(stream)
 
 
 #: State-store partition count for streaming queries. A stateful

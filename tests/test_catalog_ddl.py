@@ -107,3 +107,126 @@ def test_load_table_missing_file_raises_original(spark):
     assert "PARQUET_TYPE_ILLEGAL" not in str(ei.value)
     assert spark.conf.get(
         "spark.sql.legacy.parquet.nanosAsLong", "false") == before
+
+
+# --- per-session schema reuse in catalog.load_table --------------------
+
+
+def _jobs_run_by(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted through a fresh
+    job group. Job events reach the status store asynchronously, so a
+    fence job in a second fresh group is awaited before counting: once
+    the fence is visible, every earlier job is too."""
+    import time
+
+    sc = spark.sparkContext
+    group, fence = (f"mrwc-catalog-{uuid.uuid4().hex}" for _ in range(2))
+    sc.setJobGroup(group, "catalog schema reuse")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(fence, "status store fence")
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(fence):
+        assert time.monotonic() < deadline, "fence job never reported"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+def test_load_table_second_load_runs_no_job(spark, sf_dir):
+    """The first load of a table in a session runs Spark's schema
+    inference (a footer-reading job); the second reuses its schema and
+    runs no job at all. A newSession() starts with nothing stored."""
+    from mapreducewordcounting_spark.catalog import load_table
+
+    s = spark.newSession()
+    first, n_first = _jobs_run_by(
+        s, lambda: load_table(s, sf_dir, "documents"))
+    second, n_second = _jobs_run_by(
+        s, lambda: load_table(s, sf_dir, "documents"))
+    assert n_first >= 1
+    assert n_second == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_load_table_rewritten_table_is_reinferred(spark, tmp_path):
+    """A table rewritten in place with a different schema is inferred
+    again, not served with the schema stored for its old version."""
+    from mapreducewordcounting_spark.catalog import load_table
+
+    path = str(tmp_path / "documents.parquet")
+    spark.range(3).selectExpr("id AS doc_id", "'a' AS text") \
+        .write.parquet(path)
+    v1 = load_table(spark, str(tmp_path), "documents")
+    assert v1.columns == ["doc_id", "text"]
+    assert v1.count() == 3
+
+    spark.range(5).selectExpr("CAST(id AS INT) AS doc_id", "'b' AS text",
+                              "id * 2 AS n_tokens") \
+        .write.mode("overwrite").parquet(path)
+    v2 = load_table(spark, str(tmp_path), "documents")
+    assert v2.columns == ["doc_id", "text", "n_tokens"]
+    assert v2.schema["doc_id"].dataType.typeName() == "integer"
+    assert sorted(r.n_tokens for r in v2.collect()) == [0, 2, 4, 6, 8]
+
+
+def test_events_loads_twice_to_timestamp(spark, sf_dir):
+    """events keeps its ts normalization on the reused schema: both
+    loads give TimestampType and the same rows, the second with no
+    job; a stream over events after a batch load runs no job either."""
+    from pyspark.sql.types import TimestampType
+
+    from mapreducewordcounting_spark.catalog import load_table
+    from mapreducewordcounting_spark.streaming import read_events_stream
+
+    s = spark.newSession()
+    first = load_table(s, sf_dir, "events")
+    second, n_jobs = _jobs_run_by(s, lambda: load_table(s, sf_dir, "events"))
+    assert n_jobs == 0
+    assert isinstance(first.schema["ts"].dataType, TimestampType)
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+    stream, n_stream = _jobs_run_by(s, lambda: read_events_stream(s, sf_dir))
+    assert n_stream == 0
+    assert stream.isStreaming
+    assert stream.schema == first.schema
+
+
+def test_ns_events_retry_is_per_session(spark, tmp_path):
+    """The ns-precision events encoding: each session runs its own
+    nanosAsLong retry once, later loads reuse the int64 view, and every
+    load normalizes ts to the same microsecond TimestampType values.
+    The caller's session never sees the flag."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    from mapreducewordcounting_spark.catalog import load_table
+
+    flag = "spark.sql.legacy.parquet.nanosAsLong"
+    ns = [1_700_000_000_123_456_789, 1_700_003_600_000_001_000]
+    pq.write_table(
+        pa.table({"event_id": pa.array([1, 2], pa.int64()),
+                  "ts": pa.array(ns, pa.timestamp("ns"))}),
+        str(tmp_path / "events.parquet"), version="2.6")
+    before = spark.conf.get(flag, "false")
+
+    for s in (spark.newSession(), spark.newSession()):
+        assert s.conf.get(flag, "false") == "false"
+        first = load_table(s, str(tmp_path), "events")
+        second, n_jobs = _jobs_run_by(
+            s, lambda: load_table(s, str(tmp_path), "events"))
+        assert s.conf.get(flag) == "true"
+        assert n_jobs == 0
+        for df in (first, second):
+            assert isinstance(df.schema["ts"].dataType, TimestampType)
+            got = sorted(r[0] for r in df.selectExpr(
+                "unix_micros(ts)").collect())
+            assert got == [v // 1000 for v in ns]
+    assert spark.conf.get(flag, "false") == before

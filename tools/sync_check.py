@@ -18,6 +18,10 @@ Checks (all against the live registry import):
      errors == {}
   6. PLANS_audit.json: n_queries == total, every registry query has a
      per-plan entry, and every violation list is empty
+  7. SCALING.md "Session defaults": every row for a conf that
+     session.py reads from an env var quotes that env var and its
+     shipped default (the broadcast-threshold and split-size rows
+     must be there)
 
 `python tools/sync_check.py` exits non-zero on the first disagreement;
 `make sync-check` is an alias and `tools/check.py` runs it as its
@@ -26,6 +30,7 @@ final stage (after the regenerating stages, so it sees fresh files).
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import re
@@ -33,6 +38,53 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+#: SCALING.md session-table rows that must exist.
+SCALING_REQUIRED = ("spark.sql.autoBroadcastJoinThreshold",
+                    "spark.sql.files.maxPartitionBytes")
+
+
+def session_env_defaults(source: str) -> dict[str, tuple[str, str]]:
+    """conf -> (env var, shipped default) for every
+    ``.config(conf, os.environ.get(env, default))`` in session.py."""
+    out = {}
+    for node in ast.walk(ast.parse(source)):
+        if not (isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "config" and len(node.args) == 2):
+            continue
+        key, val = node.args
+        if (isinstance(key, ast.Constant) and isinstance(val, ast.Call)
+                and ast.unparse(val.func) == "os.environ.get"
+                and all(isinstance(a, ast.Constant) for a in val.args)
+                and len(val.args) == 2):
+            out[key.value] = (val.args[0].value, val.args[1].value)
+    return out
+
+
+def scaling_session_rows(text: str) -> dict[str, str]:
+    """conf -> value cell of SCALING.md's "Session defaults" table."""
+    section = text.split("## Session defaults", 1)[-1].split("\n## ", 1)[0]
+    return dict(re.findall(r"^\| `(spark\.[\w.]+)` \| ([^|]*) \|",
+                           section, flags=re.M))
+
+
+def scaling_problems(scaling: str, session_source: str) -> list[str]:
+    """Disagreements between SCALING.md's session table and the
+    env-var defaults session.py ships."""
+    shipped = session_env_defaults(session_source)
+    rows = scaling_session_rows(scaling)
+    problems = [f"SCALING.md session defaults: no {conf} row"
+                for conf in SCALING_REQUIRED if conf not in rows]
+    for conf, cell in rows.items():
+        if conf not in shipped:
+            continue
+        env, default = shipped[conf]
+        if cell.split()[:1] != [default] or f"`{env}`" not in cell:
+            problems.append(
+                f"SCALING.md session defaults: {conf} reads {cell.strip()!r}"
+                f", session.py ships {default} (`{env}`)")
+    return problems
 
 
 def main() -> int:
@@ -116,6 +168,11 @@ def main() -> int:
                 problems.append(f"PLANS_audit: {key}={val}")
     except Exception as exc:
         problems.append(f"PLANS_audit unreadable: {exc!r}")
+
+    # 7. SCALING.md session defaults vs session.py
+    problems += scaling_problems(
+        read("SCALING.md"),
+        read(os.path.join("mapreducewordcounting_spark", "session.py")))
 
     for p in problems:
         print(f"SYNC FAIL: {p}")
