@@ -4,18 +4,10 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Timing = full materialization via the noop sink (forces every operator
-to execute; nothing short-circuits like count() can). Warmup contract
-(VERDICT r3 item 8): besides the one-time JVM + Python-worker warmup,
-EVERY headline query first runs once untimed at sf0.001 — that absorbs
-its own codegen compilation, shuffle-service init, and any
-family-specific first-use cost (the r2 mm_decode 8.4 s artifact), and
-the recorded number is the MEDIAN of 3 timed sf0.1 runs — a single
-run occasionally absorbs a transient (GC pause, OS scheduling): a
-clean A/B showed dedup_simhash_det at 2.6 s vs 7.7 s across two
-otherwise-identical suite runs while 4 isolated runs sat at 2.2-2.7 s.
-The median discards exactly that kind of sample. Numbers must be
-stable to ±20% across suite runs.
+Timing protocol: tools/measure.py (one untimed sf0.001 warmup per
+query, then the median of 3 noop-sink materializations at sf0.1, after
+a one-time JVM + Python-worker warmup). Numbers must be stable to ±20%
+across suite runs.
 """
 
 from __future__ import annotations
@@ -23,18 +15,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mapreducewordcounting_spark import registry
-from mapreducewordcounting_spark.checkpoints import release_all_pinned
 from mapreducewordcounting_spark.session import get_spark
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-#: tiny fixture for per-query untimed warmups (codegen/JIT, not data)
-WARM_SF_DIR = os.environ.get("SPARK_GRAFT_WARM_SF_DIR",
-                             "/root/testdata/sf0.001")
+from tools.measure import SF_DIR, measure, warm_session
 
 #: Host-contention control (VERDICT r10 item 8, automating the r8/r10
 #: drift adjudications): wordcount_canonical has been byte-identical
@@ -221,58 +207,22 @@ EXTENDED = [
 ]
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def time_queries(spark, names: list[str], label: str) -> dict[str, float]:
+    """Median-of-3 seconds per query (tools/measure.py protocol)."""
+    qs = registry.queries()
+    out: dict[str, float] = {}
+    for name in names:
+        out[name] = measure(spark, qs[name], SF_DIR, tag=f"bench {name}")[0]
+        print(f"{label}{name}: {out[name]}s", file=sys.stderr, flush=True)
+    return out
 
 
 def main() -> None:
     spark = get_spark(app_name="mrwc-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = registry.queries()
-
-    # untimed warmup (JVM + codegen + parquet footer cache)
-    materialize(qs["wordcount_canonical"](spark, SF_DIR))
-    # untimed Python-worker warmup: the first pandas-UDF query in the
-    # suite otherwise absorbs the one-time fork + `import pandas` cost
-    # of every Python daemon worker (seconds on a contended host) —
-    # startup cost, not query cost, per the warmup contract above.
-    import pandas as _pd  # noqa: F401
-
-    def _warm(it):
-        for pdf in it:
-            yield pdf
-
-    materialize(
-        spark.range(32, numPartitions=32).mapInPandas(_warm, "id long"))
-
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        # untimed per-query warmup at sf0.001: compiles this query's
-        # codegen stages / UDF workers without touching the timed data
-        materialize(qs[name](spark, WARM_SF_DIR))
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            materialize(qs[name](spark, SF_DIR))
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(sorted(samples)[1], 3)  # median of 3
-        print(f"{name}: {timings[name]}s", file=sys.stderr, flush=True)
-        # storage hygiene between queries (VERDICT r5 item 5): each
-        # run's local checkpoints are dead once materialized — drop
-        # them so executor storage returns to baseline per query.
-        release_all_pinned(spark)
-
-    extended: dict[str, float] = {}
-    for name in EXTENDED:
-        materialize(qs[name](spark, WARM_SF_DIR))
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            materialize(qs[name](spark, SF_DIR))
-            samples.append(time.perf_counter() - t0)
-        extended[name] = round(sorted(samples)[1], 3)  # median of 3
-        print(f"[ext] {name}: {extended[name]}s", file=sys.stderr, flush=True)
-        release_all_pinned(spark)
+    warm_session(spark)
+    timings = time_queries(spark, HEADLINE, "")
+    extended = time_queries(spark, EXTENDED, "[ext] ")
 
     total = round(sum(timings.values()), 3)
     config = {

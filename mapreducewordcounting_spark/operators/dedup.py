@@ -678,18 +678,8 @@ def dedup_clusters_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", "source",
         (F.col("doc_id") / DEDUP_SHARD_SPAN).cast("bigint")
         .alias("shard"))
-    before_ids = pinned_ids(spark)
-    pairs = ngram_jaccard_pairs(
-        docs, 0.8, shard_cols=("source", "shard")
-    ).select("id_a", "id_b")
-    edges = pairs.unionByName(
-        pairs.select(F.col("id_b").alias("id_a"),
-                     F.col("id_a").alias("id_b")))
-    scratch = CheckpointRotator(spark)
-    edges = scratch.rotate(edges)
-    release_created_since(spark, before_ids, keep=scratch.live_ids)
-    labels = component_labels(edges)
-    scratch.release()
+    labels = pair_graph_labels(spark, lambda: ngram_jaccard_pairs(
+        docs, 0.8, shard_cols=("source", "shard")))
     shard_of = docs.select(F.col("doc_id").alias("node"),
                            "source", "shard")
     return (labels.join(shard_of, "node")
@@ -745,16 +735,8 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop — semantic near-dup graphs are sparser than lexical ones
     (planted fixture: cos 0.45 keeps component count > 1, sizes
     small), so the loop converges in a handful of sweeps."""
-    before_ids = pinned_ids(spark)
-    pairs = dedup_embedding_cosine(spark, sf_dir).select("id_a", "id_b")
-    edges = pairs.unionByName(
-        pairs.select(F.col("id_b").alias("id_a"),
-                     F.col("id_a").alias("id_b")))
-    scratch = CheckpointRotator(spark)
-    edges = scratch.rotate(edges)
-    release_created_since(spark, before_ids, keep=scratch.live_ids)
-    labels = component_labels(edges)
-    scratch.release()
+    labels = pair_graph_labels(
+        spark, lambda: dedup_embedding_cosine(spark, sf_dir))
     return labels.groupBy(F.col("label").alias("cluster_survivor")).agg(
         F.count("*").alias("n_members"),
         F.array_join(F.sort_array(F.collect_list("node")), "|")
@@ -765,18 +747,25 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def neardup_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(node, label)`` connected-component labels over the 3-gram
     Jaccard ≥ 0.8 near-dup pair graph — the shared front half of
-    dedup_clusters and training_ops.sample_split_leakage_safe.
+    dedup_clusters and training_ops.sample_split_leakage_safe."""
+    return pair_graph_labels(
+        spark, lambda: dedup_ngram_jaccard(spark, sf_dir))
+
+
+def pair_graph_labels(spark: SparkSession, make_pairs) -> DataFrame:
+    """``(node, label)`` connected-component labels over the pair
+    graph that ``make_pairs()`` returns as ``(id_a, id_b, ...)`` rows.
 
     Checkpoint hygiene (VERDICT r5 item 5): the symmetric edge list is
     lineage-cut before iterating — without this, every iteration's
-    labels plan re-embeds the whole jaccard DAG and the loop goes
-    exponential (measured 24.7 s → ~5 s at sf0.1). The jaccard
-    sub-plan's own shingle checkpoint is freed as soon as the edge
-    list is materialized, and the edge list itself is dropped before
-    return — only the final label snapshot (which the returned plan
-    scans) stays pinned."""
+    labels plan re-embeds the whole pair DAG and the loop goes
+    exponential (measured 24.7 s → ~5 s at sf0.1 on the jaccard
+    graph). Every checkpoint the pair sub-plan pins is freed as soon
+    as the edge list is materialized, and the edge list itself is
+    dropped before return — only the final label snapshot (which the
+    returned plan scans) stays pinned."""
     before_ids = pinned_ids(spark)
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
+    pairs = make_pairs().select("id_a", "id_b")
     edges = pairs.unionByName(
         pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")))
     scratch = CheckpointRotator(spark)

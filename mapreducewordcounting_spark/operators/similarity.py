@@ -820,8 +820,7 @@ def _greedy_route_oracle() -> str:
     oracle=_greedy_route_oracle(),
     tags=("similarity", "ann", "graph", "approx"),
 )
-def similarity_ann_greedy_route(spark: SparkSession, sf_dir: str,
-                                _eager_hops: bool = True) -> DataFrame:
+def similarity_ann_greedy_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-hop greedy ANN routing (VERDICT r10 item 3) — the
     iterative form similarity_ann_anchor_graph's docstring scoped as
     future work, now a first-class query:
@@ -920,21 +919,16 @@ def similarity_ann_greedy_route(spark: SparkSession, sf_dir: str,
         F.desc("cos"), F.asc("anchor"))
     for _ in range(_GR_HOPS):
         # hop state is |queries| x beam x (RDEG+1) SKINNY
-        # (query_id, anchor) rows. r14 A/B (VERDICT r13 item 3,
-        # tools/ab_greedy_route.py, plans/r14/): each hop's candidate
-        # set feeds BOTH the visited union and the next frontier, so
-        # the fully-LAZY walk duplicates every hop subtree ~2x per
-        # hop — a 64-Exchange plan tree (24 shuffle + 40 broadcast;
-        # the registry's largest) that re-evaluates early hops
-        # ~2^hops times and pays planner time on the whole tree.
-        # localCheckpoint per hop (guide §3.3 lineage truncation)
-        # collapses it to 18 Exchange nodes (8 + 10) for
-        # identical rows, at the cost of _GR_HOPS tiny jobs per
-        # serving call; interleaved A/B medians 7.82->5.83 s (sf0.1),
-        # 5.15->4.74 s (derived sf1). The BPE job-count concern that
-        # had kept the walk lazy is outweighed: 3 extra jobs vs
-        # exponential subtree re-evaluation wins at every SF measured,
-        # and the gap widens with hop count by construction.
+        # (query_id, anchor) rows. Each hop's candidate set feeds BOTH
+        # the visited union and the next frontier, so a fully-lazy
+        # walk duplicates every hop subtree ~2x per hop: a 64-Exchange
+        # plan (24 shuffle + 40 broadcast) that re-evaluates early
+        # hops ~2^hops times. localCheckpoint per hop (guide §3.3
+        # lineage truncation) collapses it to 18 Exchange nodes (8 +
+        # 10) for identical rows, at the cost of one tiny job per hop;
+        # the interleaved A/B medians and plans are in
+        # OPTIMIZATION_r14.md §1. The hop checkpoints stay pinned until
+        # the harness sweep (result-referenced class, checkpoints.py).
         # Exchange discipline (r12): the hop dedup and beam windows
         # shuffle (query_id, anchor[, cos]) only — both embeddings
         # attach via broadcast sides right before the map-side cosine
@@ -942,16 +936,8 @@ def similarity_ann_greedy_route(spark: SparkSession, sf_dir: str,
             frontier.join(F.broadcast(rcand),
                           frontier.anchor == rcand.cur)
             .select("query_id", F.col("cand_id").alias("anchor"))
-            .dropDuplicates(["query_id", "anchor"]))
-        if _eager_hops:
-            # A/B variant (VERDICT r13 item 3): localCheckpoint each
-            # hop's candidate set — it feeds BOTH the visited union
-            # and the next frontier, so materializing it collapses
-            # the duplicated-subtree plan (guide §3.3 lineage
-            # truncation) at the cost of one tiny job per hop. All
-            # hop checkpoints stay pinned until the harness sweep
-            # (result-referenced class, checkpoints.py).
-            cand_hop = cand_hop.localCheckpoint(eager=True)
+            .dropDuplicates(["query_id", "anchor"])
+            .localCheckpoint(eager=True))
         visited.append(cand_hop)
         frontier = (cand_hop
                     .join(F.broadcast(anchors),

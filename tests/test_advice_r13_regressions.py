@@ -8,9 +8,9 @@ control adjudicated the host CLEAN, a still-flagging host-drift ack
 must convert to the real regression it deferred instead of silencing
 the row. ``ack_disposition`` is that rule, pure; these tests pin it.
 
-Findings 2-3 (tools/bench_scale.py warmup dir + per-tier ratios) are
-script-main fixes exercised by running the tool; their contracts are
-asserted textually here so a revert is caught without a Spark run.
+Findings 2-3 (tools/bench_scale.py warmup dir + per-tier ratios):
+the warmup dir is tools/measure.py's, pinned in tests/test_measure.py;
+the ratios are ``decade_ratios``, pinned here.
 """
 
 from __future__ import annotations
@@ -22,9 +22,13 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from tools.bench_outliers import ack_disposition  # noqa: E402
+from tools.bench_scale import decade_ratios  # noqa: E402
 
-HOST_DRIFT_ACK = "r13 host-drift block (see above)"
+HOST_DRIFT_ACK = "HOST-DRIFT: r13 block (see above)"
 STRUCTURAL_ACK = "footer-stats full listing is the feature"
+#: structural reason whose prose mentions host drift
+STRUCTURAL_NOT_DRIFT_ACK = ("plan-inherent: the second scan is the "
+                            "feature, not host-drift")
 
 
 def test_host_drift_ack_expires_on_clean_sweep():
@@ -40,9 +44,11 @@ def test_host_drift_ack_holds_on_contended_or_unadjudicated_sweep():
 
 
 def test_structural_ack_never_expires():
-    # only host-drift acks carry the "clean sweep un-flags me" claim
-    for contended in (False, True, None):
-        assert ack_disposition(STRUCTURAL_ACK, contended) == "acknowledged"
+    # only host-drift acks carry the "clean sweep un-flags me" claim;
+    # the HOST-DRIFT: prefix marks them, not a word in the prose
+    for ack in (STRUCTURAL_ACK, STRUCTURAL_NOT_DRIFT_ACK):
+        for contended in (False, True, None):
+            assert ack_disposition(ack, contended) == "acknowledged"
 
 
 def test_no_ack_is_unresolved():
@@ -50,11 +56,19 @@ def test_no_ack_is_unresolved():
         assert ack_disposition(None, contended) == "none"
 
 
-def test_bench_scale_advice_fixes_stay_applied():
-    src = open(os.path.join(REPO, "tools", "bench_scale.py")).read()
-    # finding 2: warmup must target WARM_SF_DIR, never DIRS[0]
-    assert 'materialize(qs["wordcount_canonical"](spark, WARM_SF_DIR))' in src
-    assert "(spark, DIRS[0])" not in src
-    # finding 3: each ratio computed from its own adjacent tiers
-    assert 'if row.get("sf0.1") and row.get("sf1")' in src
-    assert 'if row.get("sf1") and row.get("sf10")' in src
+def test_decade_ratio_reported_without_sf01():
+    results = {"/x/scale_scratch/sf1": {"q": 2.0},
+               "/x/scale_scratch/sf10": {"q": 7.0}}
+    assert decade_ratios(["q"], results) == {
+        "q": {"sf1": 2.0, "sf10": 7.0, "ratio_sf10_vs_sf1": 3.5}}
+
+
+def test_decade_ratios_per_adjacent_tier_pair():
+    results = {"/t/sf0.1": {"q": 1.0, "r": 1.0},
+               "/x/sf1": {"q": 3.0},
+               "/x/sf10": {"q": 6.0, "r": 5.0}}
+    ratios = decade_ratios(["q", "r"], results)
+    assert ratios["q"]["ratio_sf1"] == 3.0
+    assert ratios["q"]["ratio_sf10_vs_sf1"] == 2.0
+    # r has no sf1 sample: neither ratio spans the missing tier
+    assert ratios["r"] == {"sf0.1": 1.0, "sf1": None, "sf10": 5.0}

@@ -3,14 +3,12 @@ in the registry has at least one recorded sf0.1 wall time").
 
     python tools/bench_full.py  ->  BENCH_FULL_sf01.json
 
-Protocol: one untimed sf0.001 warmup per query (codegen / UDF-worker
-compilation), then ONE timed sf0.1 materialization through the noop
-sink, with the between-query checkpoint sweep. This is a COVERAGE
-sweep, not the headline benchmark: bench.py's 65-query headline set
-(median-of-3) remains the number compared against BASELINE.md; the
-single-sample times here are for outlier detection (>2x of family
-peers gets the join_interval_overlap treatment) and land in
-BASELINE.md's round-6 note.
+Protocol: tools/measure.py with ONE timed sf0.1 run per query. This
+is a COVERAGE sweep, not the headline benchmark: bench.py's 65-query
+headline set (median-of-3) remains the number compared against
+BASELINE.md; the single-sample times here are for outlier detection
+(>2x of family peers gets the join_interval_overlap treatment) and
+land in BASELINE.md's round-6 note.
 
 Streaming queries run their real micro-batch round trips; their times
 include sink/trigger plumbing by design (the reason bench.py excludes
@@ -28,46 +26,26 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-WARM_SF_DIR = os.environ.get("SPARK_GRAFT_WARM_SF_DIR",
-                             "/root/testdata/sf0.001")
-
 
 def main() -> int:
     from mapreducewordcounting_spark import registry
-    from mapreducewordcounting_spark.checkpoints import release_all_pinned
     from mapreducewordcounting_spark.session import get_spark
+    from tools.measure import SF_DIR, measure, warm_session
 
     spark = get_spark(app_name="mrwc-bench-full")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
-
-    def mat(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    # one-time JVM + Python-worker warmup (bench.py protocol)
-    mat(qs["wordcount_canonical"](spark, SF_DIR))
-    import pandas as _pd  # noqa: F401
-
-    def _warm(it):
-        for pdf in it:
-            yield pdf
-
-    mat(spark.range(32, numPartitions=32).mapInPandas(_warm, "id long"))
+    warm_session(spark)
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     t_all = time.time()
     for name in qs:
         try:
-            mat(qs[name](spark, WARM_SF_DIR))       # untimed warmup
-            release_all_pinned(spark)
-            t0 = time.perf_counter()
-            mat(qs[name](spark, SF_DIR))
-            timings[name] = round(time.perf_counter() - t0, 3)
+            timings[name] = measure(spark, qs[name], SF_DIR, runs=1,
+                                    tag=f"bench_full {name}")[0]
         except Exception as exc:  # record, keep sweeping
             errors[name] = str(exc)[:300]
-        release_all_pinned(spark)
         print(f"{name}: {timings.get(name, 'ERROR')}", file=sys.stderr,
               flush=True)
 

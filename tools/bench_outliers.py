@@ -62,6 +62,7 @@ ABS_FLOOR_SEC = 1.5
 
 #: name -> reason this >2x-of-peers row is accepted (reviewed, not
 #: ignored). Keep this list SHORT — every entry is a standing debt.
+#: A reason that defers to host drift starts with HOST_DRIFT.
 ACKNOWLEDGED: dict[str, str] = {
     # EMPTY from round 9 through round 12: tools/bench_pins.json took
     # over steady-state silencing (a reviewed row only re-flags when
@@ -89,6 +90,9 @@ ACKNOWLEDGED: dict[str, str] = {
 
 
 PIN_SLACK = 1.3
+#: reason prefix that marks an ACKNOWLEDGED entry as a host-drift
+#: deferral (see ack_disposition); every other reason is structural
+HOST_DRIFT = "HOST-DRIFT:"
 
 
 def ack_disposition(ack: str | None, host_contended: bool | None) -> str:
@@ -101,12 +105,16 @@ def ack_disposition(ack: str | None, host_contended: bool | None) -> str:
     host-drift ack is therefore the real regression it deferred:
     report it EXPIRED and fail ``--check``. On a contended (True) or
     unadjudicated (None) sweep the ack keeps silencing, because the
-    drift it cites is still plausible."""
+    drift it cites is still plausible. A host-drift ack is one whose
+    reason starts with the ``HOST-DRIFT:`` prefix; any other reason is
+    structural, whatever its prose says."""
     if ack is None:
         return "none"
-    if "host-drift" in ack and host_contended is False:
+    if ack.startswith(HOST_DRIFT) and host_contended is False:
         return "expired"
     return "acknowledged"
+
+
 PINS_PATH = os.path.join(REPO, "tools", "bench_pins.json")
 #: --accept-pins drift band: a pin may move this factor from its
 #: predecessor only with median-of-3 provenance (see the r12 lesson
@@ -121,7 +129,7 @@ def accept_pins(times: dict[str, float], pins: dict[str, float],
     ACCEPT_DRIFT from its existing pin is accepted only when the
     sweep's median-of-3 provenance map (``repinned``) backs it;
     otherwise the old pin is held and the name returned for
-    tools/bench_repin.py. New rows (no pin) are always accepted.
+    ``tools/measure.py repin``. New rows (no pin) are always accepted.
 
     A non-positive sweep time (ADVICE r12: a row rounded to 0.0)
     can never replace an existing pin — not even with median-of-3
@@ -176,7 +184,7 @@ def main() -> int:
         # moves more than ACCEPT_DRIFT from its predecessor if the
         # row is backed by a recorded median-of-3 (the sweep's
         # "repinned" provenance map); otherwise the old pin is HELD
-        # and the row is listed for tools/bench_repin.py.
+        # and the row is listed for `tools/measure.py repin`.
         accepted, held = accept_pins(
             times, pins, set(bench.get("repinned", {})))
         with open(PINS_PATH, "w") as f:
@@ -187,7 +195,7 @@ def main() -> int:
             print(f"HELD {len(held)} single-sample rows that moved "
                   f"> {ACCEPT_DRIFT}x from their pins without "
                   f"median-of-3 provenance — re-pin them: "
-                  f"python tools/bench_repin.py " + " ".join(sorted(held)))
+                  "python tools/measure.py repin " + " ".join(sorted(held)))
         return 0
 
     from mapreducewordcounting_spark import registry
@@ -245,7 +253,7 @@ def main() -> int:
     # >= 2 (VERDICT r8 item 8).
     state_path = os.path.join(REPO, "tools", "ack_stale_state.json")
     # Sweep identity = the full sweep's own wall clock + size, which
-    # bench_full.py sets once per regeneration and bench_repin.py
+    # bench_full.py sets once per regeneration and a repin
     # preserves — so a within-round repin does NOT count as a second
     # sweep, but each round's fresh sweep does.
     digest = hashlib.sha256(

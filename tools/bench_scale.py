@@ -1,8 +1,7 @@
 """Derived-scale scaling bench (VERDICT r12 item 5): time named
 queries at sf0.1 and the DERIVED sf1/sf10 under scale_scratch/, with
-bench.py's exact protocol (untimed sf0.001 warmup per query, noop-sink
-materialization, median of 3), and print one JSON line per dir plus a
-final ratios line.
+bench.py's protocol (tools/measure.py: median of 3), and print one
+JSON line per dir plus a final ratios line.
 
     python tools/make_sf1.py && python tools/make_sf10.py
     python tools/bench_scale.py [query ...]       # default: the six
@@ -17,19 +16,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from mapreducewordcounting_spark import registry  # noqa: E402
-from mapreducewordcounting_spark.checkpoints import (  # noqa: E402
-    release_all_pinned,
-)
 from mapreducewordcounting_spark.session import get_spark  # noqa: E402
-
-WARM_SF_DIR = os.environ.get("SPARK_GRAFT_WARM_SF_DIR",
-                             "/root/testdata/sf0.001")
+from tools.measure import SF_DIR, measure, warm_session  # noqa: E402
 
 #: the scale-critical six (VERDICT r12 item 5)
 DEFAULT = [
@@ -46,14 +39,27 @@ DEFAULT = [
 #: replica-clique derived corpus) be swept at the tiers it completes
 _TIERS = os.environ.get("SPARK_GRAFT_SCALE_DIRS", "sf0.1,sf1,sf10")
 DIRS = [d for d in [
-    os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+    SF_DIR,
     os.path.join(REPO, "scale_scratch", "sf1"),
     os.path.join(REPO, "scale_scratch", "sf10"),
 ] if os.path.basename(d) in _TIERS.split(",")]
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def decade_ratios(names: list[str],
+                  results: dict[str, dict[str, float]]) -> dict[str, dict]:
+    """Per query: its seconds at each measured tier (keyed by dir
+    basename) plus each decade ratio whose two adjacent tiers were
+    both measured — a run without sf0.1 still reports sf10/sf1."""
+    keyed = {os.path.basename(k): v for k, v in results.items()}
+    ratios = {}
+    for name in names:
+        row = {sf: t.get(name) for sf, t in keyed.items()}
+        if row.get("sf0.1") and row.get("sf1"):
+            row["ratio_sf1"] = round(row["sf1"] / row["sf0.1"], 2)
+        if row.get("sf1") and row.get("sf10"):
+            row["ratio_sf10_vs_sf1"] = round(row["sf10"] / row["sf1"], 2)
+        ratios[name] = row
+    return ratios
 
 
 def main() -> int:
@@ -67,9 +73,7 @@ def main() -> int:
     spark = get_spark(app_name="mrwc-bench-scale")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
-    # ADVICE r13: warm against WARM_SF_DIR (always present, matches
-    # the protocol) — DIRS[0] may be an absent scale_scratch tier.
-    materialize(qs["wordcount_canonical"](spark, WARM_SF_DIR))
+    warm_session(spark)
 
     results: dict[str, dict[str, float]] = {}
     for sf_dir in DIRS:
@@ -78,36 +82,14 @@ def main() -> int:
             continue
         timings: dict[str, float] = {}
         for name in names:
-            spark.sparkContext.setJobDescription(
-                f"bench_scale warmup {name}")
-            materialize(qs[name](spark, WARM_SF_DIR))
-            samples = []
-            for i in range(3):
-                spark.sparkContext.setJobDescription(
-                    f"bench_scale {name} @ {os.path.basename(sf_dir)} "
-                    f"run {i}")
-                t0 = time.perf_counter()
-                materialize(qs[name](spark, sf_dir))
-                samples.append(time.perf_counter() - t0)
-            timings[name] = round(sorted(samples)[1], 3)
+            timings[name] = measure(spark, qs[name], sf_dir,
+                                    tag=f"bench_scale {name}")[0]
             print(f"{os.path.basename(sf_dir)} {name}: {timings[name]}s",
                   file=sys.stderr, flush=True)
-            release_all_pinned(spark)
         results[sf_dir] = timings
         print(json.dumps({"sf_dir": sf_dir, "queries": timings}))
 
-    keyed = {os.path.basename(k): v for k, v in results.items()}
-    ratios = {}
-    for name in names:
-        row = {sf: t.get(name) for sf, t in keyed.items()}
-        # ADVICE r13: each ratio depends only on its own two adjacent
-        # tiers — a run without sf0.1 still reports sf10/sf1.
-        if row.get("sf0.1") and row.get("sf1"):
-            row["ratio_sf1"] = round(row["sf1"] / row["sf0.1"], 2)
-        if row.get("sf1") and row.get("sf10"):
-            row["ratio_sf10_vs_sf1"] = round(row["sf10"] / row["sf1"], 2)
-        ratios[name] = row
-    print(json.dumps({"scaling": ratios}))
+    print(json.dumps({"scaling": decade_ratios(names, results)}))
     spark.stop()
     return 0
 

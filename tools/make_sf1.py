@@ -43,7 +43,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from tools.measure import SF_DIR as SRC  # noqa: E402
+
 OUT = os.path.join(REPO, "scale_scratch", "sf1")
 REPLICAS = 10
 

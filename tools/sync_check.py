@@ -22,6 +22,9 @@ Checks (all against the live registry import):
      session.py reads from an env var quotes that env var and its
      shipped default (the broadcast-threshold and split-size rows
      must be there)
+  8. every ``tools/<name>.py`` path quoted in README.md, SCALING.md,
+     bench.py, tools/*.py or the package sources exists, so a deleted
+     tool leaves no stale instructions behind
 
 `python tools/sync_check.py` exits non-zero on the first disagreement;
 `make sync-check` is an alias and `tools/check.py` runs it as its
@@ -31,6 +34,7 @@ final stage (after the regenerating stages, so it sees fresh files).
 from __future__ import annotations
 
 import ast
+import glob
 import json
 import os
 import re
@@ -84,6 +88,33 @@ def scaling_problems(scaling: str, session_source: str) -> list[str]:
             problems.append(
                 f"SCALING.md session defaults: {conf} reads {cell.strip()!r}"
                 f", session.py ships {default} (`{env}`)")
+    return problems
+
+
+#: files whose quoted ``tools/<name>.py`` paths must exist (check 8)
+TOOL_REF_GLOBS = ("README.md", "SCALING.md", "bench.py", "tools/*.py",
+                  "mapreducewordcounting_spark/**/*.py")
+
+
+def tool_ref_sources(repo: str) -> dict[str, str]:
+    """Repo-relative path -> text of every TOOL_REF_GLOBS file."""
+    out = {}
+    for pattern in TOOL_REF_GLOBS:
+        for path in sorted(glob.glob(os.path.join(repo, pattern),
+                                     recursive=True)):
+            with open(path) as f:
+                out[os.path.relpath(path, repo)] = f.read()
+    return out
+
+
+def dangling_tool_refs(sources: dict[str, str], repo: str) -> list[str]:
+    """One problem per quoted ``tools/<name>.py`` with no such file."""
+    problems = []
+    for path, text in sources.items():
+        for name in sorted(set(re.findall(r"(?<![\w/.])tools/(\w+)\.py",
+                                          text))):
+            if not os.path.isfile(os.path.join(repo, "tools", f"{name}.py")):
+                problems.append(f"{path}: quotes missing tools/{name}.py")
     return problems
 
 
@@ -173,6 +204,9 @@ def main() -> int:
     problems += scaling_problems(
         read("SCALING.md"),
         read(os.path.join("mapreducewordcounting_spark", "session.py")))
+
+    # 8. quoted tool paths exist
+    problems += dangling_tool_refs(tool_ref_sources(REPO), REPO)
 
     for p in problems:
         print(f"SYNC FAIL: {p}")
