@@ -80,11 +80,14 @@ def word_count_rdd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents").select("text")
     strip = re.compile(r"[^a-z']")
+    # Java's \s, as in tokenize_canonical's split: str.split() would
+    # also split on NBSP, U+2003, U+0085 and \x1c-\x1f.
+    space = re.compile(r"[ \t\n\x0b\f\r]+")
 
     def tokens(row):
         if row.text is None:  # NULL text: match split(NULL) semantics
             return
-        for tok in row.text.lower().split():
+        for tok in space.split(row.text.lower()):
             w = strip.sub("", tok)
             if w:
                 yield w

@@ -10,6 +10,8 @@ ship on a 1000-executor cluster:
   reference's level-2 hash provably skews ~69% of uniform keys onto one
   reducer, SURVEY.md §4.2; AQE is the systematic fix).
 - Arrow enabled for any pandas-UDF path.
+- zstd for every shuffle, spill and broadcast block: the exchange
+  bytes are the cost that carries over to a cluster (SCALING.md).
 - shuffle.partitions sized to cores locally; on a real cluster this is
   overridden (or left to AQE's coalescing with a high initial value).
 """
@@ -53,6 +55,10 @@ def get_spark(app_name: str = "mapreducewordcounting-spark",
         .config("spark.sql.autoBroadcastJoinThreshold",
                 os.environ.get("SPARK_GRAFT_AUTOBROADCAST", "16m"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Also the Python RDD shuffle's codec. Spark's default level 1
+        # ships ~45% fewer word-count exchange bytes than lz4 for ~3%
+        # more executor CPU; level 3 bought nothing more (BASELINE.md).
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.sql.shuffle.partitions", cpus)
         # Scan split sizing (guide §6, VERDICT r13 item 6):
         # parameterized, never hardcoded — local default stays Spark's

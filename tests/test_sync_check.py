@@ -1,7 +1,7 @@
 """tools/sync_check.py's doc checks: the SCALING.md "Session defaults"
-table must quote the env var and shipped default of every knob that
-session.py reads from the environment (check 7), and every quoted
-``tools/<name>.py`` path must exist (check 8)."""
+table must quote the shipped value of every conf session.py sets, and
+the env var of every knob it reads from the environment (check 7), and
+every quoted ``tools/<name>.py`` path must exist (check 8)."""
 
 from __future__ import annotations
 
@@ -41,6 +41,25 @@ def test_stale_or_missing_scaling_row_is_flagged():
     assert scaling_problems(missing, session) == [
         "SCALING.md session defaults: "
         "no spark.sql.files.maxPartitionBytes row"]
+
+
+def test_literal_conf_rows_are_checked():
+    session = _read("mapreducewordcounting_spark", "session.py")
+    scaling = _read("SCALING.md")
+    (codec,) = [line for line in scaling.splitlines()
+                if line.startswith("| `spark.io.compression.codec` | zstd ")]
+    lz4 = scaling.replace(
+        codec, "| `spark.io.compression.codec` | lz4 | Spark's default |")
+    assert scaling_problems(lz4, session) == [
+        "SCALING.md session defaults: spark.io.compression.codec reads "
+        "'lz4', session.py ships zstd"]
+    # a combined row is read as its first conf's row; "true" reads "on"
+    aqe = "| `spark.sql.adaptive.enabled` + coalescePartitions + skewJoin | on |"
+    assert aqe in scaling
+    (problem,) = scaling_problems(
+        scaling.replace(aqe, aqe.replace("| on |", "| off |")), session)
+    assert problem == ("SCALING.md session defaults: spark.sql.adaptive."
+                       "enabled reads 'off', session.py ships on")
 
 
 def test_committed_tool_paths_exist():

@@ -21,6 +21,10 @@ from mapreducewordcounting_spark.functions.text import (
     tokenize_canonical,
     tokenize_fidelity,
 )
+from mapreducewordcounting_spark.operators.wordcount import (
+    word_count,
+    word_count_rdd,
+)
 
 GOLDEN = [
     # (input token, canonical, fidelity)  — FIXTURES.md golden table
@@ -48,6 +52,23 @@ def test_golden_sentence(spark):
     text = " ".join(t for t, _, _ in GOLDEN)
     assert _run(spark, text, tokenize_canonical) == [c for _, c, _ in GOLDEN]
     assert _run(spark, text, tokenize_fidelity) == [f for _, _, f in GOLDEN]
+
+
+def test_rdd_splits_on_java_whitespace_only(spark, tmp_path):
+    """wordcount_rdd splits where Spark's ``\\s`` does, not where
+    Python's ``str.split()`` does: NBSP, U+2003, U+0085 and
+    \\x1c-\\x1f join their neighbours; \\t and \\x0b split."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    text = "Foo\u00a0bar baz\u2003qux a\x85b c\x1cd e\tf g\x0bh"
+    pq.write_table(pa.table({"text": [text, None]}),
+                   str(tmp_path / "documents.parquet"))
+    want = {("foobar", 1), ("bazqux", 1), ("ab", 1), ("cd", 1),
+            ("e", 1), ("f", 1), ("g", 1), ("h", 1)}
+    for query in (word_count, word_count_rdd):
+        got = {tuple(r) for r in query(spark, str(tmp_path)).collect()}
+        assert got == want, query.__name__
 
 
 # --- property-based invariants (hypothesis) ------------------------------

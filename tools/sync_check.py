@@ -19,9 +19,10 @@ Checks (all against the live registry import):
   6. PLANS_audit.json: n_queries == total, every registry query has a
      per-plan entry, and every violation list is empty
   7. SCALING.md "Session defaults": every row for a conf that
-     session.py reads from an env var quotes that env var and its
-     shipped default (the broadcast-threshold and split-size rows
-     must be there)
+     session.py sets opens with its shipped value ("true" reads
+     "on") and, for a conf read from an env var, quotes that env var
+     (the broadcast-threshold, split-size and codec rows must be
+     there)
   8. every ``tools/<name>.py`` path quoted in README.md, SCALING.md,
      bench.py, tools/*.py or the package sources exists, so a deleted
      tool leaves no stale instructions behind
@@ -45,11 +46,16 @@ sys.path.insert(0, REPO)
 
 #: SCALING.md session-table rows that must exist.
 SCALING_REQUIRED = ("spark.sql.autoBroadcastJoinThreshold",
-                    "spark.sql.files.maxPartitionBytes")
+                    "spark.sql.files.maxPartitionBytes",
+                    "spark.io.compression.codec")
+
+#: how SCALING.md writes a boolean conf value
+_BOOL_CELL = {"true": "on", "false": "off"}
 
 
-def session_env_defaults(source: str) -> dict[str, tuple[str, str]]:
-    """conf -> (env var, shipped default) for every
+def session_defaults(source: str) -> dict[str, tuple[str | None, str]]:
+    """conf -> (env var or None, shipped default) for every
+    ``.config(conf, "value")`` and
     ``.config(conf, os.environ.get(env, default))`` in session.py."""
     out = {}
     for node in ast.walk(ast.parse(source)):
@@ -58,7 +64,11 @@ def session_env_defaults(source: str) -> dict[str, tuple[str, str]]:
                 and node.func.attr == "config" and len(node.args) == 2):
             continue
         key, val = node.args
-        if (isinstance(key, ast.Constant) and isinstance(val, ast.Call)
+        if not isinstance(key, ast.Constant):
+            continue
+        if isinstance(val, ast.Constant):
+            out[key.value] = (None, val.value)
+        elif (isinstance(val, ast.Call)
                 and ast.unparse(val.func) == "os.environ.get"
                 and all(isinstance(a, ast.Constant) for a in val.args)
                 and len(val.args) == 2):
@@ -67,16 +77,18 @@ def session_env_defaults(source: str) -> dict[str, tuple[str, str]]:
 
 
 def scaling_session_rows(text: str) -> dict[str, str]:
-    """conf -> value cell of SCALING.md's "Session defaults" table."""
+    """conf -> value cell of SCALING.md's "Session defaults" table; a
+    combined row (``| `conf` + more + more |``) is read as its first
+    conf's row."""
     section = text.split("## Session defaults", 1)[-1].split("\n## ", 1)[0]
-    return dict(re.findall(r"^\| `(spark\.[\w.]+)` \| ([^|]*) \|",
+    return dict(re.findall(r"^\| `(spark\.[\w.]+)`[^|]* \| ([^|]*) \|",
                            section, flags=re.M))
 
 
 def scaling_problems(scaling: str, session_source: str) -> list[str]:
     """Disagreements between SCALING.md's session table and the
-    env-var defaults session.py ships."""
-    shipped = session_env_defaults(session_source)
+    literal and env-var defaults session.py ships."""
+    shipped = session_defaults(session_source)
     rows = scaling_session_rows(scaling)
     problems = [f"SCALING.md session defaults: no {conf} row"
                 for conf in SCALING_REQUIRED if conf not in rows]
@@ -84,10 +96,12 @@ def scaling_problems(scaling: str, session_source: str) -> list[str]:
         if conf not in shipped:
             continue
         env, default = shipped[conf]
-        if cell.split()[:1] != [default] or f"`{env}`" not in cell:
+        default = _BOOL_CELL.get(default, default)
+        if cell.split()[:1] != [default] or (env and f"`{env}`" not in cell):
+            via = f" (`{env}`)" if env else ""
             problems.append(
                 f"SCALING.md session defaults: {conf} reads {cell.strip()!r}"
-                f", session.py ships {default} (`{env}`)")
+                f", session.py ships {default}{via}")
     return problems
 
 
