@@ -5,44 +5,28 @@ item 5).
 executor storage until the RDD is unpersisted — and because a local
 checkpoint TRUNCATES lineage, those blocks are unrecoverable once
 dropped, so an operator must never unpersist a checkpoint its returned
-DataFrame still reads. That splits the repo's checkpoint sites into
-two classes:
+DataFrame still reads.
 
-* **loop-superseded** (pagerank's per-iteration ranks, dedup_clusters'
-  per-iteration labels): iteration k's checkpoint is consumed exactly
-  once — to materialize iteration k+1's checkpoint — and is garbage
-  the moment that successor exists. Without an explicit unpersist, a
-  10-iteration pagerank leaves 10 pinned rank snapshots per call in a
-  long-lived session (bench's 4x invocation, verify_full's registry-wide
-  sweep). :class:`CheckpointRotator` unpersists each superseded step
-  as soon as its successor is eagerly materialized, and
-  :meth:`CheckpointRotator.release` drops loop-scoped scratch (the
-  pagerank edge table, the clusters edge list) that the returned plan
-  no longer references.
-* **result-referenced** (the one-shot shingle/tf/weights tables in
-  dedup.py, text_analysis.py, drift.py, similarity.py): the RETURNED
-  DataFrame's plan is a scan of those blocks, so the operator cannot
-  release them. Their bound is one checkpoint per operator CALL,
-  freed by Spark's ContextCleaner when the DataFrame is GC'd — and
-  deterministically by :func:`release_all_pinned`, which the bench
-  and verify_full harnesses call between queries (safe there because
-  every query call builds its DataFrames fresh).
-
-Id-diffing note: created-RDD ids are discovered by diffing
-``getPersistentRDDs`` around the checkpoint call, which assumes no
-concurrent persist activity on the same SparkContext from another
-thread. All repo harnesses run queries sequentially; a concurrent
-caller would at worst see its checkpoint recomputed... which a LOCAL
-checkpoint cannot do — so keep rotators out of multi-threaded jobs.
+One rule: **an operator returns with nothing pinned that its result
+does not read.** :func:`release` frees what a DataFrame's plan reads,
+so a loop calls ``release(prev)`` once the next step's checkpoint
+exists, and a one-shot table is released once its successor is
+materialized. What the returned plan does read stays pinned until
+Spark's ContextCleaner frees it once the DataFrame is GC'd, or until
+:func:`release_all_pinned`, the harness sweep between queries, frees
+the rest (safe there because every query call builds its DataFrames
+fresh).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+_LOGICAL_RDD = "org.apache.spark.sql.execution.LogicalRDD"
 
-def _pinned(spark: SparkSession) -> dict[int, object]:
-    """Snapshot of currently persisted RDDs: {rdd_id: JavaRDD}.
+
+def pinned(spark: SparkSession) -> dict[int, object]:
+    """Currently persisted RDDs: {rdd_id: JavaRDD}.
     ``getPersistentRDDs`` returns an immutable copy, so iterating it
     while unpersisting is safe."""
     out: dict[int, object] = {}
@@ -58,69 +42,39 @@ def n_pinned(spark: SparkSession) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
-def release_all_pinned(spark: SparkSession) -> int:
-    """Unpersist EVERY pinned RDD (non-blocking) and return how many
-    were dropped. Harness-level sweep between queries — never call
-    while a DataFrame you still need reads a local checkpoint."""
-    rdds = _pinned(spark)
+def checkpoints_read(*dfs: DataFrame) -> dict[int, object]:
+    """The pinned local checkpoints the given DataFrames' logical plans
+    read: {rdd_id: RDD}. Each is a ``LogicalRDD`` leaf whose ``rdd()``
+    is the RDD ``localCheckpoint`` pinned (self-join aliases share it);
+    unpinned ``LogicalRDD`` leaves (``createDataFrame`` over driver
+    rows, a released checkpoint) are skipped."""
+    out: dict[int, object] = {}
+    for df in dfs:
+        it = df._jdf.logicalPlan().collectLeaves().iterator()
+        while it.hasNext():
+            leaf = it.next()
+            if leaf.getClass().getName() == _LOGICAL_RDD:
+                rdd = leaf.rdd()
+                if rdd.getStorageLevel().isValid():
+                    out[rdd.id()] = rdd
+    return out
+
+
+def release(*dfs: DataFrame) -> int:
+    """Unpersist (non-blocking) every local checkpoint the given
+    DataFrames read and return how many. Call it only once nothing
+    still needed reads them: a DataFrame that does becomes unreadable."""
+    rdds = checkpoints_read(*dfs)
     for rdd in rdds.values():
         rdd.unpersist(False)
     return len(rdds)
 
 
-def pinned_ids(spark: SparkSession) -> set[int]:
-    """Ids of currently pinned RDDs (for scoped release)."""
-    return set(_pinned(spark))
-
-
-def release_created_since(spark: SparkSession, before: set[int],
-                          keep: frozenset[int] | set[int] = frozenset(),
-                          ) -> int:
-    """Unpersist every RDD pinned AFTER the ``before`` snapshot except
-    those in ``keep``. Lets a composite operator free checkpoints a
-    sub-operator created for its own plan once a downstream
-    materialization (e.g. an edge-list checkpoint) has made them
-    unreachable."""
-    n = 0
-    for rid, rdd in _pinned(spark).items():
-        if rid not in before and rid not in keep:
-            rdd.unpersist(False)
-            n += 1
-    return n
-
-
-class CheckpointRotator:
-    """Per-loop manager: ``rotate(df)`` eagerly checkpoints ``df`` and
-    unpersists the checkpoint created by the PREVIOUS ``rotate`` call
-    (now superseded — the new blocks are already materialized from
-    it). ``release()`` drops whatever the rotator still pins; call it
-    only when the returned plan does not read those blocks."""
-
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-        self._live: dict[int, object] = {}
-
-    @property
-    def live_ids(self) -> set[int]:
-        return set(self._live)
-
-    def rotate(self, df: DataFrame) -> DataFrame:
-        before = set(_pinned(self._spark))
-        out = df.localCheckpoint(eager=True)
-        created = {i: r for i, r in _pinned(self._spark).items()
-                   if i not in before}
-        for rdd in self._live.values():
-            rdd.unpersist(False)
-        self._live = created
-        return out
-
-    def keep(self) -> None:
-        """Detach from the current checkpoint WITHOUT unpersisting it
-        (the returned plan reads it; ContextCleaner / the harness
-        sweep frees it after the caller lets go)."""
-        self._live = {}
-
-    def release(self) -> None:
-        for rdd in self._live.values():
-            rdd.unpersist(False)
-        self._live = {}
+def release_all_pinned(spark: SparkSession) -> int:
+    """Unpersist EVERY pinned RDD (non-blocking) and return how many
+    were dropped. Harness-level sweep between queries — never call
+    while a DataFrame you still need reads a local checkpoint."""
+    rdds = pinned(spark)
+    for rdd in rdds.values():
+        rdd.unpersist(False)
+    return len(rdds)

@@ -27,11 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreducewordcounting_spark.catalog import load_table
-from mapreducewordcounting_spark.checkpoints import (
-    CheckpointRotator,
-    pinned_ids,
-    release_created_since,
-)
+from mapreducewordcounting_spark.checkpoints import release
 from mapreducewordcounting_spark.functions.text import tokenize_canonical
 from mapreducewordcounting_spark.registry import register
 
@@ -39,7 +35,7 @@ from mapreducewordcounting_spark.registry import register
 _SQL_TOKS = """
     SELECT doc_id,
            list_filter(
-               list_transform(regexp_split_to_array(lower(text), '\\s+'),
+               list_transform(regexp_split_to_array(lower(text), '[\\s\\v]+'),
                               t -> regexp_replace(t, '[^a-z'']', '', 'g')),
                w -> length(w) > 0) AS toks
     FROM documents
@@ -584,7 +580,7 @@ _SQL_JACCARD_SHARDED_CTES = f"""
             SELECT doc_id, source, doc_id // {DEDUP_SHARD_SPAN} AS shard,
                    list_filter(
                        list_transform(
-                           regexp_split_to_array(lower(text), '\\s+'),
+                           regexp_split_to_array(lower(text), '[\\s\\v]+'),
                            t -> regexp_replace(t, '[^a-z'']', '', 'g')),
                        w -> length(w) > 0) AS toks
             FROM documents
@@ -760,19 +756,17 @@ def pair_graph_labels(spark: SparkSession, make_pairs) -> DataFrame:
     lineage-cut before iterating — without this, every iteration's
     labels plan re-embeds the whole pair DAG and the loop goes
     exponential (measured 24.7 s → ~5 s at sf0.1 on the jaccard
-    graph). Every checkpoint the pair sub-plan pins is freed as soon
+    graph). Every checkpoint the pair sub-plan reads is freed as soon
     as the edge list is materialized, and the edge list itself is
     dropped before return — only the final label snapshot (which the
     returned plan scans) stays pinned."""
-    before_ids = pinned_ids(spark)
     pairs = make_pairs().select("id_a", "id_b")
     edges = pairs.unionByName(
         pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")))
-    scratch = CheckpointRotator(spark)
-    edges = scratch.rotate(edges)
-    release_created_since(spark, before_ids, keep=scratch.live_ids)
-    labels = component_labels(edges)
-    scratch.release()  # edge list: not read by the returned plan
+    cut = edges.localCheckpoint(eager=True)
+    release(edges)
+    labels = component_labels(cut)
+    release(cut)
     return labels
 
 
@@ -780,9 +774,9 @@ def component_labels(edges: DataFrame) -> DataFrame:
     """Connected-component labels ``(node, label)`` — label = component
     minimum id — by iterative min-label propagation over a SYMMETRIC
     ``(id_a, id_b)`` edge list (callers union both directions and
-    should lineage-cut the edge list first; this function only rotates
-    its own per-iteration snapshots and leaves the FINAL one pinned for
-    the returned plan — harness sweeps free it later).
+    should lineage-cut the edge list first; this function releases
+    each superseded per-iteration snapshot and leaves the FINAL one
+    pinned for the returned plan — harness sweeps free it later).
 
     Iterates to convergence (bounded at 20): components merge along
     minimum labels, and a fixed small iteration count would silently
@@ -791,12 +785,12 @@ def component_labels(edges: DataFrame) -> DataFrame:
     convergence check is a filter over the already-materialized step
     output, not another join against the previous labels (which cost
     one extra shuffle per iteration)."""
-    steps = CheckpointRotator(edges.sparkSession)
     # start: every node labels itself
-    labels = steps.rotate(
+    labels = (
         edges.select(F.col("id_a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
+        .localCheckpoint(eager=True)
     )
     for _ in range(20):
         neighbor_min = (
@@ -804,7 +798,7 @@ def component_labels(edges: DataFrame) -> DataFrame:
             .groupBy(F.col("id_a").alias("node"))
             .agg(F.min("label").alias("nbr_label"))
         )
-        stepped = steps.rotate(
+        stepped = (
             labels.join(neighbor_min, "node", "left")
             .select(
                 "node",
@@ -812,7 +806,9 @@ def component_labels(edges: DataFrame) -> DataFrame:
                 F.least(F.col("label"),
                         F.coalesce("nbr_label", "label")).alias("label"),
             )
+            .localCheckpoint(eager=True)
         )
+        release(labels)  # superseded by the step just materialized
         changed = stepped.filter(F.col("label") != F.col("old_label")).count()
         labels = stepped.select("node", "label")
         if changed == 0:
@@ -825,8 +821,7 @@ def component_labels(edges: DataFrame) -> DataFrame:
         raise RuntimeError(
             "component_labels did not converge in 20 sweeps; "
             f"{changed} labels still changing")
-    steps.keep()  # final label snapshot: read by the returned plan
-    return labels
+    return labels  # the final snapshot stays pinned: the result reads it
 
 
 def minhash_band_rows(docs: DataFrame, extra_cols: tuple = ()) -> DataFrame:
@@ -1448,9 +1443,7 @@ def dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch re-runs the batch scan + probe (plan showed the subtree
     # duplicated). Hash-grain rows are 32-byte keys + counters —
     # exactly the scale of state a real gate materializes per tick.
-    scratch = CheckpointRotator(spark)
-    probed = scratch.rotate(probed)
-    scratch.keep()  # final plan reads both branches of it
+    probed = probed.localCheckpoint(eager=True)
     suspects = (
         probed.filter(F.col("n_hit") == _IBLOOM_K)
         .join(corpus.withColumn("in_corpus", F.lit(True)), "h", "left")
@@ -1561,6 +1554,7 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   lambda x, y: F.least(x, y)))
     sig = sh_tbl.select("doc_id", "sh", "n_sh", sig_arr.alias("sig")) \
         .localCheckpoint(eager=True)
+    release(sh_tbl)  # the result reads only ``sig``
     h = [F.element_at("sig", i + 1) for i in range(8)]
     band_arr = F.array(*[
         F.struct(F.lit(b).alias("band"),
@@ -1878,6 +1872,7 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = (nb.join(cb, ["band", "bkey"])
             .select("new_id", "corpus_id").distinct()
             .localCheckpoint(eager=True))
+    release(bands)  # the result reads only ``cand`` and ``sh_cand``
     # candidates-only shingle reduction: the tiny id list broadcasts
     # as a semi-join filter, so the corpus-wide tokenize→shingle scan
     # emits only candidate docs' sets before the Jaccard join

@@ -33,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from mapreducewordcounting_spark.catalog import load_table
+from mapreducewordcounting_spark.checkpoints import release
 from mapreducewordcounting_spark.functions.text import tokenize_canonical
 from mapreducewordcounting_spark.operators.wordcount import _ORACLE_WORDCOUNT
 from mapreducewordcounting_spark.registry import register
@@ -502,6 +503,7 @@ def sink_tombstone_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
             cleaned = cleaned.localCheckpoint(eager=True)
             cleaned.write.mode("overwrite").partitionBy("bucket") \
                 .parquet(store)
+            release(cleaned)  # the result re-reads the store instead
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 

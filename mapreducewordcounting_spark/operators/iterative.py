@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreducewordcounting_spark.catalog import load_table
-from mapreducewordcounting_spark.checkpoints import CheckpointRotator
+from mapreducewordcounting_spark.checkpoints import release
 from mapreducewordcounting_spark.registry import register
 
 K_DEFAULT = 10
@@ -112,16 +112,14 @@ def pagerank(edges: DataFrame, nodes: DataFrame,
     n = nodes.count()
     if n == 0:  # zero-node graph: empty ranks, stable schema
         return nodes.select("node", F.lit(0.0).alias("rank"))
-    spark = edges.sparkSession
-    scratch = CheckpointRotator(spark)   # loop-scoped: the edge table
-    steps = CheckpointRotator(spark)     # per-iteration rank snapshots
     out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    e_norm = scratch.rotate(  # reused every iteration: cut lineage once
+    e_norm = (  # reused every iteration: cut lineage once
         edges.join(out_w, "src")
-        .select("src", "dst", (F.col("weight") / F.col("out_w")).alias("p")))
+        .select("src", "dst", (F.col("weight") / F.col("out_w")).alias("p"))
+        .localCheckpoint(eager=True))
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
     has_out = out_w.select(F.col("src").alias("node"))
-    for _ in range(iters):
+    for i in range(iters):
         # ADVICE r5: the across-row sums (dangling mass, per-node
         # inflow) are the ONLY order-sensitive float steps in the
         # loop, and the final round(rank, 9) was therefore only
@@ -144,11 +142,12 @@ def pagerank(edges: DataFrame, nodes: DataFrame,
                    .agg(F.sum((F.col("p") * F.col("rank"))
                               .cast("decimal(38,15)"))
                         .cast("double").alias("inflow")))
-        # rotate: checkpoint the new ranks (bounding lineage growth),
-        # then unpersist the superseded previous iteration's snapshot
+        # checkpoint the new ranks (bounding lineage growth), then
+        # release the superseded previous iteration's snapshot
         # (VERDICT r5 item 5 — 10 iterations used to leave 10 pinned
-        # rank RDDs per call in a long-lived session)
-        ranks = steps.rotate(
+        # rank RDDs per call in a long-lived session); the seed reads
+        # the caller's ``nodes``, so it is never released
+        step = (
             nodes.select("node")
             .join(contrib, "node", "left_outer")
             .crossJoin(F.broadcast(dm))
@@ -157,9 +156,12 @@ def pagerank(edges: DataFrame, nodes: DataFrame,
                      + F.lit(damping) * F.col("dm") / F.lit(float(n))
                      + F.lit(damping)
                      * F.coalesce(F.col("inflow"), F.lit(0.0)))
-                    .alias("rank")))
-    scratch.release()  # the returned plan reads only the final snapshot
-    steps.keep()       # ...which must stay pinned for the caller
+                    .alias("rank"))
+            .localCheckpoint(eager=True))
+        if i:
+            release(ranks)
+        ranks = step
+    release(e_norm)  # the returned plan reads only the final snapshot
     return ranks
 
 
@@ -396,8 +398,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark side: |frontier ∪ dist| is re-minimized per hop — each
     iteration is one dimension-sized join + groupBy(min), checkpointed
-    via the rotator so lineage stays flat and superseded snapshots
-    unpersist. The oracle is an independent formulation: a recursive
+    so lineage stays flat, with each superseded snapshot released. The oracle is an independent formulation: a recursive
     CTE under DuckDB's set-semantics UNION (which bounds the walk
     enumeration at |nodes|×|hops| states where UNION ALL would
     enumerate exponentially many walks), then ``min(hops)`` outside.
@@ -430,22 +431,21 @@ def bfs_min_hops(edges: DataFrame, sources: DataFrame,
     arbitrary random graphs against a plain-Python queue BFS, since
     the production oracle shares the edge-threshold input
     construction with the query."""
-    spark = edges.sparkSession
-    scratch = CheckpointRotator(spark)   # edge list: reused every hop
-    steps = CheckpointRotator(spark)     # per-hop distance snapshots
-    e = scratch.rotate(edges.select("src", "dst"))
+    e = edges.select("src", "dst").localCheckpoint(eager=True)  # read every hop
     dist = sources.select(
         F.col("node").cast("bigint").alias("node"),
         F.lit(0).cast("bigint").alias("hops"))
-    for _ in range(max_hops):
+    for i in range(max_hops):
         step = (dist.join(e, dist["node"] == e["src"])
                 .select(e["dst"].cast("bigint").alias("node"),
                         (dist["hops"] + 1).alias("hops")))
-        dist = steps.rotate(
-            dist.unionByName(step)
-            .groupBy("node").agg(F.min("hops").alias("hops")))
-    scratch.release()  # returned plan reads only the final snapshot
-    steps.keep()       # ...which must stay pinned for the caller
+        nxt = (dist.unionByName(step)
+               .groupBy("node").agg(F.min("hops").alias("hops"))
+               .localCheckpoint(eager=True))
+        if i:  # the seed reads the caller's ``sources``
+            release(dist)
+        dist = nxt
+    release(e)  # the returned plan reads only the final snapshot
     return dist
 
 
@@ -518,9 +518,7 @@ def sql_recursive_cte_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so an un-cut lineage would re-run the fact-scale star join once
     # per hop (measured 6.9 s -> ~1 s at sf0.1). Kept pinned — the
     # returned plan reads it in every loop step.
-    steps = CheckpointRotator(spark)
-    e = steps.rotate(e)
-    steps.keep()
+    e = e.localCheckpoint(eager=True)
     e.createOrReplaceTempView("rcte_bfs_edges")
     return spark.sql(f"""
         WITH RECURSIVE r(node, hops, path) AS (
@@ -785,10 +783,9 @@ def graph_wcc_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.col("dst").cast("bigint").alias("id_b")))
     sym = d.unionByName(d.select(F.col("id_b").alias("id_a"),
                                  F.col("id_a").alias("id_b")))
-    scratch = CheckpointRotator(spark)
-    sym = scratch.rotate(sym)  # lineage-cut: the loop re-reads it
+    sym = sym.localCheckpoint(eager=True)  # lineage-cut: the loop re-reads it
     labels = component_labels(sym)  # (node, label)
-    scratch.release()
+    release(sym)
     nations = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("node"))
     full = (nations.join(labels, "node", "left")
@@ -1022,6 +1019,32 @@ def graph_degree_assortativity(spark: SparkSession,
 LPA_ITERS = 5
 
 
+def lpa_labels(adj: DataFrame) -> DataFrame:
+    """``(node, label)`` after LPA_ITERS synchronous label-propagation
+    sweeps over the SYMMETRIC ``(u, v)`` adjacency ``adj``: every node
+    starts as its own label and adopts the most frequent neighbor
+    label, ties to the smallest. Each sweep's labels are checkpointed
+    and the superseded sweep released; the seed reads ``adj``, which
+    every sweep re-reads, so it is never released. Only the final
+    snapshot stays pinned."""
+    labels = adj.select("u").distinct().select(
+        F.col("u").alias("node"), F.col("u").alias("label"))
+    for i in range(LPA_ITERS):
+        counted = (adj.join(labels, adj.v == labels.node)
+                   .groupBy(F.col("u").alias("n2"), "label")
+                   .agg(F.count("*").alias("n")))
+        step = (counted.groupBy(F.col("n2").alias("node"))
+                .agg(F.max(F.struct(F.col("n"),
+                                    (-F.col("label")).alias("neg")))
+                     .alias("m"))
+                .select("node", (-F.col("m.neg")).alias("label"))
+                .localCheckpoint(eager=True))
+        if i:
+            release(labels)
+        labels = step
+    return labels
+
+
 def _lpa_oracle_sql(iters: int = LPA_ITERS) -> str:
     """Generate the DuckDB twin: the same undirected trade graph and
     ``iters`` chained mode-of-neighbor-labels CTEs (max count, min
@@ -1097,20 +1120,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = (und.union(und.select(F.col("v").alias("u"),
                                 F.col("u").alias("v")))
            .localCheckpoint())  # reused every sweep
-    labels = adj.select("u").distinct().select(
-        F.col("u").alias("node"), F.col("u").alias("label"))
-    rot = CheckpointRotator(spark)
-    for _ in range(LPA_ITERS):
-        counted = (adj.join(labels, adj.v == labels.node)
-                   .groupBy(F.col("u").alias("n2"), "label")
-                   .agg(F.count("*").alias("n")))
-        labels = rot.rotate(
-            counted.groupBy(F.col("n2").alias("node"))
-            .agg(F.max(F.struct(F.col("n"),
-                                (-F.col("label")).alias("neg")))
-                 .alias("m"))
-            .select("node", (-F.col("m.neg")).alias("label")))
-    rot.keep()
+    labels = lpa_labels(adj)
+    release(adj)  # the returned plan reads only the final snapshot
     return (labels.groupBy("label")
             .agg(F.count("*").alias("n_members"),
                  F.min("node").cast("bigint").alias("min_member"))
@@ -1183,20 +1194,7 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = (und.union(und.select(F.col("v").alias("u"),
                                 F.col("u").alias("v")))
            .localCheckpoint())
-    labels = adj.select("u").distinct().select(
-        F.col("u").alias("node"), F.col("u").alias("label"))
-    rot = CheckpointRotator(spark)
-    for _ in range(LPA_ITERS):
-        counted = (adj.join(labels, adj.v == labels.node)
-                   .groupBy(F.col("u").alias("n2"), "label")
-                   .agg(F.count("*").alias("n")))
-        labels = rot.rotate(
-            counted.groupBy(F.col("n2").alias("node"))
-            .agg(F.max(F.struct(F.col("n"),
-                                (-F.col("label")).alias("neg")))
-                 .alias("m"))
-            .select("node", (-F.col("m.neg")).alias("label")))
-    rot.keep()
+    labels = lpa_labels(adj)
     deg = adj.groupBy("u").agg(F.count("*").alias("deg"))
     la = labels.select(F.col("node").alias("u"),
                        F.col("label").alias("lab_a"))

@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreducewordcounting_spark.catalog import load_table
-from mapreducewordcounting_spark.checkpoints import CheckpointRotator
 from mapreducewordcounting_spark.registry import register
 
 
@@ -797,9 +796,7 @@ def mm_audio_vad_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it, and without the checkpoint each re-runs the payload scan +
     # decode stage. Energy rows are 3 longs × ≤30 per asset — exactly
     # the state a real VAD pass materializes.
-    scratch = CheckpointRotator(spark)
-    wins = scratch.rotate(wins)
-    scratch.keep()  # final plan reads both branches of it
+    wins = wins.localCheckpoint(eager=True)
     w_rn = Window.partitionBy("asset_id").orderBy("win_idx")
     voiced = (wins.filter(F.col("energy") >= VAD_THRESHOLD)
               .withColumn("grp", F.col("win_idx")

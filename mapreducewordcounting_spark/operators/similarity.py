@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreducewordcounting_spark.catalog import load_table
-from mapreducewordcounting_spark.checkpoints import CheckpointRotator
+from mapreducewordcounting_spark.checkpoints import release
 from mapreducewordcounting_spark.functions.vectors import (
     cosine_similarity,
     dot,
@@ -633,9 +633,7 @@ def similarity_ann_anchor_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized once via local checkpoints (what a real ANN index
     # build does); without them each downstream branch re-ran the
     # full embeddings scan and the plan carried EIGHT table scans.
-    scratch = CheckpointRotator(spark)
-    anchors = scratch.rotate(_ann_anchors(emb))
-    scratch.keep()
+    anchors = _ann_anchors(emb).localCheckpoint(eager=True)
 
     # anchor k-NN adjacency (anchors x anchors — dimension-sized)
     ax = anchors
@@ -655,9 +653,7 @@ def similarity_ann_anchor_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = _anchor_argmax_assign(emb, anchors).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"), "a_id")
-    index = CheckpointRotator(spark)
-    assigned = index.rotate(assigned)
-    index.keep()  # q_route and the cell probe both read it
+    assigned = assigned.localCheckpoint(eager=True)  # q_route + cell probe
 
     q_route = (assigned.filter(F.col("neighbor_id") < N_QUERIES)
                .select(F.col("neighbor_id").alias("query_id"),
@@ -856,9 +852,7 @@ def similarity_ann_greedy_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is |queries| x beam rows; the only fact-scale work is the
     one-time assignment scan and the final cell-keyed probe join."""
     emb = load_table(spark, sf_dir, "embeddings")
-    scratch = CheckpointRotator(spark)
-    anchors = scratch.rotate(_ann_anchors(emb))
-    scratch.keep()
+    anchors = _ann_anchors(emb).localCheckpoint(eager=True)
 
     # entry set: positions 0, n/3, 2n/3 of the a_id order (global
     # window over the dimension-sized anchor table)
@@ -897,21 +891,20 @@ def similarity_ann_greedy_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state ever carries a float vector. Materialized once as part of
     # the INDEX — without the checkpoint each hop's plan re-ran the
     # adjacency window (the single-hop form's 8-scan lesson)
-    rcand = scratch.rotate(
+    rcand = (
         anchors.select(F.col("a_id").alias("cur"),
                        F.col("a_id").alias("cand_id"))
         .unionByName(
             redges.select(F.col("a_id").alias("cur"),
-                          F.col("b_id").alias("cand_id"))))
-    scratch.keep()
+                          F.col("b_id").alias("cand_id")))
+        .localCheckpoint(eager=True))
 
     # query batch: |queries| rows, materialized once (every hop and
     # the final re-rank read it)
-    q = scratch.rotate(
-        emb.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("q_emb")))
-    scratch.keep()
+    q = (emb.filter(F.col("vec_id") < N_QUERIES)
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("q_emb"))
+         .localCheckpoint(eager=True))
     frontier = q.crossJoin(F.broadcast(ent)).select(
         "query_id", F.col("a_id").alias("anchor"))
     visited = [frontier]
@@ -927,8 +920,8 @@ def similarity_ann_greedy_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         # lineage truncation) collapses it to 18 Exchange nodes (8 +
         # 10) for identical rows, at the cost of one tiny job per hop;
         # the interleaved A/B medians and plans are in
-        # OPTIMIZATION_r14.md §1. The hop checkpoints stay pinned until
-        # the harness sweep (result-referenced class, checkpoints.py).
+        # OPTIMIZATION_r14.md §1. The hop checkpoints stay pinned: the
+        # visited union in the result reads them.
         # Exchange discipline (r12): the hop dedup and beam windows
         # shuffle (query_id, anchor[, cos]) only — both embeddings
         # attach via broadcast sides right before the map-side cosine
@@ -949,6 +942,7 @@ def similarity_ann_greedy_route(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .withColumn("rn", F.row_number().over(w_beam))
                     .filter(F.col("rn") <= _GR_BEAM)
                     .select("query_id", "anchor"))
+    release(rcand)  # the hop loop was its only reader
 
     vis = visited[0]
     for v in visited[1:]:
@@ -972,9 +966,7 @@ def similarity_ann_greedy_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = _anchor_argmax_assign(emb, anchors).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("c_emb"), "a_id")
-    index = CheckpointRotator(spark)
-    assigned = index.rotate(assigned)
-    index.keep()
+    assigned = assigned.localCheckpoint(eager=True)
 
     cells = (final.select("query_id", F.col("anchor").alias("cell"))
              .unionByName(
@@ -1299,6 +1291,7 @@ def similarity_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the expensive subtree, unlike the jaccard prefix index (A/B'd
     # the other way) — same discipline, opposite verdict.
     w = w.localCheckpoint(eager=True)
+    release(tf)  # the result reads only ``w``
     norms = w.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm"))
     a, b = w.alias("a"), w.alias("b")

@@ -125,7 +125,7 @@ _CMS_W = 8192    # counters per row
 
 _CMS_TOKS = """
     SELECT list_filter(
-               list_transform(regexp_split_to_array(lower(text), '\\s+'),
+               list_transform(regexp_split_to_array(lower(text), '[\\s\\v]+'),
                               t -> regexp_replace(t, '[^a-z'']', '', 'g')),
                w -> length(w) > 0) AS toks
     FROM documents

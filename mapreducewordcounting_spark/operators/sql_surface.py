@@ -181,7 +181,7 @@ def sql_scalar_udf_charge(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH words AS (
             SELECT DISTINCT u.w AS word
             FROM (SELECT list_filter(
-                      list_transform(regexp_split_to_array(lower(text), '\\s+'),
+                      list_transform(regexp_split_to_array(lower(text), '[\\s\\v]+'),
                                      t -> regexp_replace(t, '[^a-z'']', '', 'g')),
                       w -> length(w) > 0) AS toks
                   FROM documents WHERE doc_id < 30) d,

@@ -29,7 +29,7 @@ STOPWORDS = ("the", "a", "of", "and", "to")
 _SQL_TOKS = """
     SELECT doc_id, lang, source,
            list_filter(
-               list_transform(regexp_split_to_array(lower(text), '\\s+'),
+               list_transform(regexp_split_to_array(lower(text), '[\\s\\v]+'),
                               t -> regexp_replace(t, '[^a-z'']', '', 'g')),
                w -> length(w) > 0) AS toks
     FROM documents
@@ -297,7 +297,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_token_count_bpe",
     oracle="""
         SELECT doc_id,
-               len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]'))
+               len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s\\v]'))
                    AS n_bpe_tokens,
                length(text) AS n_chars
         FROM documents
@@ -422,7 +422,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH toks AS (
             SELECT doc_id, lang, source,
                    list_filter(
-                       list_transform(regexp_split_to_array(lower(text), '\\s+'),
+                       list_transform(regexp_split_to_array(lower(text), '[\\s\\v]+'),
                                       t -> regexp_replace(t, '[^a-z'']', '', 'g')),
                        w -> length(w) > 0) AS toks,
                    md5(text) AS content_hash
@@ -1117,8 +1117,8 @@ BPE_N_MERGES = 8
 #: evaluates one extra array fold inline. ONE accounting, stated the
 #: same way in tests/test_plans.py::test_bpe_loop_job_count (ADVICE
 #: r11): 12 logical materializations (1 pre-loop checkpoint + 8
-#: argmax collects + 3 intra-loop rotations; the old shape had 17 =
-#: 8 rotations + no skip of the dead final rewrite) == <= 22
+#: argmax collects + 3 intra-loop checkpoints; the old shape had 17 =
+#: 8 checkpoints + no skip of the dead final rewrite) == <= 22
 #: statusTracker jobs once AQE's ~2-jobs-per-shuffle-query split is
 #: counted — the number the assertion actually uses.
 BPE_CHECKPOINT_EVERY = 2
@@ -1201,12 +1201,13 @@ def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combined, domain ≤ |alphabet|²·growth), a 1-ROW argmax
     collect (driver-bounded control state, the kmeans-centroid
     precedent), and a pure map-side HOF rewrite of the symbol arrays
-    — no corpus rescan, no growing state. Snapshots rotate via
-    CheckpointRotator every BPE_CHECKPOINT_EVERY merges so lineage
-    stays bounded (at most one stacked rewrite) without paying a
-    materialization job per merge; the final merge's rewrite (which
-    nothing consumes) is skipped outright."""
-    from mapreducewordcounting_spark.checkpoints import CheckpointRotator
+    — no corpus rescan, no growing state. The symbol table is
+    checkpointed every BPE_CHECKPOINT_EVERY merges (releasing the
+    snapshot it supersedes) so lineage stays bounded (at most one
+    stacked rewrite) without paying a materialization job per merge;
+    the final merge's rewrite (which nothing consumes) is skipped
+    outright."""
+    from mapreducewordcounting_spark.checkpoints import release
 
     docs = load_table(spark, sf_dir, "documents")
     words = (
@@ -1216,8 +1217,7 @@ def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word").agg(F.count("*").alias("weight"))
         .select(F.split("word", "").alias("symbols"), "weight")
     )
-    steps = CheckpointRotator(spark)
-    words = steps.rotate(words)
+    words = words.localCheckpoint(eager=True)
     merges = []
     for rank in range(1, BPE_N_MERGES + 1):
         pairs = (
@@ -1270,8 +1270,10 @@ def text_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         words = words.select(rewritten.alias("symbols"), "weight")
         if rank % BPE_CHECKPOINT_EVERY == 0:
-            words = steps.rotate(words)
-    steps.release()  # merge table below is built driver-side
+            nxt = words.localCheckpoint(eager=True)
+            release(words)
+            words = nxt
+    release(words)  # merge table below is built driver-side
     return spark.createDataFrame(
         merges,
         "rank INT, left STRING, right STRING, merged STRING, "
@@ -1688,8 +1690,8 @@ def quality_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH d AS (
             SELECT lang,
                    len(regexp_extract_all(lower(text),
-                       '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS n_bpe,
-                   len(list_filter(regexp_split_to_array(text, '\s+'),
+                       '[a-z]+|[0-9]+|[^a-z0-9\s\v]')) AS n_bpe,
+                   len(list_filter(regexp_split_to_array(text, '[\s\v]+'),
                                    w -> length(w) > 0)) AS n_words
             FROM documents)
         SELECT lang,

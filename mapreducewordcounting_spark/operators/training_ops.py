@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreducewordcounting_spark.catalog import load_table
+from mapreducewordcounting_spark.checkpoints import release
 from mapreducewordcounting_spark.functions.text import words_canonical
 # dedup's shared 3-gram-Jaccard CTE block, reused verbatim by the
 # leakage-safe split's oracle (the split IS a dedup composition; the
@@ -59,7 +60,7 @@ STRATA_DEFAULT_PCT = 20
 _SQL_TOKS = """
     SELECT doc_id, lang, source,
            list_filter(
-               list_transform(regexp_split_to_array(lower(text), '\\s+'),
+               list_transform(regexp_split_to_array(lower(text), '[\\s\\v]+'),
                               t -> regexp_replace(t, '[^a-z'']', '', 'g')),
                w -> length(w) > 0) AS toks
     FROM documents
@@ -1291,9 +1292,9 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # + the residual anti-join) and the residual feeds the next
         # rung — without lineage cuts the 4-branch union re-derives
         # the whole cascade per branch (measured 29 exchanges vs 13).
-        # Class tables are group-cardinality-sized, residuals shrink;
-        # both are result-referenced checkpoints (checkpoints.py),
-        # freed by the harness sweep.
+        # Class tables are group-cardinality-sized, residuals shrink.
+        # The result reads every class table and the last residual;
+        # each earlier residual is released once the next one exists.
         ok = sizes.filter(F.col("n") >= K_ANON).localCheckpoint(eager=True)
         level_rows.append(ok.agg(
             F.lit(level).alias("level"),
@@ -1302,8 +1303,11 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_records"),
             F.min("n").alias("min_class_size"),
         ))
-        remaining = remaining.join(ok.select(*keys), keys, "left_anti") \
+        nxt = remaining.join(ok.select(*keys), keys, "left_anti") \
             .localCheckpoint(eager=True)
+        if level:  # the seed is the caller-side customer scan
+            release(remaining)
+        remaining = nxt
     suppressed = remaining.agg(
         F.lit(3).alias("level"),
         F.lit(0).cast("bigint").alias("n_classes"),

@@ -114,7 +114,7 @@ def udaf_median_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH t AS (
             SELECT doc_id,
                    list_filter(
-                       list_transform(regexp_split_to_array(lower(text), '\\s+'),
+                       list_transform(regexp_split_to_array(lower(text), '[\\s\\v]+'),
                                       x -> regexp_replace(x, '[^a-z'']', '', 'g')),
                        w -> length(w) > 0) AS toks
             FROM documents WHERE doc_id < 50
@@ -196,7 +196,7 @@ def agg_percentile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH t AS (
             SELECT doc_id,
                    list_filter(
-                       list_transform(regexp_split_to_array(lower(text), '\\s+'),
+                       list_transform(regexp_split_to_array(lower(text), '[\\s\\v]+'),
                                       x -> regexp_replace(x, '[^a-z'']', '', 'g')),
                        w -> length(w) > 0) AS toks
             FROM documents WHERE doc_id < 50)

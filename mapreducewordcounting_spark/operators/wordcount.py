@@ -34,7 +34,7 @@ WORD_COUNT_SCHEMA = StructType([
 _ORACLE_WORDCOUNT = """
 WITH toks AS (
     SELECT regexp_replace(
-               unnest(regexp_split_to_array(lower(text), '\\s+')),
+               unnest(regexp_split_to_array(lower(text), '[\\s\\v]+')),
                '[^a-z'']', '', 'g') AS word
     FROM documents
 )
@@ -106,7 +106,7 @@ def word_count_rdd(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=r"""
 WITH toks AS (
     SELECT lower(regexp_extract(
-               unnest(regexp_split_to_array(text, '\s+')),
+               unnest(regexp_split_to_array(text, '[\s\v]+')),
                '^[A-Za-z''\[\\\]\^_`]*')) AS word
     FROM documents
 )

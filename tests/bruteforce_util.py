@@ -22,7 +22,7 @@ from collections import Counter
 
 import pyarrow.parquet as pq
 
-_WS = re.compile(r"\s+")
+_WS = re.compile(r"[ \t\n\x0b\f\r]+")  # Java's \s, as tokenize_canonical
 _NON_WORD = re.compile(r"[^a-z']")
 
 

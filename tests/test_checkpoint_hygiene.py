@@ -4,7 +4,7 @@ RDDs, and the harness sweep must return storage to baseline.
 
 The "done" criterion from the verdict — executor storage returns to
 baseline after each headline query in a single-session sweep — is
-asserted directly on ``getPersistentRDDs`` counts.
+asserted directly on pinned-RDD counts.
 """
 
 from __future__ import annotations
@@ -12,24 +12,41 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from mapreducewordcounting_spark.checkpoints import (
-    CheckpointRotator,
     n_pinned,
+    release,
     release_all_pinned,
 )
 
 
-def test_rotator_unpersists_superseded_steps(spark):
+def test_release_frees_superseded_loop_steps(spark):
     release_all_pinned(spark)
     base = n_pinned(spark)
-    rot = CheckpointRotator(spark)
     df = spark.range(100).select(F.col("id"), (F.col("id") * 2).alias("v"))
     for _ in range(6):
-        df = rot.rotate(df.select("id", (F.col("v") + 1).alias("v")))
+        step = df.select("id", (F.col("v") + 1).alias("v")) \
+            .localCheckpoint(eager=True)
+        release(df)  # the seed reads no checkpoint: a no-op the 1st time
+        df = step
     # only the LATEST step may be pinned, never the 6-step history
     assert n_pinned(spark) - base <= 1
     assert df.agg(F.sum("v")).collect()[0][0] == 100 * 6 + 99 * 100
-    rot.release()
+    assert release(df) == 1
     assert n_pinned(spark) == base
+
+
+def test_release_frees_exactly_what_a_derived_plan_reads(spark):
+    release_all_pinned(spark)
+    a = spark.range(10).localCheckpoint(eager=True)
+    b = spark.range(5).localCheckpoint(eager=True)
+    c = spark.range(3).localCheckpoint(eager=True)
+    derived = (a.join(b, "id").alias("x")
+               .join(a.alias("y"), "id"))  # a self-join alias shares a's RDD
+    assert n_pinned(spark) == 3
+    assert release(derived) == 2
+    assert n_pinned(spark) == 1
+    assert c.count() == 3  # the checkpoint the plan does not read survives
+    assert release(derived) == 0  # released RDDs are no longer pinned
+    release_all_pinned(spark)
 
 
 def test_pagerank_loop_pins_only_final_snapshot(spark, sf_dir):

@@ -275,13 +275,19 @@ def test_degree_assortativity_matches_bruteforce(spark_h, edges):
 @given(st.lists(st.tuples(st.integers(0, 7), st.integers(0, 7)),
                 min_size=0, max_size=16))
 def test_label_propagation_matches_bruteforce(spark_h, edges):
-    """Drive the synchronous min-tie LPA update on arbitrary graphs
-    against a plain-Python sweep (the oracle mirrors the Spark
-    construction, so this is the structure-free third opinion)."""
+    """Drive the production synchronous min-tie LPA sweep
+    (``iterative.lpa_labels``) on arbitrary graphs against a
+    plain-Python sweep (the oracle mirrors the Spark construction, so
+    this is the structure-free third opinion); the sweep leaves only
+    its final snapshot pinned."""
     from collections import Counter
 
     from pyspark.sql import functions as F
-    from mapreducewordcounting_spark.checkpoints import CheckpointRotator
+    from mapreducewordcounting_spark.checkpoints import n_pinned, release
+    from mapreducewordcounting_spark.operators.iterative import (
+        LPA_ITERS,
+        lpa_labels,
+    )
 
     df = (spark_h.createDataFrame(edges, "src INT, dst INT") if edges
           else spark_h.createDataFrame([], "src INT, dst INT"))
@@ -290,21 +296,11 @@ def test_label_propagation_matches_bruteforce(spark_h, edges):
                    F.greatest("src", "dst").alias("v")).distinct())
     adj = und.union(und.select(F.col("v").alias("u"),
                                F.col("u").alias("v")))
-    labels = adj.select("u").distinct().select(
-        F.col("u").alias("node"), F.col("u").alias("label"))
-    rot = CheckpointRotator(spark_h)
-    for _ in range(5):
-        counted = (adj.join(labels, adj.v == labels.node)
-                   .groupBy(F.col("u").alias("n2"), "label")
-                   .agg(F.count("*").alias("n")))
-        labels = rot.rotate(
-            counted.groupBy(F.col("n2").alias("node"))
-            .agg(F.max(F.struct(F.col("n"),
-                                (-F.col("label")).alias("neg")))
-                 .alias("m"))
-            .select("node", (-F.col("m.neg")).alias("label")))
+    base = n_pinned(spark_h)
+    labels = lpa_labels(adj)
+    assert n_pinned(spark_h) - base <= 1  # only the final sweep
     got = {r.node: r.label for r in labels.collect()}
-    rot.release()
+    assert release(labels) == 1
 
     nbrs: dict[int, set] = {}
     for s, d in edges:
@@ -313,7 +309,7 @@ def test_label_propagation_matches_bruteforce(spark_h, edges):
         nbrs.setdefault(s, set()).add(d)
         nbrs.setdefault(d, set()).add(s)
     lab = {n: n for n in nbrs}
-    for _ in range(5):
+    for _ in range(LPA_ITERS):
         new = {}
         for n in nbrs:
             cnt = Counter(lab[m] for m in nbrs[n])

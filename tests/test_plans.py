@@ -660,7 +660,7 @@ def test_bpe_loop_job_count(spark, sf_dir):
     Spark-job count is a committed contract, stated with ONE
     accounting here and at text_analysis.BPE_CHECKPOINT_EVERY (ADVICE
     r11): 12 logical materializations (1 pre-loop checkpoint + 8
-    argmax collects + 3 intra-loop rotations at every 2nd merge, dead
+    argmax collects + 3 intra-loop checkpoints at every 2nd merge, dead
     final rewrite skipped) == <= 22 statusTracker jobs once AQE's
     ~2-jobs-per-shuffle-query split is counted — the assertion below
     uses the statusTracker number. The old rotate-every-merge shape

@@ -71,6 +71,29 @@ def test_rdd_splits_on_java_whitespace_only(spark, tmp_path):
         assert got == want, query.__name__
 
 
+@pytest.mark.parametrize("name", ["wordcount_canonical", "wordcount_fidelity"])
+def test_vertical_tab_splits_in_query_and_oracle(spark, tmp_path, name):
+    r"""\x0b is whitespace to Spark's (Java) ``\s`` but not to RE2's,
+    so the DuckDB oracles split on ``[\s\v]+``: on a row holding
+    \x0b the query and its oracle agree."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreducewordcounting_spark.registry import all_queries
+    from tests.oracle_util import assert_matches_oracle
+
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(pa.table({"text": ["Foo\x0bbar baz", "a\x0b\x0bB c"]}),
+                   path)
+    spec = all_queries()[name]
+    df = spec.fn(spark, str(tmp_path))
+    assert "bar" in {r.word for r in df.collect()}
+    with duckdb.connect() as duck:
+        duck.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+        assert_matches_oracle(df, duck, spec.oracle)
+
+
 # --- property-based invariants (hypothesis) ------------------------------
 
 # printable-ish corpus generator: words of letters/digits/punct

@@ -44,6 +44,7 @@ def main() -> int:
         b = b.config(k.strip(), v.strip())
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    from mapreducewordcounting_spark.checkpoints import release_all_pinned
     from mapreducewordcounting_spark.plans import formatted_plan
     from mapreducewordcounting_spark.registry import all_queries
 
@@ -54,6 +55,7 @@ def main() -> int:
         with open(path, "w") as f:
             f.write(formatted_plan(df))
         print(f"wrote {path}")
+        release_all_pinned(spark)  # storage hygiene between queries
     spark.stop()
     return 0
 

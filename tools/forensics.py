@@ -115,6 +115,7 @@ def run(spark, sf_dir: str, names=R4_FAILERS + R5_SWEPT) -> dict:
     import duckdb
 
     from mapreducewordcounting_spark import registry
+    from mapreducewordcounting_spark.checkpoints import release_all_pinned
 
     con = duckdb.connect()
     for t in TABLES:
@@ -148,6 +149,7 @@ def run(spark, sf_dir: str, names=R4_FAILERS + R5_SWEPT) -> dict:
         except Exception as exc:  # pragma: no cover - env-dependent
             rec = {"error": repr(exc)[:300]}
         out["queries"][name] = rec
+        release_all_pinned(spark)  # storage hygiene between queries
     con.close()
     return out
 

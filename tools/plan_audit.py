@@ -203,34 +203,40 @@ def audit(spark, names=None) -> dict[str, dict]:
     Queries whose CONSTRUCTION runs jobs (sink round-trips, streaming
     replays) still only pay their build cost — nothing is collected.
     """
+    from mapreducewordcounting_spark.checkpoints import release_all_pinned
     from mapreducewordcounting_spark.registry import all_queries
 
     out: dict[str, dict] = {}
     for name, spec in sorted(all_queries().items()):
         if names is not None and name not in names:
             continue
-        try:
-            df = spec.fn(spark, SF_DIR)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:  # noqa: BLE001 — record, keep auditing
-            out[name] = {"error": str(exc)[:300]}
-            continue
-        rec = {field: plan.count(mark) for field, mark in _MARKS.items()}
-        # exchange thinness (VERDICT r12 item 2): which shuffle inputs
-        # carry array/map columns — typed, from the plan tree itself
-        try:
-            from mapreducewordcounting_spark.plans import (
-                exchange_array_columns,
-            )
-            per_exchange = exchange_array_columns(df)
-            rec["fat_exchanges"] = sum(1 for c in per_exchange if c)
-            rec["fat_exchange_columns"] = sorted(
-                {c for cols in per_exchange for c in cols})
-        except Exception as exc:  # noqa: BLE001 — record, keep auditing
-            rec["fat_exchanges"] = -1
-            rec["fat_exchange_columns"] = [f"audit-error: {exc!r}"[:200]]
-        out[name] = rec
+        out[name] = _plan_shape(spark, spec)
+        # storage hygiene between queries: the plan is recorded, so
+        # this query's local checkpoints are dead
+        release_all_pinned(spark)
     return out
+
+
+def _plan_shape(spark, spec) -> dict:
+    """One query's plan-shape record (``{"error": ...}`` if it fails)."""
+    try:
+        df = spec.fn(spark, SF_DIR)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    except Exception as exc:  # noqa: BLE001 — record, keep auditing
+        return {"error": str(exc)[:300]}
+    rec = {field: plan.count(mark) for field, mark in _MARKS.items()}
+    # exchange thinness (VERDICT r12 item 2): which shuffle inputs
+    # carry array/map columns — typed, from the plan tree itself
+    try:
+        from mapreducewordcounting_spark.plans import exchange_array_columns
+        per_exchange = exchange_array_columns(df)
+        rec["fat_exchanges"] = sum(1 for c in per_exchange if c)
+        rec["fat_exchange_columns"] = sorted(
+            {c for cols in per_exchange for c in cols})
+    except Exception as exc:  # noqa: BLE001 — record, keep auditing
+        rec["fat_exchanges"] = -1
+        rec["fat_exchange_columns"] = [f"audit-error: {exc!r}"[:200]]
+    return rec
 
 
 def main() -> int:
