@@ -25,13 +25,13 @@ from tools.measure import SF_DIR, measure, warm_session
 #: Host-contention control (VERDICT r10 item 8, automating the r8/r10
 #: drift adjudications): wordcount_canonical has been byte-identical
 #: since r1, so its timed median moves ONLY with host state. If it
-#: reads > CONTROL_SLACK x its accepted pin (tools/bench_pins.json),
-#: the whole artifact is tagged host_contended=true — the flag applies
-#: to EVERY row of "queries"/"extended" (uniform drift hits all rows),
-#: so judges and tools/bench_outliers.py read the signal directly
-#: instead of re-deriving it from BASELINE.md prose. 1.5x is the
-#: uniform-drift band both adjudications measured (r10: control 0.855s
-#: vs 0.306s pin while per-query medians drifted 1.3-1.5x).
+#: reads > CONTROL_SLACK x its pin (CONTROL_PINS), the whole artifact
+#: is tagged host_contended=true — the flag applies to EVERY row of
+#: "queries"/"extended" (uniform drift hits all rows), so a reader
+#: gets the signal directly instead of re-deriving it from BASELINE.md
+#: prose. 1.5x is the uniform-drift band both adjudications measured
+#: (r10: control 0.855s vs 0.306s pin while per-query medians drifted
+#: 1.3-1.5x).
 CONTROL_QUERY = "wordcount_canonical"
 #: Second control (VERDICT r12 item 4): a multi-exchange throughput
 #: shape. wordcount_canonical is a 2-job query whose median moves with
@@ -44,17 +44,18 @@ CONTROL_QUERY = "wordcount_canonical"
 #: both hot -> genuine throughput contention (every row suspect).
 CONTROL2_QUERY = "join_star_schema"
 CONTROL_SLACK = 1.5
-PINS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "tools", "bench_pins.json")
+#: each control's accepted sf0.1 median-of-3, in seconds. The per-query
+#: regression gate is the exact cost ledger (tools/ledger.json); these
+#: two wall-clock pins only read the host.
+CONTROL_PINS = {CONTROL_QUERY: 0.332, CONTROL2_QUERY: 1.222}
 
 
 def control_adjudication(timings: dict[str, float]) -> dict:
-    """Compare each control query's timed median to its accepted pin;
-    return the self-adjudication block for the bench artifact.
+    """Compare each control query's timed median to its pin; return the
+    self-adjudication block for the bench artifact.
 
-    Fail CLOSED, not open (ADVICE r11): a missing/corrupt pins file,
-    an absent control pin, or a missing control timing means the run
-    COULD NOT be adjudicated — that must read as
+    Fail CLOSED, not open (ADVICE r11): a missing control timing means
+    the run COULD NOT be adjudicated — that must read as
     host_contended=null + control.status='unadjudicated', never as an
     affirmative 'not contended' (the opposite of the flag's purpose).
 
@@ -62,16 +63,10 @@ def control_adjudication(timings: dict[str, float]) -> dict:
     (unchanged semantics since r11, regression-tested); the secondary
     control only classifies the drift into ``drift_kind``.
     """
-    try:
-        with open(PINS_PATH) as f:
-            pins = json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        pins = {}
-
     def _block(query: str) -> dict:
-        pin = pins.get(query)
+        pin = CONTROL_PINS[query]
         sec = timings.get(query)
-        ratio = (round(sec / pin, 3) if pin and sec is not None else None)
+        ratio = round(sec / pin, 3) if sec is not None else None
         return {"query": query, "seconds": sec, "pin": pin,
                 "ratio": ratio, "slack": CONTROL_SLACK,
                 "status": ("adjudicated" if ratio is not None
@@ -80,7 +75,7 @@ def control_adjudication(timings: dict[str, float]) -> dict:
     control = _block(CONTROL_QUERY)
     control2 = _block(CONTROL2_QUERY)
     # tri-state: true / false only when adjudicated; null when the
-    # control pin or timing was unavailable
+    # control timing was unavailable
     contended = (None if control["ratio"] is None
                  else control["ratio"] > CONTROL_SLACK)
     if contended:
@@ -180,8 +175,7 @@ HEADLINE = [
 #: median of 3 at sf0.1) but kept OUT of the headline total so
 #: `headline_suite_seconds` stays comparable across rounds and with
 #: BASELINE.md. Their numbers land in BENCH_DETAIL.json under
-#: "extended"; a >2×-of-peer outlier here gets the same treatment a
-#: headline outlier would.
+#: "extended".
 EXTENDED = [
     "dedup_clusters",           # iterative min-label components
     "kmeans_embeddings",        # Lloyd iterations (driver-side k centroids)

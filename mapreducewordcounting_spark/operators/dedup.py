@@ -784,7 +784,11 @@ def component_labels(edges: DataFrame) -> DataFrame:
     Each iteration is one groupBy exchange on the node id; the
     convergence check is a filter over the already-materialized step
     output, not another join against the previous labels (which cost
-    one extra shuffle per iteration)."""
+    one extra shuffle per iteration). Both joins are merge joins:
+    edges and labels grow with the corpus, and a runtime broadcast
+    conversion would make the plan depend on the shuffle partition
+    count (AQE keeps the sort-merge join when most partitions of a
+    tiny stage are empty)."""
     # start: every node labels itself
     labels = (
         edges.select(F.col("id_a").alias("node"))
@@ -794,12 +798,12 @@ def component_labels(edges: DataFrame) -> DataFrame:
     )
     for _ in range(20):
         neighbor_min = (
-            edges.join(labels, edges.id_b == labels.node)
+            edges.join(labels.hint("merge"), edges.id_b == labels.node)
             .groupBy(F.col("id_a").alias("node"))
             .agg(F.min("label").alias("nbr_label"))
         )
         stepped = (
-            labels.join(neighbor_min, "node", "left")
+            labels.join(neighbor_min.hint("merge"), "node", "left")
             .select(
                 "node",
                 F.col("label").alias("old_label"),

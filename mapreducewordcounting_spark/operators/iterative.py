@@ -337,9 +337,12 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     e1 = e.alias("e1")
     e2 = e.alias("e2")
     e3 = e.alias("e3")
+    # merge joins on the hash-partitioned edge list, the plan that holds
+    # at any size: a runtime broadcast conversion here depended on
+    # which shuffle stage finished first
     tri = (
-        e1.join(e2, F.col("e1.v") == F.col("e2.u"))
-        .join(e3, (F.col("e3.u") == F.col("e1.u"))
+        e1.join(e2.hint("merge"), F.col("e1.v") == F.col("e2.u"))
+        .join(e3.hint("merge"), (F.col("e3.u") == F.col("e1.u"))
               & (F.col("e3.v") == F.col("e2.v")))
         .select(F.col("e1.u").alias("a"), F.col("e1.v").alias("b"),
                 F.col("e2.v").alias("c"))
@@ -1023,14 +1026,15 @@ def lpa_labels(adj: DataFrame) -> DataFrame:
     """``(node, label)`` after LPA_ITERS synchronous label-propagation
     sweeps over the SYMMETRIC ``(u, v)`` adjacency ``adj``: every node
     starts as its own label and adopts the most frequent neighbor
-    label, ties to the smallest. Each sweep's labels are checkpointed
-    and the superseded sweep released; the seed reads ``adj``, which
-    every sweep re-reads, so it is never released. Only the final
-    snapshot stays pinned."""
+    label, ties to the smallest. The labels (one row per node, at most
+    one per nation) broadcast, so AQE has no join to re-plan. Each
+    sweep's labels are checkpointed and the superseded sweep released;
+    the seed reads ``adj``, which every sweep re-reads, so it is never
+    released. Only the final snapshot stays pinned."""
     labels = adj.select("u").distinct().select(
         F.col("u").alias("node"), F.col("u").alias("label"))
     for i in range(LPA_ITERS):
-        counted = (adj.join(labels, adj.v == labels.node)
+        counted = (adj.join(F.broadcast(labels), adj.v == labels.node)
                    .groupBy(F.col("u").alias("n2"), "label")
                    .agg(F.count("*").alias("n")))
         step = (counted.groupBy(F.col("n2").alias("node"))

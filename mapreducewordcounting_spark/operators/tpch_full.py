@@ -121,27 +121,34 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlated-min-subquery pattern. No partsupp in the fixture, so
     supply cost is each (part, supplier)'s minimum observed line price
     (exact decimal, so the min-equality join cannot ulp-miss). The
-    correlated min decorrelates to a groupBy(part).min + equi-join;
-    supplier/nation/region collapse to one broadcast chain, so the
-    only shuffle is the (part, supplier) aggregation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    ps = (li.groupBy("l_partkey", "l_suppkey")
+    correlated min decorrelates to a groupBy(part).min + equi-join.
+
+    The plan is fixed at build time, so AQE has nothing to re-plan:
+    the selective part filter is broadcast into the lineitem scan
+    (only qualifying parts reach the aggregate), supplier and the
+    per-part minimum grow with the data and merge-join, and only
+    nation and region, bounded by construction, broadcast after the
+    supplier join. Every stage past the scans therefore waits on the
+    part filter, and an empty filter ends the query the same way on
+    every run."""
+    p = load_table(spark, sf_dir, "part").filter(
+        (F.col("p_size") == 9) & (F.col("p_type") == "STANDARD")) \
+        .select("p_partkey", "p_type")
+    ps = (load_table(spark, sf_dir, "lineitem")
+          .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+          .groupBy("p_partkey", "p_type", "l_suppkey")
           .agg(F.min(money("l_extendedprice")).alias("cost")))
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    eur = (s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-           .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-           .select("s_suppkey", "s_name", "s_acctbal", "n_name"))
-    pse = ps.join(F.broadcast(eur), ps.l_suppkey == eur.s_suppkey)
-    minc = pse.groupBy("l_partkey").agg(F.min("cost").alias("min_cost"))
-    p = load_table(spark, sf_dir, "part").filter(
-        (F.col("p_size") == 9) & (F.col("p_type") == "STANDARD"))
+    pse = (ps.join(s.hint("merge"), ps.l_suppkey == s.s_suppkey)
+           .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+           .join(F.broadcast(r), n.n_regionkey == r.r_regionkey))
+    minc = pse.groupBy(F.col("p_partkey").alias("mk")).agg(
+        F.min("cost").alias("min_cost"))
     return (
-        pse.join(minc.withColumnRenamed("l_partkey", "mk"),
-                 (pse.l_partkey == F.col("mk"))
+        pse.join(minc.hint("merge"), (pse.p_partkey == F.col("mk"))
                  & (pse.cost == F.col("min_cost")))
-        .join(F.broadcast(p), pse.l_partkey == p.p_partkey)
         .select("p_partkey", "p_type", "s_name", "n_name", "s_acctbal",
                 F.col("cost").cast("double").alias("cost"))
     )

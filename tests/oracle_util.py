@@ -70,8 +70,11 @@ def canonical_rows(rows: list[dict], float_digits: int | None = None
 
 
 def assert_matches_oracle(spark_df, duck, sql: str,
-                          float_digits: int | None = None):
-    s_rows = [r.asDict(recursive=True) for r in spark_df.collect()]
+                          float_digits: int | None = None, rows=None):
+    """``rows``: the already-collected ``spark_df`` rows, if any."""
+    if rows is None:
+        rows = spark_df.collect()
+    s_rows = [r.asDict(recursive=True) for r in rows]
     d = duck.execute(sql)
     cols = [c[0] for c in d.description]
     d_rows = [dict(zip(cols, row)) for row in d.fetchall()]

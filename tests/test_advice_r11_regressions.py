@@ -14,23 +14,15 @@
    never see it — the test below rebuilds the pathological input
    (a documents table WITH a NULL-lang row) and runs the committed
    oracle SQL against an independent Python greedy fold.
-4. ``bench.control_adjudication`` failed OPEN: missing/corrupt pins,
-   an absent control pin, or a missing control timing yielded
-   ``host_contended=false`` — affirmatively 'clean' when the truth
-   was 'could not adjudicate'. Now tri-state: ``host_contended`` is
-   null and ``control.status='unadjudicated'`` in every
-   cannot-adjudicate case.
+4. ``bench.control_adjudication`` failed OPEN on a missing control
+   timing; it is tri-state now (null = could not adjudicate), and
+   ``tests/test_measure.py`` covers it.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 import duckdb
-import pytest
 
-import bench
 from mapreducewordcounting_spark.registry import all_queries
 
 # ---------------------------------------------------------------- #
@@ -99,68 +91,3 @@ def test_pack_oracle_keeps_null_lang_docs(tmp_path):
     # the pathological rows specifically
     null_rows = [r for r in got if r[1] is None]
     assert len(null_rows) == 2, f"NULL-lang rows dropped: {got}"
-
-
-# ---------------------------------------------------------------- #
-# finding 4: control adjudication must fail CLOSED                  #
-# ---------------------------------------------------------------- #
-
-def test_control_adjudication_adjudicated_cases():
-    pin = json.load(open(bench.PINS_PATH))[bench.CONTROL_QUERY]
-    hot = bench.control_adjudication({bench.CONTROL_QUERY: pin * 2.0})
-    assert hot["host_contended"] is True
-    assert hot["control"]["status"] == "adjudicated"
-    cool = bench.control_adjudication({bench.CONTROL_QUERY: pin * 1.0})
-    assert cool["host_contended"] is False
-    assert cool["control"]["status"] == "adjudicated"
-
-
-def test_control_adjudication_missing_timing_is_unadjudicated():
-    out = bench.control_adjudication({})
-    assert out["host_contended"] is None
-    assert out["control"]["status"] == "unadjudicated"
-
-
-@pytest.mark.parametrize("pins_content", [
-    None,                          # file absent
-    "{not json",                   # corrupt
-    json.dumps({}),                # control pin absent
-    json.dumps({"wordcount_canonical": 0}),   # zero pin
-])
-def test_control_adjudication_bad_pins_is_unadjudicated(
-        tmp_path, monkeypatch, pins_content):
-    p = tmp_path / "bench_pins.json"
-    if pins_content is not None:
-        p.write_text(pins_content)
-    monkeypatch.setattr(bench, "PINS_PATH", str(p))
-    out = bench.control_adjudication({bench.CONTROL_QUERY: 1.0})
-    assert out["host_contended"] is None, (
-        f"fail-open with pins={pins_content!r}: {out}")
-    assert out["control"]["status"] == "unadjudicated"
-
-
-# ---------------------------------------------------------------- #
-# r12 follow-on: --accept-pins single-sample drift guard            #
-# ---------------------------------------------------------------- #
-
-def test_accept_pins_holds_unprovenanced_drift():
-    """r12 lesson: a clean-control sweep still inflated ~20 untouched
-    single-sample rows 1.3-1.7x, and wholesale acceptance baked that
-    drift into the pins. accept_pins must HOLD a >ACCEPT_DRIFT move
-    without median-of-3 provenance, accept the same move WITH it,
-    accept small moves, and accept brand-new rows."""
-    from tools.bench_outliers import ACCEPT_DRIFT, accept_pins
-
-    pins = {"a": 1.0, "b": 1.0, "c": 1.0, "shrunk": 1.0}
-    times = {"a": 1.1,                      # small move: accept
-             "b": ACCEPT_DRIFT * 1.2,       # big move, no provenance
-             "c": ACCEPT_DRIFT * 1.2,       # big move, repinned
-             "shrunk": 1.0 / (ACCEPT_DRIFT * 1.2),  # big DROP, no prov
-             "new": 9.9}                    # no pin yet: accept
-    accepted, held = accept_pins(times, pins, repinned={"c"})
-    assert accepted["a"] == 1.1
-    assert accepted["b"] == 1.0 and "b" in held
-    assert accepted["c"] == times["c"]
-    assert accepted["shrunk"] == 1.0 and "shrunk" in held
-    assert accepted["new"] == 9.9
-    assert sorted(held) == ["b", "shrunk"]

@@ -1,10 +1,7 @@
-"""Regression gate for the five ADVICE r12 findings.
+"""Regression gate for the ADVICE r12 findings.
 
-1. ``tools/bench_outliers.accept_pins`` divided by a sweep time of
-   0.0 when computing the drift ratio — --accept-pins would crash
-   with ZeroDivisionError on a row rounded to 0.0. Now any t <= 0
-   holds the existing pin (a zero pin would poison every later
-   ratio), with or without median-of-3 provenance.
+1. The ``--accept-pins`` zero-time guard: gone with the wall-clock
+   pins it guarded (the per-query gate is the exact cost ledger).
 2. ``dedup_clusters_sharded``'s within-shard clustering was barely
    exercised by the sf0.01 differential (DEDUP_SHARD_SPAN=5000
    collapses to pure source sharding there and most planted dup
@@ -34,37 +31,6 @@ from __future__ import annotations
 import os
 
 import pytest
-
-from tools.bench_outliers import accept_pins
-
-# ---------------------------------------------------------------- #
-# finding 1: accept_pins must survive (and hold) a 0.0 sweep time    #
-# ---------------------------------------------------------------- #
-
-
-def test_accept_pins_zero_time_is_held_not_crash():
-    pins = {"q_zero": 1.2, "q_ok": 1.0}
-    times = {"q_zero": 0.0, "q_ok": 1.1}
-    accepted, held = accept_pins(times, pins, repinned=set())
-    assert accepted["q_zero"] == 1.2  # old pin held, no ZeroDivision
-    assert "q_zero" in held
-    assert accepted["q_ok"] == 1.1 and "q_ok" not in held
-
-
-def test_accept_pins_zero_time_held_even_with_provenance():
-    """Median-of-3 provenance cannot bless a 0.0 pin: a zero pin
-    breaks every downstream ratio, so t<=0 is held unconditionally."""
-    accepted, held = accept_pins(
-        {"q": 0.0}, {"q": 0.8}, repinned={"q"})
-    assert accepted["q"] == 0.8 and held == ["q"]
-
-
-def test_accept_pins_zero_time_new_row_still_accepted():
-    """A NEW row (no pin yet) keeps the old contract — accepted as-is
-    (there is no pin to poison; the family comparison covers it)."""
-    accepted, held = accept_pins({"q_new": 0.0}, {}, repinned=set())
-    assert accepted["q_new"] == 0.0 and held == []
-
 
 # ---------------------------------------------------------------- #
 # finding 2: within-shard clustering against an independent oracle   #

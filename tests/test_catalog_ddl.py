@@ -113,29 +113,12 @@ def test_load_table_missing_file_raises_original(spark):
 
 
 def _jobs_run_by(spark, fn):
-    """``(fn(), number of Spark jobs fn ran)``, counted through a fresh
-    job group. Job events reach the status store asynchronously, so a
-    fence job in a second fresh group is awaited before counting: once
-    the fence is visible, every earlier job is too."""
-    import time
+    """``(fn(), number of Spark jobs fn ran)``."""
+    from tools.measure import cost
 
-    sc = spark.sparkContext
-    group, fence = (f"mrwc-catalog-{uuid.uuid4().hex}" for _ in range(2))
-    sc.setJobGroup(group, "catalog schema reuse")
-    try:
+    with cost(spark, "catalog schema reuse") as row:
         out = fn()
-    finally:
-        sc.setJobGroup(fence, "status store fence")
-        try:
-            sc.parallelize([0], 1).count()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(fence):
-        assert time.monotonic() < deadline, "fence job never reported"
-        time.sleep(0.05)
-    return out, len(tracker.getJobIdsForGroup(group))
+    return out, row["jobs"]
 
 
 def test_load_table_second_load_runs_no_job(spark, sf_dir):

@@ -661,25 +661,20 @@ def test_bpe_loop_job_count(spark, sf_dir):
     accounting here and at text_analysis.BPE_CHECKPOINT_EVERY (ADVICE
     r11): 12 logical materializations (1 pre-loop checkpoint + 8
     argmax collects + 3 intra-loop checkpoints at every 2nd merge, dead
-    final rewrite skipped) == <= 22 statusTracker jobs once AQE's
+    final rewrite skipped) == <= 22 Spark jobs once AQE's
     ~2-jobs-per-shuffle-query split is counted — the assertion below
-    uses the statusTracker number. The old rotate-every-merge shape
+    uses tools.measure.cost's job count. The old rotate-every-merge shape
     cost 17 materializations (~6 more jobs), and each job's fixed
     scheduling overhead is what made this query the suite's most
     host-contention-sensitive row."""
     from mapreducewordcounting_spark.operators.text_analysis import (
         text_bpe_learn_merges,
     )
+    from tools.measure import cost
 
-    sc = spark.sparkContext
-    group = "bpe-job-count-contract"
-    sc.setJobGroup(group, "plan contract")
-    try:
+    with cost(spark, "bpe job count contract") as row:
         df = text_bpe_learn_merges(spark, sf_dir)
-    finally:
-        sc.setJobGroup("bpe-job-count-done", "")
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 22, f"BPE merge loop regressed to {jobs} jobs"
+    assert row["jobs"] <= 22, f"BPE merge loop regressed to {row['jobs']} jobs"
     assert df.count() == 8  # all merges learned on the fixture
 
 

@@ -6,9 +6,9 @@ in the registry has at least one recorded sf0.1 wall time").
 Protocol: tools/measure.py with ONE timed sf0.1 run per query. This
 is a COVERAGE sweep, not the headline benchmark: bench.py's 65-query
 headline set (median-of-3) remains the number compared against
-BASELINE.md; the single-sample times here are for outlier detection
-(>2x of family peers gets the join_interval_overlap treatment) and
-land in BASELINE.md's round-6 note.
+BASELINE.md; the single-sample times here are a coverage record, not
+a gate (the per-query regression gate is the exact cost ledger,
+tools/ledger.json).
 
 Streaming queries run their real micro-batch round trips; their times
 include sink/trigger plumbing by design (the reason bench.py excludes

@@ -26,6 +26,7 @@ Checks (all against the live registry import):
   8. every ``tools/<name>.py`` path quoted in README.md, SCALING.md,
      bench.py, tools/*.py or the package sources exists, so a deleted
      tool leaves no stale instructions behind
+  9. tools/ledger.json holds one cost row per registry query, no more
 
 `python tools/sync_check.py` exits non-zero on the first disagreement;
 `make sync-check` is an alias and `tools/check.py` runs it as its
@@ -221,6 +222,18 @@ def main() -> int:
 
     # 8. quoted tool paths exist
     problems += dangling_tool_refs(tool_ref_sources(REPO), REPO)
+
+    # 9. tools/ledger.json rows == registry
+    try:
+        rows = json.load(open(os.path.join(REPO, "tools", "ledger.json")))
+        missing = sorted(set(entry.queries()) - set(rows))
+        extra = sorted(set(rows) - set(entry.queries()))
+        if missing or extra:
+            problems.append(
+                f"ledger: missing {missing}, not registered {extra}"
+                " (run: python tools/measure.py ledger)")
+    except Exception as exc:
+        problems.append(f"ledger unreadable: {exc!r}")
 
     for p in problems:
         print(f"SYNC FAIL: {p}")
