@@ -87,3 +87,24 @@ def test_two_artifact_preexisting_waste_still_fails(tmp_path):
     (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps(art))
     (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps(art))
     assert _run_check(str(tmp_path)) == 1
+
+
+def test_bench_control_adjudication_thresholds():
+    """VERDICT r10 item 8: the bench artifact self-adjudicates host
+    drift — control > 1.5x pin tags the run host_contended, at/below
+    stays clean, and a missing control timing never raises."""
+    import bench
+
+    pin = bench.CONTROL_PINS[bench.CONTROL_QUERY]
+    hot = bench.control_adjudication(
+        {bench.CONTROL_QUERY: pin * 2.0})
+    assert hot["host_contended"] is True
+    assert hot["control"]["ratio"] == 2.0
+    cool = bench.control_adjudication(
+        {bench.CONTROL_QUERY: pin * 1.4})
+    assert cool["host_contended"] is False
+    # ADVICE r11 tightened the missing-control case from False to the
+    # tri-state null — test_advice_r11_regressions covers it in full
+    absent = bench.control_adjudication({})
+    assert absent["host_contended"] is None
+    assert absent["control"]["ratio"] is None

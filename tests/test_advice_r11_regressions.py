@@ -15,14 +15,15 @@
    (a documents table WITH a NULL-lang row) and runs the committed
    oracle SQL against an independent Python greedy fold.
 4. ``bench.control_adjudication`` failed OPEN on a missing control
-   timing; it is tri-state now (null = could not adjudicate), and
-   ``tests/test_measure.py`` covers it.
+   timing; it is tri-state now: ``host_contended`` is null and
+   ``control.status='unadjudicated'`` when it cannot adjudicate.
 """
 
 from __future__ import annotations
 
 import duckdb
 
+import bench
 from mapreducewordcounting_spark.registry import all_queries
 
 # ---------------------------------------------------------------- #
@@ -91,3 +92,24 @@ def test_pack_oracle_keeps_null_lang_docs(tmp_path):
     # the pathological rows specifically
     null_rows = [r for r in got if r[1] is None]
     assert len(null_rows) == 2, f"NULL-lang rows dropped: {got}"
+
+
+# ---------------------------------------------------------------- #
+# finding 4: control adjudication must fail CLOSED                  #
+# ---------------------------------------------------------------- #
+
+def test_control_adjudication_adjudicated_cases():
+    pin = bench.CONTROL_PINS[bench.CONTROL_QUERY]
+    hot = bench.control_adjudication({bench.CONTROL_QUERY: pin * 2.0})
+    assert hot["host_contended"] is True
+    assert hot["control"]["status"] == "adjudicated"
+    assert hot["drift_kind"] == "unclassified"
+    cool = bench.control_adjudication({bench.CONTROL_QUERY: pin * 1.0})
+    assert cool["host_contended"] is False
+    assert cool["control"]["status"] == "adjudicated"
+
+
+def test_control_adjudication_missing_timing_is_unadjudicated():
+    out = bench.control_adjudication({})
+    assert out["host_contended"] is None
+    assert out["control"]["status"] == "unadjudicated"

@@ -1,8 +1,7 @@
 """tools/measure.py: the one timing protocol bench.py and the tools
 share — warm once at WARM_SF_DIR, then time each run at the measured
 dir, releasing every pinned checkpoint on the way out — and the one
-cost reader; bench.py's control adjudication; bench_scale's decade
-ratios."""
+cost reader; bench_scale's decade ratios."""
 
 from __future__ import annotations
 
@@ -58,27 +57,6 @@ def test_cost_counts_jobs_executions_and_plan_nodes(spark):
     assert row["exchanges"] == 1
     assert row["hash_calls"] >= 1
     assert row["sort_merge_joins"] == row["python_udf_calls"] == 0
-
-
-def test_control_adjudication_hot_cool_and_missing():
-    """bench.py's host-contention flag against its constant pins: a
-    control over CONTROL_SLACK x its pin reads contended, at or under
-    reads clean, and a missing timing reads null (fail closed)."""
-    import bench
-
-    pin = bench.CONTROL_PINS[bench.CONTROL_QUERY]
-    hot = bench.control_adjudication({bench.CONTROL_QUERY: pin * 2.0})
-    assert hot["host_contended"] is True
-    assert hot["control"]["ratio"] == 2.0
-    assert hot["control"]["status"] == "adjudicated"
-    assert hot["drift_kind"] == "unclassified"
-    cool = bench.control_adjudication({bench.CONTROL_QUERY: pin * 1.4})
-    assert cool["host_contended"] is False
-    assert cool["control"]["status"] == "adjudicated"
-    absent = bench.control_adjudication({})
-    assert absent["host_contended"] is None
-    assert absent["control"]["ratio"] is None
-    assert absent["control"]["status"] == "unadjudicated"
 
 
 def test_decade_ratio_reported_without_sf01():
