@@ -953,11 +953,17 @@ def dedup_minhash_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     every short doc with every other short doc.
     """
     docs = load_table(spark, sf_dir, "documents")
-    # self-join below: without a lineage cut, both aliases re-derive
-    # the whole tokenize→shingle→signature pipeline (triangle-count
-    # lesson); the checkpoint is 4 tiny rows per doc
-    bands = minhash_band_rows(docs).localCheckpoint(eager=True)
-    a, bb = bands.alias("a"), bands.alias("b")
+    # The band rows are a map-only subtree, so the self-join must
+    # shuffle them to share them: merge-hinted, both sides read one
+    # (band, bkey) exchange that the final plan reuses (ReusedExchange)
+    # and tokenize + 8×md5 run once per doc. Unhinted, AQE plans a
+    # broadcast and the map pipeline runs once per side (input records
+    # 3,000 instead of 1,500 on the benchmark corpus). Against the
+    # eager checkpoint this replaced: jobs 4 → 3, input records
+    # 13,500 → 1,500, identical rows; the band rows now cross a shuffle
+    # (0.12 MiB) instead of a broadcast, as they must at scale.
+    bands = minhash_band_rows(docs)
+    a, bb = bands.alias("a"), bands.alias("b").hint("merge")
     return (
         a.join(bb, (F.col("a.band") == F.col("b.band"))
                & (F.col("a.bkey") == F.col("b.bkey"))
@@ -1089,15 +1095,20 @@ def dedup_simhash_det(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.struct(F.lit(3).alias("band"),
                  F.col("sig_lo").bitwiseAND(F.lit(65535)).alias("key")),
     )
-    # Lineage cut before the self-join (the module-wide lesson): both
-    # aliases would otherwise re-run explode + the 64-sum aggregate.
-    # What checkpoints is 4 rows of (band, key, id, 2×8-byte sig)/doc.
+    # No lineage cut before the self-join: both sides sit above the one
+    # ``votes`` exchange, which the final adaptive plan reuses
+    # (ReusedExchange), so scan + explode + partial sums run once. The
+    # probe side stays hash-partitioned by doc_id, so distinct() adds
+    # no exchange either. Measured against the checkpointed form on
+    # the benchmark corpus: jobs 5 → 3, input records 13,500 → 1,500,
+    # identical rows. Cost: each side runs the final phase of the
+    # 64-sum aggregate (warm runs ~0.5 s slower at sf0.1, within noise
+    # at derived sf1; BASELINE.md, "neardup checkpoint cuts").
     bands = (sig.select("doc_id", "sig_hi", "sig_lo",
                         F.explode(band_arr).alias("bs"))
              .select("doc_id", "sig_hi", "sig_lo",
                      F.col("bs.band").alias("band"),
-                     F.col("bs.key").alias("key"))
-             .localCheckpoint(eager=True))
+                     F.col("bs.key").alias("key")))
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(b, (F.col("a.band") == F.col("b.band"))

@@ -1251,9 +1251,11 @@ def similarity_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       carry near-zero idf mass anyway, never enter the index. This is
       the sparse analog of dedup_ngram_jaccard's prefix filter, and
       the knob that keeps the join linear in true-similar density.
-    - tf → df → weights reuse one shuffle (df derives from tf, the
-      tfidf lesson); the df table broadcasts; norms join on doc_id
-      (doc-count-sized — AQE broadcasts it at these SFs).
+    - tf is the one lineage cut: dfreq, the doc count and the
+      weights all read its checkpoint; the df and doc-count tables
+      broadcast once and are reused by the three consumers of the
+      weights; norms join on doc_id (doc-count-sized — AQE
+      broadcasts it at these SFs).
     - Cosine rounds to 6 digits on BOTH sides: double summation order
       differs per engine/topology, and ln is only ulp-reproducible —
       the same libm-parity contract as text_tfidf.
@@ -1264,14 +1266,19 @@ def similarity_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", _toks().alias("toks"))
     words = toks.select(
         "doc_id", F.explode(ngrams(F.col("toks"), 3)).alias("word"))
-    # r14 (guide §2.4): tf feeds three consumers (dfreq, the doc
-    # count, the weight projection) and the uncut plan re-ran the
-    # scan→tokenize→shingle→explode→tf pipeline once per consumer
-    # INSIDE the w-checkpoint job (the cut below only protects w's
-    # own consumers). Checkpointing the (doc, term) grain pays
-    # tokenize+shuffle once; the A/B at sf0.1 is in
-    # OPTIMIZATION_r14.md.
-    tf = (words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
+    # tf feeds three consumers (dfreq, the doc count, the weights).
+    # Column pruning gives each its own exchange over the tokenize
+    # pipeline, so AQE cannot share them: uncut, the query shuffled
+    # 3.26 MiB against 2.13 on the benchmark corpus (the sf0.1 A/B is
+    # in OPTIMIZATION_r14.md). The cut stays.
+    # 3-gram shingles almost never repeat inside a document (tf rows ÷
+    # shingle rows: 1.0000 on the benchmark corpus, 0.9989 at sf0.01,
+    # 0.9988 at sf0.1), so a (doc_id, word) map-side combine saves no
+    # rows and only adds a count column to every shuffled row: the
+    # count runs after a doc_id shuffle instead (shuffle 2.13 → 1.85
+    # MiB on the benchmark corpus).
+    tf = (words.repartition("doc_id")
+          .groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
           .localCheckpoint(eager=True))
     dfreq = tf.groupBy("word").agg(F.count("*").alias("df"))
     n_docs = tf.select(F.count_distinct("doc_id").alias("n_docs"))
@@ -1284,14 +1291,10 @@ def similarity_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  / (F.col("df") + 1.0))).alias("wt"),
         )
     )
-    # Three consumers (norms + both self-join sides) and AQE alias
-    # canonicalization defeats ReusedExchange here — without a lineage
-    # cut the tokenize→shingle→explode→tf pipeline executes up to 12×
-    # (12 Generate nodes in the uncut plan). This checkpoint protects
-    # the expensive subtree, unlike the jaccard prefix index (A/B'd
-    # the other way) — same discipline, opposite verdict.
-    w = w.localCheckpoint(eager=True)
-    release(tf)  # the result reads only ``w``
+    # w has three consumers (norms + both self-join sides) but no cut:
+    # above the tf checkpoint each re-runs only a join over tf blocks,
+    # and the dfreq and n_docs broadcasts are reused across all three.
+    # Against a second checkpoint here: jobs 13 → 12, identical rows.
     norms = w.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm"))
     a, b = w.alias("a"), w.alias("b")

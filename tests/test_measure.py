@@ -9,7 +9,7 @@ import statistics
 
 from mapreducewordcounting_spark.checkpoints import n_pinned
 from tools.bench_scale import decade_ratios
-from tools.measure import WARM_SF_DIR, measure
+from tools.measure import WARM_SF_DIR, measure, row_delta
 
 
 def test_measure_warms_then_times_and_releases(spark):
@@ -57,6 +57,14 @@ def test_cost_counts_jobs_executions_and_plan_nodes(spark):
     assert row["exchanges"] == 1
     assert row["hash_calls"] >= 1
     assert row["sort_merge_joins"] == row["python_udf_calls"] == 0
+
+
+def test_row_delta_names_changed_fields_in_row_order():
+    old = {"jobs": 5, "sql_executions": 1, "exchanges": 2}
+    assert row_delta(old, {"jobs": 3, "sql_executions": 1,
+                           "exchanges": 1}) == "jobs 5→3, exchanges 2→1"
+    assert row_delta(old, dict(old)) == "unchanged"
+    assert row_delta(None, old) == "new row, 5 jobs"
 
 
 def test_decade_ratio_reported_without_sf01():

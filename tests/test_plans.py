@@ -853,3 +853,28 @@ def test_neardup_pair_core_exchanges_are_thin(spark, sf_dir):
     for fn in (dedup_ngram_jaccard, dedup_containment_pairs):
         for fat in exchange_array_columns(fn(spark, sf_dir)):
             assert fat == [], (fn.__name__, fat)
+
+
+def test_band_self_joins_scan_corpus_once(spark, sf_dir):
+    """dedup_minhash_det / dedup_simhash_det: both sides of the band
+    self-join sit above one shared exchange, so the final adaptive plan
+    scans the corpus once and reads the other side as a ReusedExchange,
+    with no eager checkpoint (Scan ExistingRDD) in between. simhash
+    shares its doc_id vote exchange; minhash's band rows are map-only
+    and share only because the join is merge-hinted. An unhinted
+    minhash join plans a broadcast and scans (and tokenizes) twice; the
+    checkpointed forms read 0 scans and 2 ExistingRDD each."""
+    from mapreducewordcounting_spark.operators.dedup import (
+        dedup_minhash_det,
+        dedup_simhash_det,
+    )
+
+    for fn in (dedup_minhash_det, dedup_simhash_det):
+        df = fn(spark, sf_dir)
+        df.collect()
+        plan = simple_plan(df)
+        assert "isFinalPlan=true" in plan, fn.__name__
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("FileScan parquet") == 1, (fn.__name__, final)
+        assert final.count("ReusedExchange") == 1, (fn.__name__, final)
+        assert "Scan ExistingRDD" not in final, (fn.__name__, final)

@@ -31,7 +31,9 @@ Subcommands:
   (``{query: row}``). Loads every table once at ``LEDGER_SF_DIR``
   (first loads infer schemas, a job the queries then never run), then
   per query: build, ``collect()``, record the row, release its pinned
-  checkpoints. With names, only those rows are re-recorded.
+  checkpoints, and print the fields that changed against the committed
+  row (``dedup_simhash_det: jobs 5→3, exchanges 2→1``). With names,
+  only those rows are re-recorded.
   ``tests/test_registry_oracle.py`` asserts every row exactly, so a
   ledger update is a reviewed diff, like a plan change.
 * ``probe``: is the host clean right now? Times only the two bench
@@ -186,6 +188,16 @@ def warm_tables(spark, sf_dir: str) -> None:
         load_table(spark, sf_dir, table)
 
 
+def row_delta(old: dict | None, new: dict) -> str:
+    """The fields of ``new`` that differ from the committed ``old`` row,
+    as ``jobs 5→3, exchanges 2→1``."""
+    if old is None:
+        return f"new row, {new['jobs']} jobs"
+    fields = [*new, *(k for k in old if k not in new)]
+    return ", ".join(f"{k} {old.get(k)}→{new.get(k)}" for k in fields
+                     if old.get(k) != new.get(k)) or "unchanged"
+
+
 def ledger(spark, names: list[str]) -> int:
     from mapreducewordcounting_spark.registry import all_queries
 
@@ -194,17 +206,17 @@ def ledger(spark, names: list[str]) -> int:
     if unknown:
         print(f"unknown queries: {unknown}")
         return 2
-    rows: dict[str, dict] = {}
-    if names:
-        with open(LEDGER_PATH) as f:
-            rows = json.load(f)
+    with open(LEDGER_PATH) as f:
+        committed: dict[str, dict] = json.load(f)
+    rows = dict(committed) if names else {}
     warm_tables(spark, LEDGER_SF_DIR)
     for name in names or specs:
         with cost(spark, f"ledger {name}") as row:
             specs[name].fn(spark, LEDGER_SF_DIR).collect()
         release_all_pinned(spark)
         rows[name] = row
-        print(f"{name}: {row['jobs']} jobs", file=sys.stderr, flush=True)
+        print(f"{name}: {row_delta(committed.get(name), row)}",
+              file=sys.stderr, flush=True)
     with open(LEDGER_PATH, "w") as f:  # one line per query: diffs by query
         f.write("{\n" + ",\n".join(
             f" {json.dumps(name)}: {json.dumps(row)}"

@@ -122,6 +122,8 @@ BNL_ALLOWED = {
                          "date+k equi condition on a broadcast "
                          "|days|-row side)",
     "similarity_topk_bruteforce": "K-row (query vector set)",
+    "similarity_tfidf_pairs": "1-row (n_docs corpus count attached to "
+                              "the tf-idf weights)",
     "similarity_ann_recall_report": "K-row (composes the two audited "
                                     "forms above: brute-force query-"
                                     "vector NL + IVF centroid/stride "
