@@ -1245,17 +1245,24 @@ def similarity_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     term exists (never the O(n²) pair space), normalized by per-doc
     norms.
 
-    Scale structure:
-    - The posting-list prune (``df <= 20``) bounds the term
-      self-join's fan-out at df² per term — hot stop-terms, which
-      carry near-zero idf mass anyway, never enter the index. This is
-      the sparse analog of dedup_ngram_jaccard's prefix filter, and
-      the knob that keeps the join linear in true-similar density.
-    - tf is the one lineage cut: dfreq, the doc count and the
-      weights all read its checkpoint; the df and doc-count tables
-      broadcast once and are reused by the three consumers of the
-      weights; norms join on doc_id (doc-count-sized — AQE
-      broadcasts it at these SFs).
+    Scale structure — one shuffle on the term, as the reference's word
+    count (PAPER.md §1.1):
+    - The shingle rows hash-partition once by ``word``. tf
+      (``word, doc_id``), the posting lists (``word``) and the doc
+      count all aggregate above that one exchange; AQE reuses it, so
+      the corpus is scanned and tokenized once and no checkpoint is
+      needed.
+    - The posting-list prune (``df <= 20``) bounds each term's pair
+      fan-out at df² — hot stop-terms, which carry near-zero idf mass
+      anyway, never enter the index. This is the sparse analog of
+      dedup_ngram_jaccard's prefix filter. A per-term
+      ``row_number() <= 21`` (planned as ``WindowGroupLimit``) caps
+      what a hot term buffers before its list is collected; a kept
+      list of at most 20 is exactly df <= 20.
+    - Each kept list carries its term's idf, so a posting's weight is
+      ``tf * idf``; pairs come from exploding the list twice
+      (``a.doc_id < b.doc_id``), norms from one doc_id aggregate over
+      the exploded weights.
     - Cosine rounds to 6 digits on BOTH sides: double summation order
       differs per engine/topology, and ln is only ulp-reproducible —
       the same libm-parity contract as text_tfidf.
@@ -1264,52 +1271,52 @@ def similarity_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", _toks().alias("toks"))
-    words = toks.select(
-        "doc_id", F.explode(ngrams(F.col("toks"), 3)).alias("word"))
-    # tf feeds three consumers (dfreq, the doc count, the weights).
-    # Column pruning gives each its own exchange over the tokenize
-    # pipeline, so AQE cannot share them: uncut, the query shuffled
-    # 3.26 MiB against 2.13 on the benchmark corpus (the sf0.1 A/B is
-    # in OPTIMIZATION_r14.md). The cut stays.
-    # 3-gram shingles almost never repeat inside a document (tf rows ÷
-    # shingle rows: 1.0000 on the benchmark corpus, 0.9989 at sf0.01,
-    # 0.9988 at sf0.1), so a (doc_id, word) map-side combine saves no
-    # rows and only adds a count column to every shuffled row: the
-    # count runs after a doc_id shuffle instead (shuffle 2.13 → 1.85
-    # MiB on the benchmark corpus).
-    tf = (words.repartition("doc_id")
-          .groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
-          .localCheckpoint(eager=True))
-    dfreq = tf.groupBy("word").agg(F.count("*").alias("df"))
+    # Every consumer below reads one aggregate above this exchange. A
+    # separate df aggregate joined back to tf does not share it: column
+    # pruning gives each side its own exchange, and each re-runs the
+    # scan and tokenizer. tf counts after the exchange: 3-gram shingles
+    # almost never repeat inside a document (tf rows ÷ shingle rows
+    # 0.9988 at sf0.1), so a map-side combine would save no rows.
+    words = (toks.select("doc_id",
+                         F.explode(ngrams(F.col("toks"), 3)).alias("word"))
+             .repartition("word"))
+    tf = words.groupBy("word", "doc_id").agg(F.count("*").alias("tf"))
     n_docs = tf.select(F.count_distinct("doc_id").alias("n_docs"))
-    w = (
-        tf.join(F.broadcast(dfreq.filter(F.col("df") <= TFIDF_DF_CAP)), "word")
+    in_term = Window.partitionBy("word").orderBy("doc_id")
+    postings = (
+        tf.withColumn("rk", F.row_number().over(in_term))
+        .filter(F.col("rk") <= TFIDF_DF_CAP + 1)
+        .groupBy("word")
+        .agg(F.collect_list(F.struct("doc_id", "tf")).alias("post"))
+        .filter(F.size("post") <= TFIDF_DF_CAP)
         .crossJoin(F.broadcast(n_docs))
-        .select(
-            "doc_id", "word",
-            (F.col("tf") * F.log((F.col("n_docs") + 1.0)
-                                 / (F.col("df") + 1.0))).alias("wt"),
-        )
+        .select("post", F.log((F.col("n_docs") + 1.0)
+                              / (F.size("post") + 1.0)).alias("idf"))
     )
-    # w has three consumers (norms + both self-join sides) but no cut:
-    # above the tf checkpoint each re-runs only a join over tf blocks,
-    # and the dfreq and n_docs broadcasts are reused across all three.
-    # Against a second checkpoint here: jobs 13 → 12, identical rows.
-    norms = w.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm"))
-    a, b = w.alias("a"), w.alias("b")
+
+    def wt(p: str) -> "F.Column":
+        return F.col(f"{p}.tf") * F.col("idf")
+
+    w = postings.select(F.explode("post").alias("a"), "post", "idf")
+    norms = w.groupBy(F.col("a.doc_id").alias("doc_id")).agg(
+        F.sqrt(F.sum(wt("a") * wt("a"))).alias("nrm"))
     dots = (
-        a.join(b, (F.col("a.word") == F.col("b.word"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        w.select("a", "idf", F.explode("post").alias("b"))
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .groupBy(F.col("a.doc_id").alias("id_a"),
                  F.col("b.doc_id").alias("id_b"))
-        .agg(F.sum(F.col("a.wt") * F.col("b.wt")).alias("dot"))
+        .agg(F.sum(wt("a") * wt("b")).alias("dot"))
     )
     na = norms.select(F.col("doc_id").alias("id_a"), F.col("nrm").alias("nrm_a"))
     nb = norms.select(F.col("doc_id").alias("id_b"), F.col("nrm").alias("nrm_b"))
     cos = F.col("dot") / (F.col("nrm_a") * F.col("nrm_b"))
     return (
-        dots.join(na, "id_a").join(nb, "id_b")
+        # norms is doc-count-sized (16 B a doc) and broadcast-hinted:
+        # unhinted, AQE broadcast whichever of norms and the pairs
+        # finished first, so the plan and its job count changed from
+        # run to run; a merge join instead shuffles the pairs twice
+        # (sf0.1 shuffle 6.9 → 17.0 MiB)
+        dots.join(F.broadcast(na), "id_a").join(F.broadcast(nb), "id_b")
         # threshold on the ROUNDED cosine: the raw double is summation-
         # order- and libm-sensitive, so an unrounded >= could flip pair
         # membership between engines at the boundary

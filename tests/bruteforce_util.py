@@ -17,8 +17,9 @@ documented spec only:
 
 from __future__ import annotations
 
+import math
 import re
-from collections import Counter
+from collections import Counter, defaultdict
 
 import pyarrow.parquet as pq
 
@@ -70,3 +71,37 @@ def round6(x: float) -> float:
 
     return float(Decimal(repr(x)).quantize(Decimal("0.000001"),
                                            rounding=ROUND_HALF_UP))
+
+
+def tfidf_pair_cosines(toks: dict[int, list[str]], df_cap: int,
+                       cos_min: float) -> list[tuple[int, int, float]]:
+    """Sparse tf-idf cosine over 3-shingle terms, from the definition:
+    tf = shingle count in a doc, idf = ln((n_docs + 1) / (df + 1)) over
+    the docs with at least one shingle, only terms with df <= df_cap
+    weighted; sorted ``(id_a, id_b, cos)`` for id_a < id_b at rounded
+    cosine >= cos_min."""
+    tf = {d: Counter(word_ngrams(t, 3)) for d, t in toks.items()}
+    tf = {d: c for d, c in tf.items() if c}
+    df: Counter = Counter()
+    for c in tf.values():
+        df.update(c.keys())
+    n_docs = len(tf)
+    w = {d: {g: f * math.log((n_docs + 1.0) / (df[g] + 1.0))
+             for g, f in c.items() if df[g] <= df_cap}
+         for d, c in tf.items()}
+    nrm = {d: math.sqrt(sum(x * x for x in ws.values()))
+           for d, ws in w.items() if ws}
+    inv: dict[str, list[int]] = defaultdict(list)
+    for d, ws in w.items():
+        for g in ws:
+            inv[g].append(d)
+    dots: dict[tuple[int, int], float] = defaultdict(float)
+    for g, ds in inv.items():
+        ds.sort()
+        for i, a in enumerate(ds):
+            for b in ds[i + 1:]:
+                dots[(a, b)] += w[a][g] * w[b][g]
+    return sorted(
+        (a, b, round(dot / (nrm[a] * nrm[b]), 6))
+        for (a, b), dot in dots.items()
+        if round(dot / (nrm[a] * nrm[b]), 6) >= cos_min)

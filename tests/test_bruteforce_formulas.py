@@ -27,6 +27,7 @@ from tests.bruteforce_util import (
     load_table_rows,
     round6,
     rows_as_tuples,
+    tfidf_pair_cosines,
     word_ngrams,
 )
 import pytest
@@ -148,35 +149,13 @@ def test_tfidf_pair_cosine_matches_python(spark, sf_dir):
     """Sparse tf-idf cosine over 3-shingle 'words' with the df <= 20
     cap; pairs at rounded cosine >= 0.3."""
     from mapreducewordcounting_spark.operators.similarity import (
+        TFIDF_COS_MIN,
+        TFIDF_DF_CAP,
         similarity_tfidf_pairs,
     )
 
-    toks = doc_tokens(sf_dir)
-    tf = {d: Counter(word_ngrams(t, 3)) for d, t in toks.items()}
-    tf = {d: c for d, c in tf.items() if c}
-    df: Counter = Counter()
-    for c in tf.values():
-        df.update(c.keys())
-    n_docs = len(tf)
-    w = {d: {g: f * math.log((n_docs + 1.0) / (df[g] + 1.0))
-             for g, f in c.items() if df[g] <= 20}
-         for d, c in tf.items()}
-    nrm = {d: math.sqrt(sum(x * x for x in ws.values()))
-           for d, ws in w.items() if ws}
-    inv: dict[str, list[int]] = defaultdict(list)
-    for d, ws in w.items():
-        for g in ws:
-            inv[g].append(d)
-    dots: dict[tuple[int, int], float] = defaultdict(float)
-    for g, ds in inv.items():
-        ds.sort()
-        for i, a in enumerate(ds):
-            for bdoc in ds[i + 1:]:
-                dots[(a, bdoc)] += w[a][g] * w[bdoc][g]
-    expected = sorted(
-        (a, bdoc, round(dot / (nrm[a] * nrm[bdoc]), 6))
-        for (a, bdoc), dot in dots.items()
-        if round(dot / (nrm[a] * nrm[bdoc]), 6) >= 0.3)
+    expected = tfidf_pair_cosines(doc_tokens(sf_dir), TFIDF_DF_CAP,
+                                  TFIDF_COS_MIN)
     got = rows_as_tuples(similarity_tfidf_pairs(spark, sf_dir),
                          ["id_a", "id_b", "cos_sim"])
     assert [r[:2] for r in got] == [r[:2] for r in expected]

@@ -59,6 +59,74 @@ def test_cost_counts_jobs_executions_and_plan_nodes(spark):
     assert row["sort_merge_joins"] == row["python_udf_calls"] == 0
 
 
+#: an adaptive self-join's formatted description, cut to its skeleton:
+#: the final plan reads the second side as a reused exchange, and the
+#: initial plan lists the md5 pipeline once per side
+_ADAPTIVE_SELF_JOIN = """== Physical Plan ==
+AdaptiveSparkPlan (8)
++- == Final Plan ==
+   SortMergeJoin Inner (5)
+   :- ShuffleQueryStage (3)
+   :  +- Exchange (2)
+   :     +- Project (1)
+   +- ShuffleQueryStage (4)
+      +- ReusedExchange (9)
++- == Initial Plan ==
+   SortMergeJoin Inner (7)
+   :- Exchange (2)
+   :  +- Project (1)
+   +- Exchange (6)
+      +- Project (10)
+
+
+(1) Project
+Output [2]: [k#1, md5(cast(t#0 as binary)) AS h#2, pythonUDF0#3]
+
+(2) Exchange
+Arguments: hashpartitioning(k#1, 4)
+
+(3) ShuffleQueryStage
+Output [2]: [k#1, h#2]
+
+(4) ShuffleQueryStage
+Output [2]: [k#4, h#5]
+
+(5) SortMergeJoin
+Join condition: None
+
+(6) Exchange
+Arguments: hashpartitioning(k#4, 4)
+
+(7) SortMergeJoin
+Join condition: None
+
+(8) AdaptiveSparkPlan
+Arguments: isFinalPlan=true
+
+(9) ReusedExchange [Reuses operator id: 2]
+Output [2]: [k#4, h#5]
+
+(10) Project
+Output [2]: [k#4, md5(cast(t#6 as binary)) AS h#5, pythonUDF0#7]
+
+"""
+
+
+def test_expression_counts_read_the_final_plan_only():
+    """The initial plan's second md5 pipeline (10) never ran: the final
+    plan reuses the first side's exchange. A description with no final
+    section (a plan AQE did not wrap) is counted whole."""
+    from tools.measure import expression_counts
+
+    assert expression_counts(_ADAPTIVE_SELF_JOIN) == {
+        "hof_aggregate": 0, "hash_calls": 1, "raise_error": 0,
+        "python_udf_calls": 1}
+    plain = (_ADAPTIVE_SELF_JOIN.replace("== Final Plan ==", "")
+             .replace("== Initial Plan ==", ""))
+    assert expression_counts(plain)["hash_calls"] == 2
+    assert expression_counts(plain)["python_udf_calls"] == 2
+
+
 def test_row_delta_names_changed_fields_in_row_order():
     old = {"jobs": 5, "sql_executions": 1, "exchanges": 2}
     assert row_delta(old, {"jobs": 3, "sql_executions": 1,

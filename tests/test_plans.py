@@ -7,6 +7,8 @@ These are the properties that decide whether a plan survives a
 
 from __future__ import annotations
 
+import re
+
 from mapreducewordcounting_spark.operators.relational import (
     agg_suite,
     filter_project,
@@ -878,3 +880,30 @@ def test_band_self_joins_scan_corpus_once(spark, sf_dir):
         assert final.count("FileScan parquet") == 1, (fn.__name__, final)
         assert final.count("ReusedExchange") == 1, (fn.__name__, final)
         assert "Scan ExistingRDD" not in final, (fn.__name__, final)
+
+
+def test_tfidf_consumers_share_one_word_exchange(spark, sf_dir):
+    """similarity_tfidf_pairs: tf, the posting lists, the norms, the
+    pairs and the doc count all read one ``word`` exchange, so the
+    final adaptive plan scans the corpus once, reuses the exchange, and
+    holds no eager checkpoint (Scan ExistingRDD). Each posting list is
+    bounded at TFIDF_DF_CAP + 1 rows by a WindowGroupLimit before it is
+    collected. A df aggregate joined back to tf gets its own exchange
+    (column pruning) and re-scans the corpus."""
+    from mapreducewordcounting_spark.operators.similarity import (
+        TFIDF_DF_CAP,
+        similarity_tfidf_pairs,
+    )
+
+    df = similarity_tfidf_pairs(spark, sf_dir)
+    df.collect()
+    plan = simple_plan(df)
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FileScan parquet") == 1, final
+    assert "Scan ExistingRDD" not in final, final
+    assert re.search(r"ReusedExchange \[[^\]]*\], Exchange "
+                     r"hashpartitioning\(word#\d+, \d+\), REPARTITION_BY_COL",
+                     final), final
+    limits = re.findall(r"WindowGroupLimit \[word#\d+\], .*?, (\d+), ", final)
+    assert limits and set(limits) == {str(TFIDF_DF_CAP + 1)}, final

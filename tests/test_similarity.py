@@ -1,15 +1,27 @@
 """Recall tests for the approximate similarity paths vs brute force
 (the fixture embeddings are near-random — max pairwise cosine ≈ 0.51 —
-so bars are structural, not quality claims)."""
+so bars are structural, not quality claims), and the df-cap boundary
+of the sparse tf-idf index on a hand-built corpus."""
 
 from __future__ import annotations
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from mapreducewordcounting_spark.operators.similarity import (
     K,
     N_QUERIES,
+    TFIDF_COS_MIN,
+    TFIDF_DF_CAP,
     similarity_ann_ivf,
     similarity_ann_lsh,
+    similarity_tfidf_pairs,
     similarity_topk_bruteforce,
+)
+from tests.bruteforce_util import (
+    doc_tokens,
+    rows_as_tuples,
+    tfidf_pair_cosines,
 )
 
 
@@ -200,3 +212,37 @@ def test_sf1_recall_floors(spark):
         recall = hits / denom
         assert recall >= floor, (
             f"{fn.__name__} sf1 recall {recall:.2f} < floor {floor}")
+
+
+def test_tfidf_df_cap_boundary(spark, tmp_path):
+    """The per-term group limit keeps TFIDF_DF_CAP + 1 postings, which
+    must never change df: a trigram in exactly TFIDF_DF_CAP docs is
+    weighted, one in TFIDF_DF_CAP + 1 docs is dropped, and a trigram
+    repeated inside one doc weighs tf = 2. Checked against the Python
+    formula on a hand-built corpus."""
+    cap = TFIDF_DF_CAP
+    texts = {d: "aa bb cc dd ee ff" + (" gg" if d % 2 else "")
+             for d in range(1, cap + 1)}      # 'aa bb cc': df == cap
+    texts[cap + 1] = "dd ee ff"               # 'dd ee ff': df == cap + 1
+    texts[100] = "gg hh ii gg hh ii"          # 'gg hh ii': tf == 2
+    texts[101] = "gg hh ii jj"
+    texts[102] = "zz"                         # no trigram: not a doc
+    ids = sorted(texts)
+    pq.write_table(pa.table({
+        "doc_id": pa.array(ids, pa.int64()),
+        "text": [texts[d] for d in ids],
+        "lang": ["en"] * len(ids),
+        "source": ["web"] * len(ids),
+        "n_chars": pa.array([len(texts[d]) for d in ids], pa.int64()),
+    }), tmp_path / "documents.parquet")
+
+    expected = tfidf_pair_cosines(doc_tokens(str(tmp_path)), cap,
+                                  TFIDF_COS_MIN)
+    pairs = [r[:2] for r in expected]
+    assert (1, 3) in pairs and (2, 4) in pairs and (100, 101) in pairs
+    assert not any(cap + 1 in p for p in pairs)
+    got = rows_as_tuples(similarity_tfidf_pairs(spark, str(tmp_path)),
+                         ["id_a", "id_b", "cos_sim"])
+    assert [r[:2] for r in got] == pairs
+    for g, e in zip(got, expected):
+        assert abs(g[2] - e[2]) < 1e-6

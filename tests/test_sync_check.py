@@ -1,13 +1,17 @@
 """tools/sync_check.py's doc checks: the SCALING.md "Session defaults"
 table must quote the shipped value of every conf session.py sets, and
 the env var of every knob it reads from the environment (check 7), and
-every quoted ``tools/<name>.py`` path must exist (check 8)."""
+every quoted ``tools/<name>.py`` path must exist (check 8), and
+SCALING.md must state the package's checkpoint call-site count
+(check 10)."""
 
 from __future__ import annotations
 
 import os
 
 from tools.sync_check import (
+    checkpoint_call_sites,
+    checkpoint_count_problems,
     dangling_tool_refs,
     scaling_problems,
     tool_ref_sources,
@@ -73,3 +77,17 @@ def test_dangling_tool_path_is_flagged():
     sources["README.md"] += "\npython tools/ab_greedy_route.py\n"
     assert dangling_tool_refs(sources, REPO) == [
         "README.md: quotes missing tools/ab_greedy_route.py"]
+
+
+def test_scaling_states_the_checkpoint_call_site_count():
+    n = checkpoint_call_sites(REPO)
+    scaling = _read("SCALING.md")
+    assert checkpoint_count_problems(scaling, n) == []
+    stated = f"{n} `.localCheckpoint(` call sites"
+    assert checkpoint_count_problems(
+        scaling.replace(stated, f"{n + 1} `.localCheckpoint(` call sites"),
+        n) == [f"SCALING.md states ['{n + 1}'] `.localCheckpoint(` call "
+               f"sites, the package has {n}"]
+    assert checkpoint_count_problems(scaling.replace(stated, "the"), n) == [
+        f"SCALING.md states no `.localCheckpoint(` call sites, the package "
+        f"has {n}"]

@@ -21,7 +21,8 @@ multi-query sweep runs first.
 under a fresh job group and fills ``row`` with exact counts that host
 load cannot move — Spark jobs (the dataflow's rounds), SQL executions,
 plan-graph operators (exchanges, joins, Python-eval nodes) and plan
-expressions (HOF folds, hash calls, raise_error, Python UDF calls).
+expressions (HOF folds, hash calls, raise_error, Python UDF calls) in
+the executed (final) plan.
 Stages, tasks and shuffle bytes are left out: they vary with core
 count and run order, and the status store evicts skipped stages.
 
@@ -87,6 +88,11 @@ EXPRESSIONS = {
 }
 #: a Python UDF's result attribute; counted once per distinct call
 _PYTHON_UDF = re.compile(r"\bpythonUDF\d+#\d+")
+#: an adaptive plan's final or initial operator tree, up to the next
+#: section header or the blank line that ends the tree
+_PLAN_TREE = re.compile(
+    r"== (Final|Initial) Plan ==\n(.*?)(?=\n\+- == |\n\n|\Z)", re.S)
+_NODE_ID = re.compile(r"\((\d+)\)")
 _JOB_PROPS = ("spark.jobGroup.id", "spark.job.description",
               "spark.job.interruptOnCancel")
 
@@ -135,6 +141,32 @@ def measure(spark, query_fn, sf_dir: str, runs: int = 3,
     return round(statistics.median(samples), 3), samples
 
 
+def final_plan(description: str) -> str:
+    """A formatted physical plan description without the node details
+    that only its ``== Initial Plan ==`` lists. An adaptive plan lists
+    a pipeline's details in both plans, and in the initial plan once
+    per side of a join that the final plan reads as a reused exchange,
+    so counting the whole text counts one pipeline up to three times.
+    A plan with no final section is returned whole."""
+    trees = {"Final": set(), "Initial": set()}
+    for kind, tree in _PLAN_TREE.findall(description):
+        trees[kind].update(_NODE_ID.findall(tree))
+    initial_only = trees["Initial"] - trees["Final"]
+    blocks = re.split(r"\n(?=\(\d+\) )", description)
+    return "\n".join(b for b in blocks
+                     if not (m := _NODE_ID.match(b))
+                     or m.group(1) not in initial_only)
+
+
+def expression_counts(description: str) -> dict[str, int]:
+    """The row's expression fields, read from the final plan only."""
+    plan = final_plan(description)
+    counts = {field: len(pattern.findall(plan))
+              for field, pattern in EXPRESSIONS.items()}
+    counts["python_udf_calls"] = len(set(_PYTHON_UDF.findall(plan)))
+    return counts
+
+
 def _last_execution_id(store) -> int:
     n = store.executionsCount()
     return store.executionsList(n - 1, 1).head().executionId() if n else -1
@@ -173,10 +205,10 @@ def cost(spark, label: str = "cost"):
             field = OPERATORS.get(node.name())
             if field:
                 row[field] += 1
-        plan = store.execution(eid).get().physicalPlanDescription()
-        for field, pattern in EXPRESSIONS.items():
-            row[field] += len(pattern.findall(plan))
-        row["python_udf_calls"] += len(set(_PYTHON_UDF.findall(plan)))
+        counts = expression_counts(
+            store.execution(eid).get().physicalPlanDescription())
+        for field, n in counts.items():
+            row[field] += n
 
 
 def warm_tables(spark, sf_dir: str) -> None:

@@ -123,7 +123,8 @@ BNL_ALLOWED = {
                          "|days|-row side)",
     "similarity_topk_bruteforce": "K-row (query vector set)",
     "similarity_tfidf_pairs": "1-row (n_docs corpus count attached to "
-                              "the tf-idf weights)",
+                              "the capped posting lists, whose weights "
+                              "it scales)",
     "similarity_ann_recall_report": "K-row (composes the two audited "
                                     "forms above: brute-force query-"
                                     "vector NL + IVF centroid/stride "

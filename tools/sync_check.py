@@ -27,6 +27,9 @@ Checks (all against the live registry import):
      bench.py, tools/*.py or the package sources exists, so a deleted
      tool leaves no stale instructions behind
   9. tools/ledger.json holds one cost row per registry query, no more
+ 10. SCALING.md's stated count of ``.localCheckpoint(`` call sites
+     equals the calls in the package sources (comments and docstrings
+     that quote the call do not count)
 
 `python tools/sync_check.py` exits non-zero on the first disagreement;
 `make sync-check` is an alias and `tools/check.py` runs it as its
@@ -133,6 +136,30 @@ def dangling_tool_refs(sources: dict[str, str], repo: str) -> list[str]:
     return problems
 
 
+def checkpoint_call_sites(repo: str) -> int:
+    """``.localCheckpoint(...)`` calls in the package sources."""
+    n = 0
+    for path in glob.glob(os.path.join(repo, "mapreducewordcounting_spark",
+                                       "**", "*.py"), recursive=True):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        n += sum(isinstance(node, ast.Call)
+                 and isinstance(node.func, ast.Attribute)
+                 and node.func.attr == "localCheckpoint"
+                 for node in ast.walk(tree))
+    return n
+
+
+def checkpoint_count_problems(scaling: str, n_calls: int) -> list[str]:
+    """SCALING.md must state the package's ``.localCheckpoint(`` call
+    site count exactly once, and state it right."""
+    stated = re.findall(r"(\d+) `\.localCheckpoint\(` call sites", scaling)
+    if stated == [str(n_calls)]:
+        return []
+    return [f"SCALING.md states {stated or 'no'} `.localCheckpoint(` call "
+            f"sites, the package has {n_calls}"]
+
+
 def main() -> int:
     import __spark_entry__ as entry
 
@@ -234,6 +261,10 @@ def main() -> int:
                 " (run: python tools/measure.py ledger)")
     except Exception as exc:
         problems.append(f"ledger unreadable: {exc!r}")
+
+    # 10. SCALING.md's checkpoint call-site count
+    problems += checkpoint_count_problems(read("SCALING.md"),
+                                          checkpoint_call_sites(REPO))
 
     for p in problems:
         print(f"SYNC FAIL: {p}")
