@@ -193,17 +193,28 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
     # inlining the tokenizer there makes Spark re-run split+regexp per
     # access — O(tokens²) per doc, measured 47 s vs 3 s at sf0.1.
     sc = list(shard_cols)
+    keys = ["doc_id", *sc]
+    # One doc_id exchange serves every consumer: the frequency count,
+    # the prefix window and both verify sides all read the shingle
+    # sets this aggregate rebuilds, so the scan and tokenizer run once
+    # and no checkpoint is needed. Two things keep the exchange shared:
+    # - the aggregate: consumers reading the repartitioned rows
+    #   directly prune different columns and get one exchange each;
+    # - the explicit not-null filter: without it the joins' inferred
+    #   isnotnull filters are pushed below the exchange under some
+    #   consumers only (2 exchanges and 2 scans at sf0.01). It drops
+    #   no result row: a null doc_id or shard key never pairs.
     sh = (
-        docs.select("doc_id", *sc, _toks().alias("toks"))
-        .select("doc_id", *sc, shingles(F.col("toks")).alias("shingles"))
-        .withColumn("n_sh", F.size("shingles")).filter(F.col("n_sh") > 0)
-        # materialized once: three plan branches (inverted index + both
-        # verify sides) would otherwise re-run tokenize+shingle per use
-        .localCheckpoint(eager=True)
+        docs.select(*keys, _toks().alias("toks"))
+        .select(*keys, F.explode(shingles(F.col("toks"))).alias("shingle"))
+        .filter(reduce(lambda x, y: x & y,
+                       [F.col(c).isNotNull() for c in (*keys, "shingle")]))
+        .repartition("doc_id")
+        .groupBy(*keys).agg(F.collect_list("shingle").alias("shingles"))
+        .withColumn("n_sh", F.size("shingles"))
     )
 
-    exploded = sh.select("doc_id", *sc, "n_sh",
-                         F.explode("shingles").alias("shingle"))
+    exploded = sh.select(*keys, "n_sh", F.explode("shingles").alias("shingle"))
     # Shingle frequency stays a groupBy (map-side partial agg absorbs
     # hot-shingle skew BEFORE the exchange — this corpus has a 31-word
     # vocabulary, so per-shingle row counts are brutally skewed), and
@@ -240,11 +251,9 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
         .filter(F.col("pos") <= prefix_len)
         .select("doc_id", *sc, "n_sh", "shingle")
         # NOT checkpointed, deliberately: both self-join sides re-derive
-        # this (freq join + window over the already-checkpointed
-        # explode), but that recompute is cheaper than a materialization
-        # barrier — measured 2.8-3.6 s without vs 3.6-4.9 s with at
-        # sf0.1. The expensive upstream (tokenize→shingle) is what the
-        # ``sh`` checkpoint above protects.
+        # this (freq join + window over the shared doc_id aggregate),
+        # but that recompute is cheaper than a materialization barrier
+        # — measured 2.8-3.6 s without vs 3.6-4.9 s with at sf0.1.
         # Also A/B'd: generating candidate pairs MAP-SIDE from
         # per-shingle collect_list arrays (the basket_pair_affinity
         # shape, one less exchange) measured 4.4 s vs 3.5 s warm for

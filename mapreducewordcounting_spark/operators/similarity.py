@@ -1260,9 +1260,11 @@ def similarity_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       what a hot term buffers before its list is collected; a kept
       list of at most 20 is exactly df <= 20.
     - Each kept list carries its term's idf, so a posting's weight is
-      ``tf * idf``; pairs come from exploding the list twice
-      (``a.doc_id < b.doc_id``), norms from one doc_id aggregate over
-      the exploded weights.
+      ``tf * idf``. Exploding the list twice (``a.doc_id <= b.doc_id``)
+      feeds one pair aggregate: its off-diagonal rows are the dot
+      products, and its diagonal rows (``id_a = id_b``) are the squared
+      norms, so the tf aggregate, the per-term sort and the list build
+      run once. Both norms joins read one broadcast of the diagonal.
     - Cosine rounds to 6 digits on BOTH sides: double summation order
       differs per engine/topology, and ln is only ulp-reproducible —
       the same libm-parity contract as text_tfidf.
@@ -1297,26 +1299,33 @@ def similarity_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     def wt(p: str) -> "F.Column":
         return F.col(f"{p}.tf") * F.col("idf")
 
-    w = postings.select(F.explode("post").alias("a"), "post", "idf")
-    norms = w.groupBy(F.col("a.doc_id").alias("doc_id")).agg(
-        F.sqrt(F.sum(wt("a") * wt("a"))).alias("nrm"))
+    # One pair aggregate also yields the diagonal: a doc's dot with
+    # itself is its squared norm, so the norms need no aggregate of
+    # their own. The diagonal is flagged by an aggregate output; a
+    # filter on the grouping keys would be pushed below the aggregate
+    # and plan a second pair exchange.
     dots = (
-        w.select("a", "idf", F.explode("post").alias("b"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        postings.select(F.explode("post").alias("a"), "post", "idf")
+        .select("a", "idf", F.explode("post").alias("b"))
+        .filter(F.col("a.doc_id") <= F.col("b.doc_id"))
         .groupBy(F.col("a.doc_id").alias("id_a"),
                  F.col("b.doc_id").alias("id_b"))
-        .agg(F.sum(wt("a") * wt("b")).alias("dot"))
+        .agg(F.sum(wt("a") * wt("b")).alias("dot"),
+             F.max(F.col("a.doc_id") == F.col("b.doc_id")).alias("diag"))
     )
-    na = norms.select(F.col("doc_id").alias("id_a"), F.col("nrm").alias("nrm_a"))
-    nb = norms.select(F.col("doc_id").alias("id_b"), F.col("nrm").alias("nrm_b"))
-    cos = F.col("dot") / (F.col("nrm_a") * F.col("nrm_b"))
+    # norms is doc-count-sized (16 B a doc) and broadcast-hinted:
+    # unhinted, AQE broadcast whichever of norms and the pairs finished
+    # first, so the plan and its job count changed from run to run; a
+    # merge join instead shuffles the pairs twice (sf0.1 shuffle 6.9 →
+    # 17.0 MiB). Both joins read the one hinted relation.
+    norms = F.broadcast(dots.filter("diag").select(
+        F.col("id_a").alias("doc_id"), F.sqrt("dot").alias("nrm")))
+    na, nb = norms.alias("na"), norms.alias("nb")
+    cos = F.col("dot") / (F.col("na.nrm") * F.col("nb.nrm"))
     return (
-        # norms is doc-count-sized (16 B a doc) and broadcast-hinted:
-        # unhinted, AQE broadcast whichever of norms and the pairs
-        # finished first, so the plan and its job count changed from
-        # run to run; a merge join instead shuffles the pairs twice
-        # (sf0.1 shuffle 6.9 → 17.0 MiB)
-        dots.join(F.broadcast(na), "id_a").join(F.broadcast(nb), "id_b")
+        dots.filter(~F.col("diag"))
+        .join(na, F.col("id_a") == F.col("na.doc_id"))
+        .join(nb, F.col("id_b") == F.col("nb.doc_id"))
         # threshold on the ROUNDED cosine: the raw double is summation-
         # order- and libm-sensitive, so an unrounded >= could flip pair
         # membership between engines at the boundary

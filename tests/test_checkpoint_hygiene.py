@@ -82,14 +82,14 @@ def test_dedup_clusters_loop_pins_only_final_snapshot(spark, sf_dir):
 def test_harness_sweep_returns_storage_to_baseline(spark, sf_dir):
     """The bench/verify_full between-query sweep: run checkpoint-heavy
     operators back to back, sweep after each, and storage is at
-    baseline every time."""
-    from mapreducewordcounting_spark.operators.dedup import (
-        dedup_ngram_jaccard,
-    )
+    baseline every time. Each operator must pin something before the
+    sweep, or the sweep is not exercised."""
+    from mapreducewordcounting_spark.operators.dedup import dedup_clusters
     from mapreducewordcounting_spark.operators.text_analysis import text_tfidf
 
     release_all_pinned(spark)
-    for fn in (dedup_ngram_jaccard, text_tfidf):
+    for fn in (dedup_clusters, text_tfidf):
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        assert n_pinned(spark) >= 1, fn.__name__
         release_all_pinned(spark)
         assert n_pinned(spark) == 0

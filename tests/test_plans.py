@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import re
 
+from pyspark.sql import functions as F
+
 from mapreducewordcounting_spark.operators.relational import (
     agg_suite,
     filter_project,
@@ -882,14 +884,50 @@ def test_band_self_joins_scan_corpus_once(spark, sf_dir):
         assert "Scan ExistingRDD" not in final, (fn.__name__, final)
 
 
+def test_jaccard_consumers_share_one_doc_id_exchange(spark, sf_dir):
+    """ngram_jaccard_pairs: the shingle frequency, the prefix window and
+    both verify sides read one doc_id aggregate of the shingle rows, so
+    the final adaptive plan scans the corpus once, reuses the doc_id
+    exchange, and holds no eager checkpoint (Scan ExistingRDD), with
+    and without shard keys. Without the aggregate, or without the
+    explicit not-null filter, consumers get exchanges of their own and
+    re-scan the corpus."""
+    from mapreducewordcounting_spark.catalog import load_table
+    from mapreducewordcounting_spark.operators.dedup import (
+        DEDUP_SHARD_SPAN,
+        dedup_ngram_jaccard,
+        ngram_jaccard_pairs,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "source",
+        (F.col("doc_id") / DEDUP_SHARD_SPAN).cast("bigint").alias("shard"))
+    for label, df in (
+            ("dedup_ngram_jaccard", dedup_ngram_jaccard(spark, sf_dir)),
+            ("sharded", ngram_jaccard_pairs(
+                docs, shard_cols=("source", "shard")))):
+        df.collect()
+        plan = simple_plan(df)
+        assert "isFinalPlan=true" in plan, label
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("FileScan parquet") == 1, (label, final)
+        assert "Scan ExistingRDD" not in final, (label, final)
+        assert re.search(r"ReusedExchange \[[^\]]*\], Exchange "
+                         r"hashpartitioning\(doc_id#\d+L?, \d+\), "
+                         r"REPARTITION_BY_COL", final), (label, final)
+
+
 def test_tfidf_consumers_share_one_word_exchange(spark, sf_dir):
-    """similarity_tfidf_pairs: tf, the posting lists, the norms, the
-    pairs and the doc count all read one ``word`` exchange, so the
-    final adaptive plan scans the corpus once, reuses the exchange, and
-    holds no eager checkpoint (Scan ExistingRDD). Each posting list is
-    bounded at TFIDF_DF_CAP + 1 rows by a WindowGroupLimit before it is
-    collected. A df aggregate joined back to tf gets its own exchange
-    (column pruning) and re-scans the corpus."""
+    """similarity_tfidf_pairs: tf, the posting lists, the pairs and the
+    doc count all read one ``word`` exchange, so the final adaptive plan
+    scans the corpus once, reuses the exchange, and holds no eager
+    checkpoint (Scan ExistingRDD). Each posting list is bounded at
+    TFIDF_DF_CAP + 1 rows by a WindowGroupLimit before it is collected.
+    A df aggregate joined back to tf gets its own exchange (column
+    pruning) and re-scans the corpus. The norms are the pair
+    aggregate's diagonal: the pair exchange is reused, one broadcast
+    serves both norms joins, and the only shuffle on one doc key is the
+    doc count's distinct (a norms aggregate of its own adds another)."""
     from mapreducewordcounting_spark.operators.similarity import (
         TFIDF_DF_CAP,
         similarity_tfidf_pairs,
@@ -907,3 +945,12 @@ def test_tfidf_consumers_share_one_word_exchange(spark, sf_dir):
                      final), final
     limits = re.findall(r"WindowGroupLimit \[word#\d+\], .*?, (\d+), ", final)
     assert limits and set(limits) == {str(TFIDF_DF_CAP + 1)}, final
+    pair = r"Exchange hashpartitioning\(\w+#\d+L?, \w+#\d+L?, \d+\)"
+    assert len(re.findall(r"\+- " + pair, final)) == 1, final
+    assert len(re.findall(r"ReusedExchange \[[^\]]*\], " + pair,
+                          final)) == 1, final
+    assert final.count(
+        "+- BroadcastExchange HashedRelationBroadcastMode") == 1, final
+    one_key = re.findall(
+        r"\+- Exchange hashpartitioning\((\w+)#\d+L?, \d+\)", final)
+    assert sorted(one_key) == ["doc_id", "word"], final
