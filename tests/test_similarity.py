@@ -162,7 +162,7 @@ def test_binary_quant_recall_and_determinism(spark, sf_dir):
     assert r1 == r2
 
 
-def test_sf1_recall_floors(spark):
+def test_sf1_recall_floors(spark, tmp_path):
     """VERDICT r12 item 3 — quality at scale, the unverified half of
     the r12 nlist decouple: at the derived sf1 (20k vectors, fixed
     ANN_NLIST=40 so nprobe=2 covers 5% of the corpus vs 50% at
@@ -176,16 +176,14 @@ def test_sf1_recall_floors(spark):
     sit well under the measured points so host-independent noise
     can't flake, but far above collapse (the pre-decouple failure
     mode this guards: a probe whose coverage shrinks with corpus
-    growth until recall hits zero). Runs only where the bench-only
-    sf1 scratch exists."""
-    import os
+    growth until recall hits zero). The sf1 embeddings are derived
+    here from the sf0.1 ones by tools/make_sf1.py's own rule, so the
+    test does not depend on a prebuilt scale_scratch/."""
+    from tools.make_sf1 import SRC, derive_embeddings
 
-    import pytest
-
-    sf1 = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "scale_scratch", "sf1")
-    if not os.path.isdir(sf1):
-        pytest.skip("derived sf1 scratch not built (tools/make_sf1.py)")
+    sf1 = str(tmp_path)
+    (derive_embeddings(spark.read.parquet(f"{SRC}/embeddings.parquet"))
+     .repartition(8).write.parquet(f"{sf1}/embeddings.parquet"))
 
     from mapreducewordcounting_spark.operators.similarity import (
         similarity_ann_anchor_graph,

@@ -49,6 +49,34 @@ OUT = os.path.join(REPO, "scale_scratch", "sf1")
 REPLICAS = 10
 
 
+def replicate(df, reps=REPLICAS):
+    """UNION of `reps` copies, each tagged with rep index."""
+    from pyspark.sql import functions as F
+
+    out = None
+    for rep in range(reps):
+        d = df.withColumn("rep", F.lit(rep))
+        out = d if out is None else out.unionByName(d)
+    return out
+
+
+def derive_embeddings(emb):
+    """The sf1 embeddings from the sf0.1 ones (the replica rule in the
+    module docstring). tests/test_similarity.py builds its sf1 corpus
+    with this, so the recall floors run without the full derivation."""
+    from pyspark.sql import functions as F
+
+    vkey_span = emb.agg(F.max("vec_id")).collect()[0][0] + 1
+    return replicate(emb).select(
+        (F.col("vec_id") + F.col("rep") * vkey_span).alias("vec_id"),
+        F.when(F.col("rep") == 0, F.col("embedding"))
+        .otherwise(F.expr(
+            "transform(embedding, (x, i) -> CAST(CASE WHEN i = 0 "
+            "THEN x + rep * CAST(0.001 AS FLOAT) ELSE x END "
+            "AS FLOAT))")).alias("embedding"),
+        "label")
+
+
 def main() -> int:
     from pyspark.sql import functions as F
 
@@ -69,14 +97,6 @@ def main() -> int:
     # dimensions: copy through unchanged
     for t in ["region", "nation", "customer", "supplier", "part"]:
         write(src(t), t, parts=1)
-
-    def replicate(df, reps=REPLICAS):
-        """UNION of `reps` copies, each tagged with rep index."""
-        out = None
-        for rep in range(reps):
-            d = df.withColumn("rep", F.lit(rep))
-            out = d if out is None else out.unionByName(d)
-        return out
 
     orders = src("orders")
     okey_span = orders.agg(F.max("o_orderkey")).collect()[0][0] + 1
@@ -128,18 +148,7 @@ def main() -> int:
             .alias("n_chars")),
         "documents")
 
-    emb = src("embeddings")
-    vkey_span = emb.agg(F.max("vec_id")).collect()[0][0] + 1
-    write(
-        replicate(emb).select(
-            (F.col("vec_id") + F.col("rep") * vkey_span).alias("vec_id"),
-            F.when(F.col("rep") == 0, F.col("embedding"))
-            .otherwise(F.expr(
-                "transform(embedding, (x, i) -> CAST(CASE WHEN i = 0 "
-                "THEN x + rep * CAST(0.001 AS FLOAT) ELSE x END "
-                "AS FLOAT))")).alias("embedding"),
-            "label"),
-        "embeddings", parts=8)
+    write(derive_embeddings(src("embeddings")), "embeddings", parts=8)
 
     spark.stop()
     print(f"sf1 derived dataset written to {OUT}")
