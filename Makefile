@@ -1,6 +1,7 @@
 # Evidence + gates (VERDICT r5 item 6). `make check` reproduces the
-# three per-round audit artifacts and fails non-zero on any
-# regression; `make test` / `make bench` are the other two gates.
+# two evidence artifacts, runs the staleness gate and every test tier,
+# and fails non-zero on any regression; `make test` / `make bench` are
+# the other two gates.
 
 SF_DIR ?= /root/testdata/sf0.01
 

@@ -462,7 +462,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str,
     # Broadcast ONLY the B×(B+1)/2 (blk_a, blk_b) KEY table (two longs
     # per row — built from ranges, no data in it), then attach the
     # packed matrices via equi-joins on the block id. Actual plan
-    # (PLANS_audit.json): the FIRST join is a BroadcastHashJoin whose
+    # (the pre-execution plan): the FIRST join is a BroadcastHashJoin whose
     # BUILD side is the broadcast key table — the mat_a blocks STREAM
     # through it map-side (the broadcast hint on pair_keys outranks the
     # probe side's SHUFFLE_HASH hint, which is therefore dead on that

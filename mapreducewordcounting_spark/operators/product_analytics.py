@@ -175,7 +175,7 @@ def basket_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (guide §2.4): `items` feeds THREE consumers (baskets, the
     # order count, brand rates) and the uncut plan re-ran the
     # join+distinct per consumer — 8 parquet scans / 15 exchanges in
-    # PLANS_audit (AQE alias canonicalization defeats ReusedExchange
+    # the pre-execution plan (AQE alias canonicalization defeats ReusedExchange
     # across the branches, the similarity_tfidf_pairs lesson).
     # Checkpointing the (order, brand) distinct grain pays the
     # join+distinct ONCE; scans drop 8 → 2, exchanges 15 → 5.

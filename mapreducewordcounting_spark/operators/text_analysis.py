@@ -837,8 +837,8 @@ def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "word").agg(F.count("*").alias("cnt"))
         # r14: two consumers (per-source totals + the entropy join) —
         # checkpointing the |sources|·|vocab| count grid halves the
-        # corpus scans (2 → 1 in PLANS_audit), same discipline as
-        # text_unigram_logprob's model table.
+        # corpus scans (2 → 1 in the pre-execution plan), same
+        # discipline as text_unigram_logprob's model table.
         .localCheckpoint(eager=True)
     )
     tot = counts.groupBy("source").agg(F.sum("cnt").alias("n_tokens"))
@@ -892,7 +892,7 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14 (guide §2.4 "don't compute things you throw away"): the
     # plan used to run the scan→tokenize→explode pipeline THREE times
     # (model counts, corpus total, probe side — 3 parquet scans in
-    # PLANS_audit). The corpus total is sum(c) over the unigram
+    # the pre-execution plan). The corpus total is sum(c) over the unigram
     # relation — an exact integer identity with count(*) over words —
     # so it derives from the vocabulary-sized model table instead of
     # its own corpus pass, and the model table is checkpointed

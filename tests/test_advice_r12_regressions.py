@@ -240,24 +240,6 @@ def test_exchange_input_names_parses_names(spark):
     assert any("members" in cols for cols in names), names
 
 
-def test_exchange_array_columns_flags_shuffled_arrays(spark):
-    """The typed audit: shuffling an array column is reported; a
-    scalar-only shuffle reports clean."""
-    import pyspark.sql.functions as F
-
-    from mapreducewordcounting_spark.plans import exchange_array_columns
-
-    base = spark.range(50).select(
-        (F.col("id") % 5).alias("k"),
-        F.array(F.col("id"), F.col("id") + 1).alias("vec"))
-    fat = base.repartition(4, "k")
-    assert any("vec:array<bigint>" in cols
-               for cols in exchange_array_columns(fat)), (
-        exchange_array_columns(fat))
-    thin = base.select("k").repartition(4, "k")
-    assert all(cols == [] for cols in exchange_array_columns(thin))
-
-
 # ---------------------------------------------------------------- #
 # finding 5: session-scoped ivf index path                           #
 # ---------------------------------------------------------------- #

@@ -1,9 +1,9 @@
 """tools/sync_check.py's doc checks: the SCALING.md "Session defaults"
 table must quote the shipped value of every conf session.py sets, and
-the env var of every knob it reads from the environment (check 7), and
-every quoted ``tools/<name>.py`` path must exist (check 8), and
+the env var of every knob it reads from the environment (check 6), and
+every quoted ``tools/<name>.py`` path must exist (check 7), and
 SCALING.md must state the package's checkpoint call-site count
-(check 10)."""
+(check 9)."""
 
 from __future__ import annotations
 

@@ -2,18 +2,20 @@
 
     python tools/check.py [sf_dir]
 
-runs, in order, the three audit tools whose artifacts the judge reads
-first, each in a FRESH interpreter (the plan audit and the driver
-simulation want clean SparkSessions):
+runs, in order, the two tools that write the evidence artifacts, each
+in a FRESH interpreter (the driver simulation wants a clean
+SparkSession), then the staleness gate:
 
-  1. tools/plan_audit.py    -> PLANS_audit.json   (plan invariants)
-  2. tools/forensics.py     -> FORENSICS.json     (env + oracle digest)
-  3. tools/verify_full.py   -> CORRECTNESS_local_full.json
+  1. tools/forensics.py     -> FORENSICS.json     (env + oracle digest)
+  2. tools/verify_full.py   -> CORRECTNESS_local_full.json
                                (registry-wide driver simulation, sf0.01)
+  3. tools/sync_check.py    (committed counts agree with the registry)
 
-Exit code is non-zero if ANY stage regresses: a plan invariant breaks,
-a forensic probe mismatches, or any registry query fails its oracle.
-`make check` (Makefile at the repo root) is an alias.
+Exit code is non-zero if ANY stage regresses: a forensic probe
+mismatches, any registry query fails its oracle, or a committed count
+is stale. The plan invariants are checked on every executed plan by
+tests/test_registry_oracle.py. `make check` (Makefile at the repo
+root) runs this, then every test tier.
 """
 
 from __future__ import annotations
@@ -30,7 +32,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     stages = [
-        ("plan_audit", [sys.executable, os.path.join(REPO, "tools", "plan_audit.py")]),
         ("forensics", [sys.executable, os.path.join(REPO, "tools", "forensics.py"), sf_dir]),
         ("verify_full", [sys.executable, os.path.join(REPO, "tools", "verify_full.py"), sf_dir]),
         # staleness gate LAST: it reads the artifacts the stages above

@@ -60,7 +60,6 @@ sys.path.insert(0, REPO)
 from mapreducewordcounting_spark.checkpoints import (  # noqa: E402
     release_all_pinned,
 )
-from tools.plan_audit import _MARKS  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: tiny fixture for per-query untimed warmups (codegen/JIT, not data)
@@ -72,14 +71,21 @@ CLEAN_RATIO = 1.3
 LEDGER_SF_DIR = "/root/testdata/sf0.001"
 LEDGER_PATH = os.path.join(REPO, "tools", "ledger.json")
 
-#: plan-graph node name -> row field: tools/plan_audit.py's names, plus
-#: the broadcast exchanges that its "Exchange" substring count folds in
-OPERATORS = {"BroadcastExchange": "broadcast_exchanges", **{
-    _MARKS[field].rstrip("("): field for field in (
-        "exchanges", "broadcast_hash_joins", "sort_merge_joins",
-        "shuffled_hash_joins", "bnl_joins", "cartesian_products",
-        "arrow_python", "row_python_udf", "pandas_map",
-        "pandas_group_map", "pandas_cogroup")}}
+#: plan-graph node name -> row field
+OPERATORS = {
+    "Exchange": "exchanges",
+    "BroadcastExchange": "broadcast_exchanges",
+    "BroadcastHashJoin": "broadcast_hash_joins",
+    "SortMergeJoin": "sort_merge_joins",
+    "ShuffledHashJoin": "shuffled_hash_joins",
+    "BroadcastNestedLoopJoin": "bnl_joins",
+    "CartesianProduct": "cartesian_products",
+    "ArrowEvalPython": "arrow_python",
+    "BatchEvalPython": "row_python_udf",
+    "MapInPandas": "pandas_map",
+    "FlatMapGroupsInPandas": "pandas_group_map",
+    "FlatMapCoGroupsInPandas": "pandas_cogroup",
+}
 #: row field -> expression counted in each physical plan description
 EXPRESSIONS = {
     "hof_aggregate": re.compile(r"\baggregate\("),

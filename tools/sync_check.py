@@ -16,18 +16,16 @@ Checks (all against the live registry import):
      n_oracled == oracled, n_fail == 0
   5. BENCH_FULL_sf01.json: n_queries == total == len(queries),
      errors == {}
-  6. PLANS_audit.json: n_queries == total, every registry query has a
-     per-plan entry, and every violation list is empty
-  7. SCALING.md "Session defaults": every row for a conf that
+  6. SCALING.md "Session defaults": every row for a conf that
      session.py sets opens with its shipped value ("true" reads
      "on") and, for a conf read from an env var, quotes that env var
      (the broadcast-threshold, split-size and codec rows must be
      there)
-  8. every ``tools/<name>.py`` path quoted in README.md, SCALING.md,
-     bench.py, tools/*.py or the package sources exists, so a deleted
-     tool leaves no stale instructions behind
-  9. tools/ledger.json holds one cost row per registry query, no more
- 10. SCALING.md's stated count of ``.localCheckpoint(`` call sites
+  7. every ``tools/<name>.py`` path quoted in README.md, SCALING.md,
+     PLANS.md, SURVEY.md, bench.py, tools/*.py or the package sources
+     exists, so a deleted tool leaves no stale instructions behind
+  8. tools/ledger.json holds one cost row per registry query, no more
+  9. SCALING.md's stated count of ``.localCheckpoint(`` call sites
      equals the calls in the package sources (comments and docstrings
      that quote the call do not count)
 
@@ -109,8 +107,9 @@ def scaling_problems(scaling: str, session_source: str) -> list[str]:
     return problems
 
 
-#: files whose quoted ``tools/<name>.py`` paths must exist (check 8)
-TOOL_REF_GLOBS = ("README.md", "SCALING.md", "bench.py", "tools/*.py",
+#: files whose quoted ``tools/<name>.py`` paths must exist (check 7)
+TOOL_REF_GLOBS = ("README.md", "SCALING.md", "PLANS.md", "SURVEY.md",
+                  "bench.py", "tools/*.py",
                   "mapreducewordcounting_spark/**/*.py")
 
 
@@ -225,32 +224,15 @@ def main() -> int:
     except Exception as exc:
         problems.append(f"BENCH_FULL_sf01 unreadable: {exc!r}")
 
-    # 6. PLANS_audit.json
-    try:
-        pa = json.load(open(os.path.join(REPO, "PLANS_audit.json")))
-        s = pa["summary"]
-        if s["n_queries"] != total:
-            problems.append(
-                f"PLANS_audit: n_queries={s['n_queries']} != {total}"
-                " (run: python tools/plan_audit.py)")
-        missing = sorted(set(entry.queries()) - set(pa["queries"]))
-        if missing:
-            problems.append(f"PLANS_audit: missing plans for {missing}")
-        for key, val in s.items():
-            if isinstance(val, list) and val:
-                problems.append(f"PLANS_audit: {key}={val}")
-    except Exception as exc:
-        problems.append(f"PLANS_audit unreadable: {exc!r}")
-
-    # 7. SCALING.md session defaults vs session.py
+    # 6. SCALING.md session defaults vs session.py
     problems += scaling_problems(
         read("SCALING.md"),
         read(os.path.join("mapreducewordcounting_spark", "session.py")))
 
-    # 8. quoted tool paths exist
+    # 7. quoted tool paths exist
     problems += dangling_tool_refs(tool_ref_sources(REPO), REPO)
 
-    # 9. tools/ledger.json rows == registry
+    # 8. tools/ledger.json rows == registry
     try:
         rows = json.load(open(os.path.join(REPO, "tools", "ledger.json")))
         missing = sorted(set(entry.queries()) - set(rows))
@@ -262,7 +244,7 @@ def main() -> int:
     except Exception as exc:
         problems.append(f"ledger unreadable: {exc!r}")
 
-    # 10. SCALING.md's checkpoint call-site count
+    # 9. SCALING.md's checkpoint call-site count
     problems += checkpoint_count_problems(read("SCALING.md"),
                                           checkpoint_call_sites(REPO))
 
