@@ -1,28 +1,23 @@
 """Table catalog: loads the driver fixture tables.
 
-The reference's only "catalog" is a hardcoded directory listing of
-``./RawText/`` (sendFileByFile.cpp:422-444). Here, sources are parquet
-tables under a scale-factor directory (TESTDATA.md); loading is a
-``spark.read.parquet`` so Catalyst gets column pruning + predicate
-pushdown + split planning for free (SURVEY.md §4.1).
-
-Schema inference is a Spark job of its own (it reads a parquet
-footer), so each table's schema is inferred once per Spark session:
-the first load of a path runs Spark's own inference, and later loads
-of the same path in that session read with the stored schema
-(``spark.read.schema(s).parquet``) and run no job. The stored schema
-is keyed on the session, the real path and the path's ``st_mtime_ns``,
-so a rewritten table is re-inferred, a ``newSession()`` starts empty,
-and no entry outlives its session (SCALING.md "Session defaults").
+The reference's only "catalog" is a directory listing of ``./RawText/``
+(sendFileByFile.cpp:422-444), which costs no round. Here a table is a
+parquet file or a flat directory of parts under a scale-factor
+directory (TESTDATA.md), read with ``spark.read.schema(s).parquet`` so
+Catalyst gets column pruning + predicate pushdown + split planning for
+free (SURVEY.md §4.1). ``s`` is the schema Spark's own inference would
+give, read from the parquet footer on the driver
+(:func:`_footer_schema`), so no load, first or later, runs a Spark job.
 """
 
 from __future__ import annotations
 
+import json
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLES = (
@@ -30,46 +25,72 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: session -> {real path: (st_mtime_ns, inferred schema)}. Weak keys:
-#: a session's entries go with the session.
-_SCHEMAS: weakref.WeakKeyDictionary[
-    SparkSession, dict[str, tuple[int, StructType]]
-] = weakref.WeakKeyDictionary()
+def _mapped(t) -> bool:
+    """Whether Spark infers arrow type ``t`` as ``from_arrow_type`` maps
+    it, under any session conf: binary is left out (a string under
+    ``binaryAsString``), and so is every type no test checks."""
+    import pyarrow.types as pat
+
+    if pat.is_list(t):
+        return _mapped(t.value_type)
+    return t.unit in ("ms", "us") if pat.is_timestamp(t) else any(
+        is_(t) for is_ in (pat.is_boolean, pat.is_signed_integer,
+                           pat.is_float32, pat.is_float64,
+                           pat.is_decimal128, pat.is_string, pat.is_date32))
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)``, inferring the schema only on the
-    first read of ``path`` (at its current mtime) in this session."""
+def _footer_schema(spark: SparkSession, path: str,
+                   nanos_as_long: bool) -> StructType | None:
+    """Spark's inferred schema of local table ``path``, from its footer:
+    the schema a Spark writer stored there, or else the arrow schema if
+    :func:`_mapped` covers every type (Spark's read makes every field
+    nullable). A directory's footer is its first data file's by name;
+    Spark also reads one file and assumes every part agrees. None, so
+    Spark infers with a job, for an unmapped type, a summary file, a
+    partitioned layout or a path that is not local. ``nanos_as_long``
+    reads INT64 TIMESTAMP(NANOS) columns as longs, setting the session's
+    ``nanosAsLong``, without which Spark's reader rejects them."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        names = sorted(os.listdir(path))
+        data = [n for n in names if not n.startswith((".", "_"))]
+        summary = any(n.startswith(("_metadata", "_common_metadata"))
+                      for n in names)
+        if summary or not data or any(
+                os.path.isdir(os.path.join(path, n)) for n in data):
+            return None
+        path = os.path.join(path, data[0])
     try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        # Not a local path (or missing): Spark resolves it, and raises
-        # its own error, exactly as an uncached read would.
-        return spark.read.parquet(path)
-    # No lock: concurrent first loads may both infer the same schema.
-    # The mtime is taken before the inferring read, so a rewrite in
-    # between stores an mtime that is already stale: the next load
-    # re-infers rather than reusing the wrong schema.
-    schemas = _SCHEMAS.setdefault(spark, {})
-    real = os.path.realpath(path)
-    hit = schemas.get(real)
-    if hit is not None and hit[0] == mtime:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    schemas[real] = (mtime, df.schema)
-    return df
+        footer = pq.ParquetFile(path)
+        fields = footer.schema_arrow
+        stored = (footer.metadata.metadata or {}).get(
+            b"org.apache.spark.sql.parquet.row.metadata")
+        if stored is not None:
+            return StructType.fromJson(json.loads(stored))
+    except Exception:  # noqa: BLE001 - Spark's read raises its own error
+        return None
+    nanos = [f.name for f in fields if nanos_as_long
+             and pa.types.is_timestamp(f.type) and f.type.unit == "ns"]
+    arrow = pa.schema([pa.field(f.name, pa.int64()) if f.name in nanos
+                       else f for f in fields])
+    if any(c.physical_type == "INT96" for c in footer.schema) or \
+            not all(_mapped(t) for t in arrow.types):
+        return None
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+    return from_arrow_schema(arrow, ntz == "true")
 
 
 def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One fixture table as Spark reads it, before :func:`load_table`'s
     ``events.ts`` normalization. ``name`` must be in :data:`TABLES`.
 
-    The ns-precision ``events`` fixture is unreadable by Spark's
-    vectorized reader (PARQUET_TYPE_ILLEGAL) unless
-    ``spark.sql.legacy.parquet.nanosAsLong`` maps it to raw int64; only
-    that error earns the retry under the flag.
+    Only ``events`` reads an ns-precision ``ts`` (which Spark's reader
+    rejects as PARQUET_TYPE_ILLEGAL) as raw int64 under ``nanosAsLong``.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -78,20 +99,8 @@ def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # relative to the DuckDB oracle (which is always tz-naive).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name != "events":
-        return _read_parquet(spark, path)
-    try:
-        return _read_parquet(spark, path)
-    except Exception as exc:
-        # Only the ns-precision fixture earns the nanosAsLong retry
-        # (mutating session config); anything else — missing file,
-        # corrupt footer, permissions — re-raises the original error
-        # rather than masking it behind a confusing second failure.
-        if "PARQUET_TYPE_ILLEGAL" not in str(exc) and \
-                "Illegal Parquet type" not in str(exc):
-            raise
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return _read_parquet(spark, path)
+    s = _footer_schema(spark, path, nanos_as_long=name == "events")
+    return (spark.read if s is None else spark.read.schema(s)).parquet(path)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

@@ -19,7 +19,6 @@ Scale notes per query are in each docstring; shared rules:
 
 from __future__ import annotations
 
-import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -829,17 +828,9 @@ def join_runtime_bloom_smj(spark: SparkSession, sf_dir: str) -> DataFrame:
     each with its own SQLConf/listener state — on the shared context;
     one session per context is the steady state)."""
     s = _bloom_session(spark)
-
-    def load(name: str) -> DataFrame:
-        # read with the caller's session's schema: the private session's
-        # own first load would infer it with a job, so the query's cost
-        # would depend on whether it ever ran before in this context
-        schema = load_table(spark, sf_dir, name).schema
-        return s.read.schema(schema).parquet(
-            os.path.join(sf_dir, f"{name}.parquet"))
-
-    li = load("lineitem").select("l_orderkey", "l_returnflag", "l_quantity")
-    o = load("orders").filter(
+    li = load_table(s, sf_dir, "lineitem").select(
+        "l_orderkey", "l_returnflag", "l_quantity")
+    o = load_table(s, sf_dir, "orders").filter(
         F.col("o_totalprice") > 150000).select("o_orderkey")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)

@@ -46,11 +46,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     TIMESTAMP_NTZ) and ns TIMESTAMP(NANOS) (readable only as raw int64
     under nanosAsLong) across generations — see catalog.raw_table.
     A readStream needs its schema up front, so it takes the batch
-    reader's raw view of the footer (the catalog's per-session schema,
-    no job once the batch catalog has loaded events) and normalizes on
-    the OBSERVED type; assuming ns here while the file is µs would
-    silently divide every timestamp by an extra 1000 (2024 collapses
-    to 1970-01-20)."""
+    reader's raw view of the footer (read on the driver, no job) and
+    normalizes on the OBSERVED type; assuming ns here while the file is
+    µs would silently divide every timestamp by an extra 1000 (2024
+    collapses to 1970-01-20)."""
     schema = raw_table(spark, sf_dir, "events").schema
     # file-stream source wants a DIRECTORY; select the one file by glob
     stream = (

@@ -23,6 +23,7 @@ fourth reads the returned plan's exchanges
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -30,12 +31,7 @@ from mapreducewordcounting_spark.checkpoints import checkpoints_read, pinned
 from mapreducewordcounting_spark.plans import exchange_array_columns
 from mapreducewordcounting_spark.registry import all_queries
 from tests.oracle_util import assert_matches_oracle
-from tools.measure import (
-    LEDGER_PATH,
-    LEDGER_SF_DIR,
-    cost,
-    warm_tables,
-)
+from tools.measure import LEDGER_PATH, LEDGER_SF_DIR, cost
 
 _SPECS = all_queries()
 _ORACLED = [n for n, s in _SPECS.items() if s.oracle is not None]
@@ -201,10 +197,7 @@ def plan_invariant_problems(name, row, fat_columns):
 
 @pytest.fixture(scope="module")
 def ledger(spark, sf_dir):
-    """The committed rows, or None off the sf they were recorded at.
-    Every table is loaded first, as the ledger run does, so no query
-    pays a first load's schema-inference job."""
-    warm_tables(spark, sf_dir)
+    """The committed rows, or None off the sf they were recorded at."""
     if sf_dir != LEDGER_SF_DIR:
         return None
     with open(LEDGER_PATH) as f:
@@ -239,6 +232,27 @@ def test_oracle_match(name, spark, duck, sf_dir, ledger):
 def test_rows_only_runs(name, spark, sf_dir, ledger):
     df, _ = _collect_at_ledger_cost(name, spark, sf_dir, ledger)
     assert len(df.columns) > 0  # runs, stable schema
+
+
+def test_tpch_q11_matches_oracle_at_sf0_01(spark, sf_dir):
+    """At sf0.001 no supplier is in NATION_1, so tpch_q11_important_stock
+    plans as an empty relation and test_oracle_match compares two empty
+    sets. At sf0.01 its threshold crossJoin runs: the rows must be
+    non-empty and equal DuckDB's."""
+    import duckdb
+
+    from mapreducewordcounting_spark.catalog import TABLES
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    spec = _SPECS["tpch_q11_important_stock"]
+    df = spec.fn(spark, sf)
+    rows = df.collect()
+    assert rows
+    with duckdb.connect() as duck:
+        for t in TABLES:
+            duck.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+        assert_matches_oracle(df, duck, spec.oracle, rows=rows)
 
 
 def test_plan_invariant_problems():

@@ -29,12 +29,11 @@ count and run order, and the status store evicts skipped stages.
 Subcommands:
 
 * ``ledger``: the per-query cost ledger, ``tools/ledger.json``
-  (``{query: row}``). Loads every table once at ``LEDGER_SF_DIR``
-  (first loads infer schemas, a job the queries then never run), then
-  per query: build, ``collect()``, record the row, release its pinned
-  checkpoints, and print the fields that changed against the committed
-  row (``dedup_simhash_det: jobs 5→3, exchanges 2→1``). With names,
-  only those rows are re-recorded.
+  (``{query: row}``). Per query at ``LEDGER_SF_DIR``: build,
+  ``collect()``, record the row, release its pinned checkpoints, and
+  print the fields that changed against the committed row
+  (``dedup_simhash_det: jobs 5→3, exchanges 2→1``). With names, only
+  those rows are re-recorded.
   ``tests/test_registry_oracle.py`` asserts every row exactly, so a
   ledger update is a reviewed diff, like a plan change.
 * ``probe``: is the host clean right now? Times only the two bench
@@ -217,15 +216,6 @@ def cost(spark, label: str = "cost"):
             row[field] += n
 
 
-def warm_tables(spark, sf_dir: str) -> None:
-    """Load every catalog table once: a table's first load in a session
-    infers its schema with a Spark job, which later loads skip."""
-    from mapreducewordcounting_spark.catalog import TABLES, load_table
-
-    for table in TABLES:
-        load_table(spark, sf_dir, table)
-
-
 def row_delta(old: dict | None, new: dict) -> str:
     """The fields of ``new`` that differ from the committed ``old`` row,
     as ``jobs 5→3, exchanges 2→1``."""
@@ -247,7 +237,6 @@ def ledger(spark, names: list[str]) -> int:
     with open(LEDGER_PATH) as f:
         committed: dict[str, dict] = json.load(f)
     rows = dict(committed) if names else {}
-    warm_tables(spark, LEDGER_SF_DIR)
     for name in names or specs:
         with cost(spark, f"ledger {name}") as row:
             specs[name].fn(spark, LEDGER_SF_DIR).collect()
