@@ -85,22 +85,30 @@ def _footer_schema(spark: SparkSession, path: str,
     return from_arrow_schema(arrow, ntz == "true")
 
 
-def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """One fixture table as Spark reads it, before :func:`load_table`'s
-    ``events.ts`` normalization. ``name`` must be in :data:`TABLES`.
-
-    Only ``events`` reads an ns-precision ``ts`` (which Spark's reader
-    rejects as PARQUET_TYPE_ILLEGAL) as raw int64 under ``nanosAsLong``.
-    """
+def scan_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One fixture table read under its footer schema
+    (:func:`_footer_schema`), so the read runs no Spark job. ``name``
+    must be in :data:`TABLES`. The only session conf it sets is
+    ``nanosAsLong``, for ``events``, whose ns-precision ``ts`` Spark's
+    reader rejects as PARQUET_TYPE_ILLEGAL otherwise; it leaves the
+    session timezone alone, so a probe that must not change the
+    session it measures can read through it."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    s = _footer_schema(spark, path, nanos_as_long=name == "events")
+    return (spark.read if s is None else spark.read.schema(s)).parquet(path)
+
+
+def raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One fixture table as Spark reads it, before :func:`load_table`'s
+    ``events.ts`` normalization: :func:`scan_table` in a session pinned
+    to UTC."""
     # Pin the session timezone: fixture timestamps are tz-naive, and a
     # non-UTC driver session would shift every collected/derived value
     # relative to the DuckDB oracle (which is always tz-naive).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    s = _footer_schema(spark, path, nanos_as_long=name == "events")
-    return (spark.read if s is None else spark.read.schema(s)).parquet(path)
+    return scan_table(spark, sf_dir, name)
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:

@@ -42,6 +42,11 @@ _SQL_TOKS = """
 """
 
 
+#: at each token start of a single-space-joined token string, capture
+#: the next three tokens: the string's word 3-grams, in order
+_SHINGLE3_AT_TOKEN_START = "(?<![^ ])(?=([^ ]+ [^ ]+ [^ ]+))"
+
+
 def _toks() -> "F.Column":
     return F.filter(tokenize_canonical("text"), lambda w: F.length(w) > 0)
 
@@ -188,65 +193,79 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
     state are bounded by shard size BY CONSTRUCTION (the
     dedup_clusters_sharded deployment posture). Empty (the default)
     keeps the r1-r11 global behavior bit-for-bit."""
-    # Two-step projection: materialize the token array BEFORE shingling.
-    # shingles() dereferences the array once per n-gram via element_at;
-    # inlining the tokenizer there makes Spark re-run split+regexp per
-    # access — O(tokens²) per doc, measured 47 s vs 3 s at sf0.1.
     sc = list(shard_cols)
     keys = ["doc_id", *sc]
     # One doc_id exchange serves every consumer: the frequency count,
     # the prefix window and both verify sides all read the shingle
-    # sets this aggregate rebuilds, so the scan and tokenizer run once
-    # and no checkpoint is needed. Two things keep the exchange shared:
+    # sets the aggregate above it builds, so the scan and tokenizer
+    # run once and no checkpoint is needed. The exchange carries one
+    # row per document, its canonical tokens joined by single spaces;
+    # shingling and the explode run above it, since exploding below
+    # it would ship every token three times, once inside each 3-gram.
+    # The round trip is exact: canonical tokens are non-empty
+    # [a-z']+, so none holds a space, and the scan below finds the
+    # same distinct 3-grams, in the same order, as shingles() on the
+    # token array (none for fewer than three tokens). Two things keep
+    # the exchange shared:
     # - the aggregate: consumers reading the repartitioned rows
     #   directly prune different columns and get one exchange each;
     # - the explicit not-null filter: without it the joins' inferred
     #   isnotnull filters are pushed below the exchange under some
     #   consumers only (2 exchanges and 2 scans at sf0.01). It drops
-    #   no result row: a null doc_id or shard key never pairs.
+    #   no result row: a null doc_id, shard key or text never pairs.
     sh = (
-        docs.select(*keys, _toks().alias("toks"))
-        .select(*keys, F.explode(shingles(F.col("toks"))).alias("shingle"))
+        docs.select(*keys, F.array_join(_toks(), " ").alias("t"))
         .filter(reduce(lambda x, y: x & y,
-                       [F.col(c).isNotNull() for c in (*keys, "shingle")]))
+                       [F.col(c).isNotNull() for c in (*keys, "t")]))
         .repartition("doc_id")
+        # A shingle is three consecutive tokens of t, so one regex scan
+        # finds each at a token start. Each consumer of the shared
+        # exchange re-runs this (AQE reuses the exchange, not the
+        # operators above it), so it must be cheap: shingles() over
+        # split(t) evaluates interpreted lambdas, and cost this query
+        # up to 25% more executor CPU than shingling once below the
+        # exchange; the codegen'd regex scan does not.
+        .select(*keys, F.explode(F.array_distinct(F.regexp_extract_all(
+            "t", F.lit(_SHINGLE3_AT_TOKEN_START), 1))).alias("shingle"))
         .groupBy(*keys).agg(F.collect_list("shingle").alias("shingles"))
         .withColumn("n_sh", F.size("shingles"))
     )
 
-    exploded = sh.select(*keys, "n_sh", F.explode("shingles").alias("shingle"))
-    # Shingle frequency stays a groupBy (map-side partial agg absorbs
-    # hot-shingle skew BEFORE the exchange — this corpus has a 31-word
-    # vocabulary, so per-shingle row counts are brutally skewed), and
-    # it joins back UN-HINTED (VERDICT r12 item 1): the r1-r12 form
-    # FORCE-broadcast this relation, but distinct-shingle cardinality
-    # grows ~linearly with corpus tokens, so the hint was a driver
-    # collect of a corpus-grain table — harmless at sf0.1, dead at
-    # 100 TB (Spark's 8 GB broadcast cap falls long before). Unhinted,
-    # AQE broadcasts while freq measures small and switches to a
-    # skew-splitting sort-merge join when it doesn't — both ends of
-    # the scale get the right plan. (A count() OVER (PARTITION BY
-    # shingle) window was A/B'd as the no-second-relation form: the
-    # window buffers every row of a hot shingle in ONE group — no
-    # partial-agg stage to absorb the skew — and GC-thrashed at
-    # derived sf1 while this form held sf0.1/sf1.
-    # Derived-sf10 caveat (r13, OPTIMIZATION_r13.md): the REPLICAS=100
+    exploded = sh.select(*keys, "n_sh", F.explode("shingles").alias("shingle"),
+                         F.xxhash64("shingle").alias("hk"))
+    # Shingle frequency is a groupBy on the shingle's 64-bit hash: the
+    # exchange and the join back carry 8-byte keys, not strings. On
+    # the benchmark corpus, whose shingles are mostly distinct, the
+    # frequency exchange wrote 40% fewer bytes and the broadcast freq
+    # relation shrank 71 → 8.4 MB. A collision merges two counts,
+    # which is harmless: the prefix filter is exact under ANY global
+    # total order of shingles (Vernica et al., SIGMOD 2010), and
+    # (freq, shingle) stays one, ties broken by the shingle itself. So
+    # a collision can change which candidates are generated, never
+    # the verified pairs.
+    # The map-side partial aggregate absorbs hot-shingle skew before
+    # the exchange. freq joins back UN-HINTED: distinct-shingle
+    # cardinality grows ~linearly with corpus tokens, so a forced
+    # broadcast would be a driver collect of a corpus-grain table;
+    # unhinted, AQE broadcasts while freq measures small and switches
+    # to a skew-splitting sort-merge join when it doesn't. (A count()
+    # OVER (PARTITION BY shingle) window was A/B'd as the
+    # no-second-relation form: it buffers every row of a hot shingle
+    # in ONE group, with no partial aggregate to absorb the skew, and
+    # GC-thrashed at derived sf1 while this form held sf0.1/sf1.)
+    # Derived-sf10 caveat (OPTIMIZATION_r13.md): the REPLICAS=100
     # corpus makes every replica group a mutual near-dup CLIQUE, so
     # candidates and the true result are quadratic in REPLICAS by
-    # construction — this exact-verify oracle-spec form is
-    # output-bound there (OOMs an 8g local heap in the array-attach
-    # verify; SPARK_GRAFT_DRIVER_MEM is the local knob). Bounded
-    # dup-group corpora — and the sharded/banded forms, whose shard
-    # key splits replica batches — stay near-linear; see
-    # dedup_clusters_sharded's sf10 row in BASELINE.md.)
-    freq = exploded.groupBy(*sc, "shingle").agg(F.count("*").alias("freq"))
-
-    from pyspark.sql import Window
+    # construction; this exact-verify form is output-bound there.
+    # Bounded dup-group corpora, and the sharded/banded forms, whose
+    # shard key splits replica batches, stay near-linear; see
+    # dedup_clusters_sharded's sf10 row in BASELINE.md.
+    freq = exploded.groupBy(*sc, "hk").agg(F.count("*").alias("freq"))
 
     pos_w = Window.partitionBy("doc_id").orderBy(F.asc("freq"), F.asc("shingle"))
     prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
     prefix = (
-        exploded.join(freq, [*sc, "shingle"])
+        exploded.join(freq, [*sc, "hk"])
         .withColumn("pos", F.row_number().over(pos_w))
         .filter(F.col("pos") <= prefix_len)
         .select("doc_id", *sc, "n_sh", "shingle")

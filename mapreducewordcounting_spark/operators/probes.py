@@ -58,6 +58,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreducewordcounting_spark.catalog import scan_table
 from mapreducewordcounting_spark.registry import register
 
 
@@ -165,7 +166,7 @@ def probe_env_pandas_version(spark: SparkSession, sf_dir: str) -> DataFrame:
 def probe_type_bigint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Control: plain BIGINT values (products stay < 2^63, no HUGEINT
     promotion — DuckDB integer * promotes only through sum())."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r = scan_table(spark, sf_dir, "region")
     return r.select(
         "r_regionkey",
         (F.col("r_regionkey").cast("long") * F.lit(1000000007))
@@ -192,7 +193,7 @@ def probe_type_hugeint_sum_uncast(spark: SparkSession, sf_dir: str
     FAILS the driver's hash iff the driver fetches oracle values via a
     version-divergent HUGEINT mapping. Its pass/fail bit in
     CORRECTNESS_r05.json is the experiment's readout."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r = scan_table(spark, sf_dir, "region")
     return (
         r.groupBy((F.col("r_regionkey") % 2).alias("grp"))
         .agg(F.sum(F.col("r_regionkey").cast("long") * F.lit(1000000007))
@@ -214,7 +215,7 @@ def probe_type_bigint_sum_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Control twin of the HUGEINT sentinel: identical values with the
     repo-wide ``CAST(sum(...) AS BIGINT)`` fix applied. sentinel=FAIL +
     this=PASS in the same artifact is the confirmed diagnosis."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r = scan_table(spark, sf_dir, "region")
     return (
         r.groupBy((F.col("r_regionkey") % 2).alias("grp"))
         .agg(F.sum(F.col("r_regionkey").cast("long") * F.lit(1000000007))
@@ -238,7 +239,7 @@ def probe_type_decimal_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     in older builds, decimal object in newer) and Spark's Decimal
     renders with fixed scale, so a string-canonicalizing hash diverges
     wherever the fetch paths do."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r = scan_table(spark, sf_dir, "region")
     return r.select(
         "r_regionkey",
         (F.col("r_regionkey") + F.lit(0.123456)).cast("decimal(38,6)")
@@ -264,7 +265,7 @@ def probe_type_double(spark: SparkSession, sf_dir: str) -> DataFrame:
     17-significant-digit shortest-repr). Both engines compute the same
     IEEE bits; a hash fail here would mean the driver canonicalizes
     float VALUES differently per engine, not a formatting change."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r = scan_table(spark, sf_dir, "region")
     k = F.col("r_regionkey")
     return r.select(
         "r_regionkey",
@@ -297,7 +298,7 @@ def probe_type_double_negzero(spark: SparkSession, sf_dir: str) -> DataFrame:
     its driver hash bit reads out whether the driver's canonicalizer
     treats the two engines' ``-0.0`` identically; ``neg_zero_norm``
     carries the ``+0.0`` antidote as the control column."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r = scan_table(spark, sf_dir, "region")
     nz = (-F.lit(0.0)) * (F.col("r_regionkey") + 1.0)
     return r.select(
         "r_regionkey",
@@ -322,7 +323,7 @@ def probe_type_null_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Control: NULLs inside int/double/string columns — exercises the
     driver canonicalizer's NULL rendering (None vs NaN vs 'None') in
     every class at once."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r = scan_table(spark, sf_dir, "region")
     k = F.col("r_regionkey")
     return r.select(
         "r_regionkey",
@@ -348,7 +349,7 @@ def probe_type_string_date_bool(spark: SparkSession, sf_dir: str
                                 ) -> DataFrame:
     """Control: unicode strings, leading/trailing whitespace, DATE,
     and BOOLEAN — the remaining allowlist classes in one probe."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r = scan_table(spark, sf_dir, "region")
     k = F.col("r_regionkey")
     return r.select(
         "r_regionkey",
@@ -387,7 +388,7 @@ def probe_fn_hash_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dialect probe: the md5-as-integer and binary-format idioms used
     by validate_table_fingerprint, sample_split_3way, skew_key_histogram
     and every md5-derived synthetic coordinate — restated on 5 rows."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r = scan_table(spark, sf_dir, "region")
     k = F.col("r_regionkey")
     n = (k.cast("long") * 37 + 5)
     return r.select(
@@ -418,7 +419,7 @@ def probe_fn_split_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     idiom of the text family — pins split-on-space semantics (empty
     fields from double spaces included on both engines) and the sort
     collation (binary codepoint: digits < uppercase < '_' < lowercase)."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r = scan_table(spark, sf_dir, "region")
     return r.select(
         "r_regionkey",
         F.array_join(F.array_sort(F.split(
@@ -464,7 +465,7 @@ def probe_fn_temporal_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     temporal queries, which all run behind load_table's per-load UTC
     pin; what this probe checks is the tz-free dialect layer those
     queries' ORACLES lean on."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r = scan_table(spark, sf_dir, "region")
     k = F.col("r_regionkey")
     d0 = F.lit("1994-01-01").cast("date")
     return r.select(
@@ -499,7 +500,7 @@ def probe_fn_list_agg_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     production oracles. Spark side: order is made explicit via
     sort_array over (key, value) structs + reverse — collect_list's
     raw order is NOT relied on."""
-    r = spark.read.parquet(f"{sf_dir}/region.parquet")
+    r = scan_table(spark, sf_dir, "region")
     asc = F.array_sort(F.collect_list(
         F.struct(F.col("r_regionkey").alias("k"),
                  F.col("r_name").alias("v"))))

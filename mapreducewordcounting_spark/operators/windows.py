@@ -397,9 +397,15 @@ def window_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   AND CURRENT ROW))
         SELECT event_id,
                CAST(cum_q AS BIGINT) AS cum_qty,
-               round(CAST(cum_pq AS DOUBLE) / nullif(cum_q, 0), 6)
-                   AS vwap
-        FROM c
+               -- cum_pq / cum_q rounded half away from zero at 6
+               -- places, in integers: DuckDB divides decimals in double
+               CAST(sign(p) * sign(q) * ((2 * abs(p) + abs(q))
+                                         // (2 * nullif(abs(q), 0)))
+                    AS DOUBLE) / 1000000 AS vwap
+        FROM (SELECT event_id, cum_q,
+                     CAST(cum_pq * 1000000 AS HUGEINT) AS p,
+                     CAST(cum_q AS HUGEINT) AS q
+              FROM c)
     """,
     tags=("window", "vwap", "running", "decimal"),
 )
@@ -415,8 +421,12 @@ def window_anchored_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness discipline (the pagerank decimal rule): price is cast
     to DECIMAL(18,6) — one correctly-rounded conversion, identical on
     both engines — so BOTH running sums are exact decimal/integer
-    arithmetic, order-independent; the single double appears in the
-    final division, rounded at 6. One (type, day)-keyed exchange,
+    arithmetic, order-independent. The division and its rounding at
+    6 places (half away from zero) are exact decimal arithmetic too,
+    and the one double is the final cast of that decimal: a quotient
+    on an exact tie (59940.97 / 928 = 64.5915625 at sf0.1) would
+    otherwise round by each engine's double rounding rule, and those
+    differ. One (type, day)-keyed exchange,
     O(1) per-row frame state — the cumulative-window shape
     window_running_total pins, upgraded with real money semantics."""
     ev = load_table(spark, sf_dir, "events").select(
@@ -436,9 +446,8 @@ def window_anchored_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cum_q").cast("bigint").alias("cum_qty"),
         # nullif: a session prefix of zero-quantity ticks has no VWAP
         # (ANSI mode would otherwise raise on the division)
-        F.round(F.col("cum_pq").cast("double")
-                / F.nullif(F.col("cum_q"), F.lit(0)), 6)
-        .alias("vwap"))
+        F.round(F.col("cum_pq") / F.nullif(F.col("cum_q"), F.lit(0)), 6)
+        .cast("double").alias("vwap"))
 
 
 @register(

@@ -102,19 +102,33 @@ def is_vector_named(name: str) -> bool:
                for part in name.split("_"))
 
 
-def _walk_plan(node):
+def _walk_plan(node, final: bool = False):
     """Depth-first walk of a SparkPlan tree via py4j, descending into
-    AQE wrappers and reused subtrees."""
+    AQE wrappers: into the pre-execution initialPlan, or with ``final``
+    into the plan that ran, through each query stage to its exchange.
+    A reused exchange is a leaf: its subtree is walked where it ran."""
     cls = node.getClass().getSimpleName()
     if cls == "AdaptiveSparkPlanExec":
-        # the adaptive wrapper hides the real tree behind its
-        # pre-execution initialPlan (executedPlan only after run)
-        yield from _walk_plan(node.initialPlan())
+        yield from _walk_plan(
+            node.executedPlan() if final else node.initialPlan(), final)
         return
     yield node
+    if cls.endswith("QueryStageExec"):
+        yield from _walk_plan(node.plan(), final)
+        return
     it = node.children().iterator()
     while it.hasNext():
-        yield from _walk_plan(it.next())
+        yield from _walk_plan(it.next(), final)
+
+
+def _columns(node) -> list[str]:
+    """``name:type`` of each output column of a plan node."""
+    out: list[str] = []
+    it = node.output().iterator()
+    while it.hasNext():
+        attr = it.next()
+        out.append(f"{attr.name()}:{attr.dataType().simpleString()}")
+    return out
 
 
 def exchange_array_columns(df: DataFrame) -> list[list[str]]:
@@ -125,18 +139,54 @@ def exchange_array_columns(df: DataFrame) -> list[list[str]]:
     their scan" must return only empty lists here; each entry is
     ``name:type`` for the offending columns of one Exchange."""
     plan = df._jdf.queryExecution().executedPlan()  # type: ignore[attr-defined]
-    out: list[list[str]] = []
-    for node in _walk_plan(plan):
-        if node.getClass().getSimpleName() != "ShuffleExchangeExec":
+    return [[c for c in _columns(node.child())
+             if "array<" in c or "map<" in c]
+            for node in _walk_plan(plan)
+            if node.getClass().getSimpleName() == "ShuffleExchangeExec"]
+
+
+#: exchange class -> its SQL metrics for records and bytes written
+_WRITTEN = {
+    "ShuffleExchangeExec": ("shuffleRecordsWritten", "shuffleBytesWritten"),
+    "BroadcastExchangeExec": ("numOutputRows", "dataSize"),
+}
+
+
+def _map_side(node) -> list[str]:
+    """Node names of the pipeline under an exchange, down to the query
+    stages it reads."""
+    names: list[str] = []
+    stack = [node.child()]
+    while stack:
+        n = stack.pop()
+        names.append(n.nodeName())
+        cls = n.getClass().getSimpleName()
+        if not cls.endswith("QueryStageExec") and cls != "ReusedExchangeExec":
+            it = n.children().iterator()
+            while it.hasNext():
+                stack.append(it.next())
+    return names
+
+
+def final_exchanges(df: DataFrame) -> list[dict]:
+    """Each Exchange that ran in ``df``'s final adaptive plan, once,
+    in plan order; call it after an action on ``df``. Per exchange:
+    ``node`` (its one-line form: partitioning, and a shuffle's
+    origin), ``input`` (``name:type`` of each column it moves),
+    ``map_side`` (:func:`_map_side`), and ``records`` and ``bytes``
+    written (for a broadcast, its rows and data size)."""
+    plan = df._jdf.queryExecution().executedPlan()  # type: ignore[attr-defined]
+    out: list[dict] = []
+    for node in _walk_plan(plan, final=True):
+        written = _WRITTEN.get(node.getClass().getSimpleName())
+        if written is None:
             continue
-        fat: list[str] = []
-        it = node.child().output().iterator()
-        while it.hasNext():
-            attr = it.next()
-            t = attr.dataType().simpleString()
-            if "array<" in t or "map<" in t:
-                fat.append(f"{attr.name()}:{t}")
-        out.append(fat)
+        metrics = node.metrics()
+        records, nbytes = (metrics.get(k).get().value() for k in written)
+        out.append({"node": node.simpleString(100),
+                    "input": _columns(node.child()),
+                    "map_side": _map_side(node),
+                    "records": records, "bytes": nbytes})
     return out
 
 

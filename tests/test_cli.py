@@ -80,6 +80,31 @@ def test_explain_list():
     assert main(["no_such_query"]) == 2
 
 
+def test_explain_profile_wordcount(spark, sf_dir, capsys):
+    """explain --profile on the reference's pipeline: the final plan's
+    one exchange is the word shuffle between the partial and the final
+    aggregate, it moves (word, partial count) pairs, and its SQL
+    metrics report what it wrote: at least one record per distinct
+    word, since every word's partial count crosses it."""
+    import re
+
+    from mapreducewordcounting_spark.explain import main, print_profile
+    from mapreducewordcounting_spark.registry import queries
+
+    assert main(["no_such_query", "--profile"]) == 2
+    df = queries()["wordcount_canonical"](spark, sf_dir)
+    print_profile(df)
+    out = capsys.readouterr().out.splitlines()
+    assert out[0] == "exchanges in the final plan: 1", out
+    assert re.match(r"Exchange hashpartitioning\(word#\d+, \d+\), "
+                    r"ENSURE_REQUIREMENTS", out[1]), out
+    assert out[2] == "  input: word:string, count:bigint", out
+    m = re.fullmatch(r"  records written: (\d+), bytes written: (\d+)",
+                     out[3])
+    assert m, out
+    assert int(m.group(1)) >= df.count() > 0 and int(m.group(2)) > 0, out
+
+
 def test_cli_list():
     r = _run_cli("list")
     assert r.returncode == 0, r.stderr[-2000:]

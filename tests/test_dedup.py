@@ -183,3 +183,65 @@ def test_sharded_pairs_never_cross_shard_boundaries(spark):
                  for r in ngram_jaccard_pairs(docs, 0.8).collect()}
     assert all_pairs == {(a, b) for a in range(4) for b in range(4)
                          if a < b}, all_pairs
+
+
+def _bruteforce_jaccard_pairs(rows, threshold):
+    """Exact 3-gram Jaccard pairs from the tokenizer contract alone. A
+    doc_id's shingle list is the concatenation of its rows' distinct
+    shingles (as ngram_jaccard_pairs' collect_list builds it); a row
+    with a NULL doc_id or text, and a doc_id without shingles, pairs
+    with nothing."""
+    from itertools import combinations
+
+    from tests.bruteforce_util import canon_tokens, distinct_ngrams
+
+    lists: dict[int, list[str]] = {}
+    for doc_id, text in rows:
+        if doc_id is not None and text is not None:
+            lists.setdefault(doc_id, []).extend(
+                distinct_ngrams(canon_tokens(text), 3))
+    out = set()
+    for a, b in combinations(sorted(d for d, sh in lists.items() if sh), 2):
+        common = len(set(lists[a]) & set(lists[b]))
+        jaccard = common / (len(lists[a]) + len(lists[b]) - common)
+        if jaccard >= threshold:
+            out.add((a, b, jaccard))
+    return out
+
+
+def test_ngram_jaccard_pairs_match_bruteforce_on_edge_corpus(spark):
+    """ngram_jaccard_pairs equals the brute-force pairs on a corpus of
+    tokenizer and key edge cases: whitespace runs of tabs, vertical
+    tabs and spaces, punctuation the normalizer strips, apostrophes it
+    keeps, documents of 0, 1 and 2 tokens, a NULL text, a NULL doc_id
+    and a doc_id on two rows. The shingle sets cross the doc_id
+    exchange as one space-joined token string per row, so these are
+    the shapes a lossy round trip would break."""
+    from mapreducewordcounting_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+    )
+
+    rows = [
+        (0, "alpha beta gamma delta epsilon zeta"),
+        (1, "alpha\tbeta\x0bgamma   delta\t\tepsilon zeta"),
+        (2, "ALPHA beta, gamma delta... epsilon zeta!"),
+        (3, "don't stop me now don't stop"),
+        (4, "dont stop me now dont stop"),
+        (5, "don't  stop me\tnow don't stop 'til"),
+        (6, "one two three four"),
+        (6, "five six seven eight"),
+        (7, "one two three four five six seven eight"),
+        (8, None),
+        (9, ""),
+        (10, "... !!! --"),
+        (11, "solo"),
+        (12, "two words"),
+        (13, "two\twords"),
+        (None, "alpha beta gamma delta epsilon zeta"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    for threshold, merged in ((0.8, set()), (0.5, {(6, 7, 4 / 6)})):
+        got = {(r.id_a, r.id_b, r.jaccard)
+               for r in ngram_jaccard_pairs(docs, threshold).collect()}
+        assert got == _bruteforce_jaccard_pairs(rows, threshold), threshold
+        assert {(0, 1, 1.0), (0, 2, 1.0), (3, 5, 0.8)} | merged <= got, got

@@ -902,20 +902,24 @@ def test_jaccard_consumers_share_one_doc_id_exchange(spark, sf_dir):
     exchange, and holds no eager checkpoint (Scan ExistingRDD), with
     and without shard keys. Without the aggregate, or without the
     explicit not-null filter, consumers get exchanges of their own and
-    re-scan the corpus."""
+    re-scan the corpus. The doc_id exchange moves one row per document,
+    the keys and the joined token string, with no explode below it;
+    the frequency exchange is keyed on the shingle's 64-bit hash, not
+    on the shingle string."""
     from mapreducewordcounting_spark.catalog import load_table
     from mapreducewordcounting_spark.operators.dedup import (
         DEDUP_SHARD_SPAN,
         dedup_ngram_jaccard,
         ngram_jaccard_pairs,
     )
+    from mapreducewordcounting_spark.plans import final_exchanges
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source",
         (F.col("doc_id") / DEDUP_SHARD_SPAN).cast("bigint").alias("shard"))
-    for label, df in (
-            ("dedup_ngram_jaccard", dedup_ngram_jaccard(spark, sf_dir)),
-            ("sharded", ngram_jaccard_pairs(
+    for label, shard, df in (
+            ("dedup_ngram_jaccard", [], dedup_ngram_jaccard(spark, sf_dir)),
+            ("sharded", ["source:string", "shard:bigint"], ngram_jaccard_pairs(
                 docs, shard_cols=("source", "shard")))):
         df.collect()
         plan = simple_plan(df)
@@ -926,6 +930,21 @@ def test_jaccard_consumers_share_one_doc_id_exchange(spark, sf_dir):
         assert re.search(r"ReusedExchange \[[^\]]*\], Exchange "
                          r"hashpartitioning\(doc_id#\d+L?, \d+\), "
                          r"REPARTITION_BY_COL", final), (label, final)
+        exchanges = final_exchanges(df)
+        by_doc = [e for e in exchanges if re.match(
+            r"Exchange hashpartitioning\(doc_id#\d+L?, \d+\), "
+            r"REPARTITION_BY_COL", e["node"])]
+        assert len(by_doc) == 1, (label, exchanges)
+        assert "Generate" not in by_doc[0]["map_side"], (label, by_doc)
+        assert by_doc[0]["input"][:-1] == ["doc_id:bigint", *shard], by_doc
+        assert by_doc[0]["input"][-1].endswith(":string"), by_doc
+        # the partial count's exchange: group keys, then the count buffer
+        freq = [e["input"] for e in exchanges if e["node"].startswith(
+            "Exchange hashpartitioning") and e["input"][-1] == "count:bigint"]
+        assert len(freq) == 1, (label, exchanges)
+        assert freq[0][:len(shard)] == shard, freq
+        assert [c.split(":")[1] for c in freq[0][len(shard):]] == [
+            "bigint", "bigint"], freq
 
 
 def test_tfidf_consumers_share_one_word_exchange(spark, sf_dir):
