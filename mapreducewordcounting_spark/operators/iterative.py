@@ -1,21 +1,26 @@
 """Iterative algorithms on DataFrames (SURVEY.md §5.2 — the genuinely
 non-SQL-expressible class, checked by internal invariants).
 
-Demonstrated with k-means over the embeddings table. The iteration
-pattern is the one that scales:
+One loop rule: a driver-side loop over a bounded iteration count that
+reads only inputs cut before the loop (HaLoop's loop-invariant
+caching), checkpoints each iteration's state and releases the
+superseded snapshot. No iteration re-scans a table
+(tests/test_iterative.py counts the scans).
 
-- **assignment is a pure map stage** — centroids (k·dim floats, tiny by
-  definition) are collected to the driver once per iteration and
-  inlined as literal arrays, so assigning 10⁹ vectors is shuffle-free
-  scan + expression; no join, no window. Collecting *control state*
-  (centroids) is not the anti-pattern; collecting *data* is.
-- **update is one exchange** — posexplode dimensions, groupBy
-  (cluster, dim) average, reassemble. Shuffle volume is rows×dim
-  scalars, once per iteration.
-
-The same loop shape serves PageRank/label propagation/connected
-components (driver-side loop over a bounded iteration count with one
-shuffle per step).
+- **Graph loops** (:func:`pagerank`, :func:`bfs_min_hops`,
+  :func:`lpa_labels`, dedup's ``component_labels``) run over the
+  nation trade graph: one edge build (:func:`major_lanes` over
+  :func:`trade_edges`) and one undirected normalization
+  (:func:`undirected`, :func:`adjacency`). An iteration is a few
+  dimension-sized joins and aggregates, not one shuffle: a pagerank
+  iteration measures 12 jobs, 7 exchanges and 4 broadcast exchanges
+  at sf0.001.
+- **k-means** (:func:`lloyd`): assignment is a pure map stage —
+  centroids (k·dim floats, tiny by definition) are collected to the
+  driver once per iteration and inlined as literal arrays, so
+  assigning 10⁹ vectors is shuffle-free scan + expression. The update
+  is one (cluster, dim) aggregate. Each step scans the data it
+  clusters; that pass is the algorithm, not a lineage leak.
 """
 
 from __future__ import annotations
@@ -27,69 +32,6 @@ from mapreducewordcounting_spark.catalog import load_table
 from mapreducewordcounting_spark.checkpoints import release
 from mapreducewordcounting_spark.registry import register
 
-K_DEFAULT = 10
-ITERS_DEFAULT = 3
-
-
-def _assign(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """Nearest-centroid assignment as a single expression over literal
-    centroid arrays (shuffle-free)."""
-    dists = F.array(*[
-        F.aggregate(
-            F.zip_with("embedding", F.array(*[F.lit(x) for x in c]),
-                       lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)),
-            F.lit(0.0), lambda acc, v: acc + v)
-        for c in centroids
-    ])
-    return emb.select(
-        "vec_id", "embedding",
-        (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        .alias("cluster"),
-        F.array_min(dists).alias("sq_dist"),
-    )
-
-
-def kmeans_fit(emb: DataFrame, k: int = K_DEFAULT,
-               iters: int = ITERS_DEFAULT) -> tuple[DataFrame, list[float]]:
-    """Deterministic k-means (init = every ⌈n/k⌉-th vector by vec_id).
-    Returns (final assignment DataFrame, per-iteration inertia)."""
-    n = emb.count()
-    if n == 0:  # zero-row input: empty assignment, stable schema
-        empty = emb.select(
-            "vec_id", "embedding",
-            F.lit(0).cast("int").alias("cluster"),
-            F.lit(0.0).alias("sq_dist"))
-        return empty, []
-    step = max(n // k, 1)
-    centroids = [
-        list(r.embedding)
-        for r in emb.filter(F.col("vec_id") % step == 0)
-        .orderBy("vec_id").limit(k).collect()
-    ]
-    inertia_history: list[float] = []
-    assigned = _assign(emb, centroids)
-    for _ in range(iters):
-        inertia_history.append(
-            assigned.agg(F.sum("sq_dist")).collect()[0][0])
-        new_cents = (
-            assigned.select("cluster", F.posexplode("embedding")
-                            .alias("dim", "val"))
-            .groupBy("cluster", "dim")
-            .agg(F.avg("val").alias("mean"))
-            .groupBy("cluster")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "mean")))
-                 .alias("dims"))
-            .select("cluster", F.col("dims.mean").alias("centroid"))
-            .orderBy("cluster")
-            .collect()
-        )
-        for r in new_cents:  # clusters that lost all members keep old position
-            centroids[r.cluster] = list(r.centroid)
-        assigned = _assign(emb, centroids)
-    inertia_history.append(assigned.agg(F.sum("sq_dist")).collect()[0][0])
-    return assigned, inertia_history
-
-
 PR_DAMPING = 0.85
 PR_ITERS = 10
 
@@ -99,26 +41,32 @@ def pagerank(edges: DataFrame, nodes: DataFrame,
     """Weighted PageRank over an edge list ``(src, dst, weight)`` and a
     node list ``(node)``. Returns ``(node, rank)`` with Σrank = 1.
 
-    The scalable loop shape: ranks and edges are both DataFrames keyed
-    by node; each iteration is one join (edges ⋈ ranks on src) + one
-    aggregation (sum contributions by dst) — at 10⁹ edges that is the
-    canonical pre-partitioned join (partition both sides on node id
-    once and every iteration's shuffle is exchange-free). Dangling
-    mass (nodes with no out-edges) stays *inside the plan* as a 1-row
-    aggregate cross-joined (broadcast) onto the rank update — no
-    driver round-trip per iteration, so each iteration is exactly one
-    Spark job: the localCheckpoint that materializes the new ranks and
-    bounds lineage growth. Driver never holds data."""
+    Loop-invariant inputs are cut once, before the loop: the
+    normalized edge list ``e_norm`` and the node list. Every iteration
+    reads only those two cuts and the previous rank snapshot, never a
+    table. The nodes with out-edges (the dangling-mass mask) are
+    ``e_norm``'s sources; the left-anti join needs no ``distinct``.
+
+    Each iteration is one join (edges ⋈ ranks on src) + one
+    aggregation (sum contributions by dst), with the dangling mass a
+    1-row aggregate cross-joined (broadcast) onto the rank update, so
+    the driver never holds data. Measured on the ledger at sf0.001
+    (tools/ledger.json, ``pagerank_nation_trade``): an iteration costs
+    12 jobs, 7 exchanges and 4 broadcast exchanges; the new ranks are
+    checkpointed to bound lineage growth. Pre-partitioning the edges
+    and ranks on node id would make the per-iteration shuffle
+    exchange-free; it is not done."""
     n = nodes.count()
     if n == 0:  # zero-node graph: empty ranks, stable schema
         return nodes.select("node", F.lit(0.0).alias("rank"))
     out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    e_norm = (  # reused every iteration: cut lineage once
+    e_norm = (
         edges.join(out_w, "src")
         .select("src", "dst", (F.col("weight") / F.col("out_w")).alias("p"))
         .localCheckpoint(eager=True))
+    nodes = nodes.select("node").localCheckpoint(eager=True)
     ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    has_out = out_w.select(F.col("src").alias("node"))
+    has_out = e_norm.select(F.col("src").alias("node"))
     for i in range(iters):
         # ADVICE r5: the across-row sums (dangling mass, per-node
         # inflow) are the ONLY order-sensitive float steps in the
@@ -146,10 +94,9 @@ def pagerank(edges: DataFrame, nodes: DataFrame,
         # release the superseded previous iteration's snapshot
         # (VERDICT r5 item 5 — 10 iterations used to leave 10 pinned
         # rank RDDs per call in a long-lived session); the seed reads
-        # the caller's ``nodes``, so it is never released
+        # the ``nodes`` cut, which every iteration reads too
         step = (
-            nodes.select("node")
-            .join(contrib, "node", "left_outer")
+            nodes.join(contrib, "node", "left_outer")
             .crossJoin(F.broadcast(dm))
             .select("node",
                     (F.lit((1.0 - damping) / n)
@@ -161,7 +108,7 @@ def pagerank(edges: DataFrame, nodes: DataFrame,
         if i:
             release(ranks)
         ranks = step
-    release(e_norm)  # the returned plan reads only the final snapshot
+    release(e_norm, nodes)  # the returned plan reads only the final snapshot
     return ranks
 
 
@@ -263,6 +210,47 @@ def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: "major trade lane" edge filters: keep edges whose weight is at least
+#: this multiple of the mean edge weight. The threshold is computed
+#: FROM the data on both sides (one exact-integer mean), so the
+#: subgraph is engine-identical without a hardcoded, SF-dependent cut.
+#: BFS, link prediction, assortativity and LPA keep edges at 1.1x;
+#: WCC keeps a sparser graph (1.3x) so the component structure is
+#: non-trivial at every SF (giant + singletons).
+BFS_EDGE_MULT = 1.1
+WCC_EDGE_MULT = 1.3
+
+
+def major_lanes(spark: SparkSession, sf_dir: str, mult: float) -> DataFrame:
+    """``(src, dst)`` major trade lanes: the :func:`trade_edges` whose
+    weight is at least ``mult`` × the mean edge weight. The mean is an
+    exact-integer sum (Σ bigint counts < 2^53), so the double
+    threshold is bit-identical in any partition order on both
+    engines. Uncut: callers place the cut."""
+    w_all = Window.partitionBy()  # |nations|² rows max — tiny
+    return (trade_edges(spark, sf_dir)
+            .withColumn("thr", F.avg("weight").over(w_all) * mult)
+            .filter(F.col("weight") >= F.col("thr"))
+            .select("src", "dst"))
+
+
+def undirected(edges: DataFrame) -> DataFrame:
+    """``(u, v)`` with u < v: a directed ``(src, dst)`` edge list read
+    as an undirected simple graph — self-loops dropped, duplicate and
+    mirror edges collapsed. Uncut: callers place the cut."""
+    return (edges.filter(F.col("src") != F.col("dst"))
+            .select(F.least("src", "dst").alias("u"),
+                    F.greatest("src", "dst").alias("v"))
+            .distinct())
+
+
+def adjacency(und: DataFrame) -> DataFrame:
+    """The symmetric ``(u, v)`` adjacency of an :func:`undirected`
+    edge list: the list unioned with its mirror."""
+    return und.union(und.select(F.col("v").alias("u"),
+                                F.col("u").alias("v")))
+
+
 #: DuckDB twin of trade_edges (distinct edges only — weights unused)
 _TRADE_EDGES_SQL = """
     SELECT DISTINCT c.c_nationkey AS src, s.s_nationkey AS dst
@@ -326,14 +314,10 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     (tests/test_hypothesis_graph.py) checks it against an O(n³) brute
     force on arbitrary graphs, since the DuckDB oracle mirrors this
     same construction and would share a construction bug."""
-    d = edges.filter(F.col("src") != F.col("dst"))
     # The edge list is dimension-sized; materialize it once so the
     # three-way self-join (and everything downstream) never re-derives
     # the upstream build per alias.
-    e = (d.select(F.least("src", "dst").alias("u"),
-                  F.greatest("src", "dst").alias("v"))
-         .distinct()
-         .localCheckpoint())
+    e = undirected(edges).localCheckpoint()
     e1 = e.alias("e1")
     e2 = e.alias("e2")
     e3 = e.alias("e3")
@@ -357,38 +341,37 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
 #: oracle's recursive CTE (with cycles, the CTE needs an explicit cap).
 BFS_MAX_HOPS = 6
 
-#: "major trade lane" edge filter: keep edges whose weight is at least
-#: this multiple of the mean edge weight. The threshold is computed
-#: FROM the data on both sides (one exact-integer mean), so the
-#: subgraph is engine-identical without a hardcoded, SF-dependent cut.
-BFS_EDGE_MULT = 1.1
+#: DuckDB oracle of both BFS forms: a recursive CTE under DuckDB's
+#: set-semantics UNION (which bounds the walk enumeration at
+#: |nodes|×|hops| states), then ``min(hops)`` outside
+_BFS_ORACLE_SQL = f"""
+    WITH RECURSIVE w AS MATERIALIZED (
+        SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
+               count(*) AS wt
+        FROM lineitem l
+        JOIN orders o   ON l.l_orderkey = o.o_orderkey
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN supplier s ON l.l_suppkey = s.s_suppkey
+        GROUP BY 1, 2),
+    e AS MATERIALIZED (
+        SELECT src, dst FROM w
+        WHERE wt >= (SELECT {BFS_EDGE_MULT} * avg(wt) FROM w)),
+    r(node, hops) AS (
+        SELECT 0, 0
+        UNION
+        SELECT e.dst, r.hops + 1
+        FROM r JOIN e ON e.src = r.node
+        WHERE r.hops < {BFS_MAX_HOPS}
+    )
+    SELECT CAST(node AS BIGINT) AS node,
+           CAST(min(hops) AS BIGINT) AS hops
+    FROM r GROUP BY node
+"""
 
 
 @register(
     "graph_bfs_hops",
-    oracle=f"""
-        WITH RECURSIVE w AS MATERIALIZED (
-            SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-                   count(*) AS wt
-            FROM lineitem l
-            JOIN orders o   ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            GROUP BY 1, 2),
-        e AS MATERIALIZED (
-            SELECT src, dst FROM w
-            WHERE wt >= (SELECT {BFS_EDGE_MULT} * avg(wt) FROM w)),
-        r(node, hops) AS (
-            SELECT 0, 0
-            UNION
-            SELECT e.dst, r.hops + 1
-            FROM r JOIN e ON e.src = r.node
-            WHERE r.hops < {BFS_MAX_HOPS}
-        )
-        SELECT CAST(node AS BIGINT) AS node,
-               CAST(min(hops) AS BIGINT) AS hops
-        FROM r GROUP BY node
-    """,
+    oracle=_BFS_ORACLE_SQL,
     tags=("iterative", "graph", "bfs", "shortest-path"),
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -408,20 +391,12 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale posture: hop-bounded BFS over a billion-edge graph is
     |hops| shuffles of the frontier against the hash-partitioned edge
-    list; the edge build (the only fact-sized stage) is the same star
-    join PageRank uses. The mean threshold is an exact-integer sum
-    (Σ bigint counts < 2^53), so the double mean is bit-identical in
-    any partition order on both engines."""
-    edges = trade_edges(spark, sf_dir)  # (src, dst, weight=count)
-    w_all = Window.partitionBy()  # |nations|² rows max — tiny
-    e = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * BFS_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select("src", "dst"))
+    list; the edge build (the only fact-sized stage) is
+    :func:`major_lanes`."""
     nation = load_table(spark, sf_dir, "nation")
     sources = nation.filter(F.col("n_nationkey") == 0).select(
         F.col("n_nationkey").alias("node"))
-    return bfs_min_hops(e, sources)
+    return bfs_min_hops(major_lanes(spark, sf_dir, BFS_EDGE_MULT), sources)
 
 
 def bfs_min_hops(edges: DataFrame, sources: DataFrame,
@@ -454,29 +429,7 @@ def bfs_min_hops(edges: DataFrame, sources: DataFrame,
 
 @register(
     "sql_recursive_cte_bfs",
-    oracle=f"""
-        WITH RECURSIVE w AS MATERIALIZED (
-            SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-                   count(*) AS wt
-            FROM lineitem l
-            JOIN orders o   ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            GROUP BY 1, 2),
-        e AS MATERIALIZED (
-            SELECT src, dst FROM w
-            WHERE wt >= (SELECT {BFS_EDGE_MULT} * avg(wt) FROM w)),
-        r(node, hops) AS (
-            SELECT 0, 0
-            UNION
-            SELECT e.dst, r.hops + 1
-            FROM r JOIN e ON e.src = r.node
-            WHERE r.hops < {BFS_MAX_HOPS}
-        )
-        SELECT CAST(node AS BIGINT) AS node,
-               CAST(min(hops) AS BIGINT) AS hops
-        FROM r GROUP BY node
-    """,
+    oracle=_BFS_ORACLE_SQL,
     tags=("sql", "recursive-cte", "graph", "bfs"),
 )
 def sql_recursive_cte_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -506,16 +459,12 @@ def sql_recursive_cte_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear — bfs_min_hops' keyed-min loop stays the production form;
     this query is the declarative surface, priced honestly.
 
-    The oracle is graph_bfs_hops' verbatim recursive CTE (DuckDB's
-    set-semantics UNION bounds the walk there) — one oracle text, two
-    independent Spark formulations."""
-    edges = trade_edges(spark, sf_dir)  # (src, dst, weight=count)
-    w_all = Window.partitionBy()  # |nations|² rows max — tiny
-    e = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * BFS_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select(F.col("src").cast("bigint").alias("src"),
-                 F.col("dst").cast("bigint").alias("dst")))
+    The oracle is graph_bfs_hops' recursive CTE, ``_BFS_ORACLE_SQL``
+    (DuckDB's set-semantics UNION bounds the walk there) — one oracle
+    text, two independent Spark formulations."""
+    e = major_lanes(spark, sf_dir, BFS_EDGE_MULT).select(
+        F.col("src").cast("bigint").alias("src"),
+        F.col("dst").cast("bigint").alias("dst"))
     # Materialize the edge list BEFORE the recursion: UnionLoop
     # re-executes the recursive step's full sub-plan every iteration,
     # so an un-cut lineage would re-run the fact-scale star join once
@@ -538,6 +487,78 @@ def sql_recursive_cte_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
+#: k-means config (VERDICT r10 item 5): FIXED iteration count so the
+#: loop unrolls into chained CTEs for the oracle (the pagerank/LPA
+#: precedent), deterministic seeding (every floor(n/k)-th vector by
+#: vec_id), ties on (distance, cluster) — no RNG anywhere, so the
+#: spark.ml-free loop is exactly reproducible
+KM_DET_K = 10
+KM_DET_ITERS = 3
+
+
+def nearest_centroid(emb: DataFrame,
+                     cents: list[list[float]]) -> DataFrame:
+    """``(vec_id, embedding, cluster, sq_dist)``: each vector's nearest
+    centroid by squared distance, ties to the smallest cluster index.
+    One expression over literal centroid arrays, so assigning 10⁹
+    vectors is a shuffle-free scan + expression: no join, no window."""
+    dists = F.array(*[
+        F.aggregate(
+            F.zip_with("embedding", F.array(*[F.lit(x) for x in c]),
+                       lambda a, b: (a.cast("double") - b)
+                       * (a.cast("double") - b)),
+            F.lit(0.0), lambda acc, v: acc + v)
+        for c in cents
+    ])
+    return emb.select(
+        "vec_id", "embedding",
+        (F.array_position(dists, F.array_min(dists)) - 1)
+        .cast("int").alias("cluster"),
+        F.array_min(dists).alias("sq_dist"))
+
+
+def lloyd(emb: DataFrame, k: int = KM_DET_K,
+          iters: int = KM_DET_ITERS) -> DataFrame:
+    """The final :func:`nearest_centroid` assignment after ``iters``
+    Lloyd steps from deterministic seeds (every floor(n/k)-th vector
+    by vec_id, first k). Empty clusters keep their previous centroid.
+
+    Each step is one assignment + one exact mean aggregate: per-dim
+    centroid means sum per-element DECIMAL(38,15) casts (exact integer
+    arithmetic, order-independent under any partitioning) and convert
+    to DOUBLE once, then divide by the member count. Centroids are
+    driver-bounded control state (k × dim literals per step);
+    collecting *control state* is not the anti-pattern, collecting
+    *data* is. Unlike the graph loops, each step scans the data it
+    clusters by design: the assignment IS the per-step pass."""
+    n = emb.count()
+    if n == 0:  # zero-row input: empty assignment, stable schema
+        return emb.select(
+            "vec_id", "embedding",
+            F.lit(0).cast("int").alias("cluster"),
+            F.lit(0.0).alias("sq_dist"))
+    step = max(n // k, 1)
+    cents = [[float(x) for x in r.embedding]
+             for r in emb.filter(F.col("vec_id") % step == 0)
+             .orderBy("vec_id").limit(k).collect()]
+    for _ in range(iters):
+        rows = (nearest_centroid(emb, cents)
+                .select("cluster", F.posexplode("embedding")
+                        .alias("dim", "val"))
+                .groupBy("cluster", "dim")
+                .agg((F.sum(F.col("val").cast("double")
+                            .cast("decimal(38,15)")).cast("double")
+                      / F.count("*")).alias("mean"))
+                .groupBy("cluster")
+                .agg(F.array_sort(F.collect_list(
+                    F.struct("dim", "mean"))).alias("dims"))
+                .select("cluster", F.col("dims.mean").alias("centroid"))
+                .collect())
+        for r in rows:  # empty clusters keep their previous centroid
+            cents[r.cluster] = [float(x) for x in r.centroid]
+    return nearest_centroid(emb, cents)
+
+
 @register(
     "kmeans_embeddings",
     oracle=None,  # iterative, not SQL-expressible; invariants
@@ -545,22 +566,14 @@ def sql_recursive_cte_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("iterative", "clustering", "similarity"),
 )
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster profile after 3 deterministic k-means iterations."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    assigned, _ = kmeans_fit(emb)
+    """Cluster profile (members, float-summed inertia) of
+    :func:`lloyd`'s final assignment: the rows-only twin of
+    ``kmeans_embeddings_det``."""
+    assigned = lloyd(load_table(spark, sf_dir, "embeddings"))
     return assigned.groupBy("cluster").agg(
         F.count("*").alias("n_members"),
         F.round(F.sum("sq_dist"), 6).alias("cluster_inertia"),
     )
-
-
-#: deterministic-oracled k-means config (VERDICT r10 item 5): FIXED
-#: iteration count so the loop unrolls into chained CTEs for the
-#: oracle (the pagerank/LPA precedent), deterministic seeding (every
-#: floor(n/k)-th vector by vec_id), ties on (distance, cluster) — no
-#: RNG anywhere, so the spark.ml-free loop is exactly reproducible
-KM_DET_K = 10
-KM_DET_ITERS = 3
 
 
 def _kmeans_det_oracle_sql(k: int = KM_DET_K,
@@ -635,23 +648,15 @@ def _kmeans_det_oracle_sql(k: int = KM_DET_K,
 )
 def kmeans_embeddings_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-oracled deterministic k-means (VERDICT r10 item 5) —
-    retires one rows-only entry by the pagerank/LPA playbook: FIXED
-    3 Lloyd iterations, deterministic seeding (every floor(n/k)-th
-    vector by vec_id, first k), argmin assignment with ties to the
-    smallest cluster index, and empty clusters keeping their previous
-    centroid. The spark.ml-era ``kmeans_embeddings`` stays registered
-    as the rows-only twin.
+    retires one rows-only entry by the pagerank/LPA playbook: the
+    fixed-iteration :func:`lloyd` loop, with each cluster's members,
+    smallest vec_id and inertia.
 
     Cross-engine float discipline (the pagerank DECIMAL rule): the
     ACROSS-ROW float sums — per-dim centroid means and per-cluster
-    inertia — sum per-term DECIMAL(38,15) casts (exact integer
-    arithmetic, order-independent under any partitioning) and convert
-    to DOUBLE once; the per-vector distance folds are in-order array
-    sums, the same construction the similarity oracles hash-match.
-    Centroids are driver-bounded control state (k × dim literals per
-    iteration — the kmeans-centroid precedent the judges accepted for
-    .collect() use), so each iteration is one assignment + one exact
-    mean aggregate.
+    inertia — sum per-term DECIMAL(38,15) casts and convert to DOUBLE
+    once; the per-vector distance folds are in-order array sums, the
+    same construction the similarity oracles hash-match.
 
     Scale shape: per iteration ONE scan of the fact table against k
     broadcast literal centroids (map-side argmin, no shuffle) + one
@@ -659,66 +664,12 @@ def kmeans_embeddings_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension-sized). At 100 TB that is the canonical Lloyd step;
     nothing iterative touches the driver except the k×dim centroid
     table."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    k, iters = KM_DET_K, KM_DET_ITERS
-    n = emb.count()
-    if n == 0:
-        return emb.select(
-            F.lit(0).cast("int").alias("cluster"),
-            F.lit(0).cast("bigint").alias("n_members"),
-            F.lit(0).cast("bigint").alias("min_vec_id"),
-            F.lit(0.0).alias("cluster_inertia")).limit(0)
-    step = max(n // k, 1)
-    cents: dict[int, list[float]] = {
-        i: [float(x) for x in r.embedding]
-        for i, r in enumerate(
-            emb.filter(F.col("vec_id") % step == 0)
-            .orderBy("vec_id").limit(k).collect())
-    }
-
-    def assign(centroids: dict[int, list[float]]) -> DataFrame:
-        dists = F.array(*[
-            F.aggregate(
-                F.zip_with("embedding",
-                           F.array(*[F.lit(x) for x in centroids[c]]),
-                           lambda a, b: (a.cast("double") - b)
-                           * (a.cast("double") - b)),
-                F.lit(0.0), lambda acc, v: acc + v)
-            for c in sorted(centroids)
-        ])
-        return emb.select(
-            "vec_id", "embedding",
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("int").alias("cluster"),
-            F.array_min(dists).alias("sq_dist"))
-
-    for _ in range(iters):
-        rows = (assign(cents)
-                .select("cluster", F.posexplode("embedding")
-                        .alias("dim", "val"))
-                .groupBy("cluster", "dim")
-                .agg((F.sum(F.col("val").cast("double")
-                            .cast("decimal(38,15)")).cast("double")
-                      / F.count("*")).alias("mean"))
-                .groupBy("cluster")
-                .agg(F.array_sort(F.collect_list(
-                    F.struct("dim", "mean"))).alias("dims"))
-                .select("cluster", F.col("dims.mean").alias("centroid"))
-                .collect())
-        for r in rows:  # empty clusters keep their previous centroid
-            cents[r.cluster] = [float(x) for x in r.centroid]
-
-    return (assign(cents)
+    return (lloyd(load_table(spark, sf_dir, "embeddings"))
             .groupBy("cluster")
             .agg(F.count("*").alias("n_members"),
                  F.min("vec_id").cast("bigint").alias("min_vec_id"),
                  F.round(F.sum(F.col("sq_dist").cast("decimal(38,15)"))
                          .cast("double"), 6).alias("cluster_inertia")))
-
-
-#: WCC keeps a sparser graph than BFS (1.3x mean edge weight) so the
-#: component structure is non-trivial at every SF (giant + singletons)
-WCC_EDGE_MULT = 1.3
 
 
 @register(
@@ -758,37 +709,27 @@ def graph_wcc_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     the graph-partitioning primitive behind 'which markets actually
     trade with each other': edges above 1.3x the mean lane weight
     (sparser than BFS's 1.1x so the structure is non-trivial — a
-    giant component plus isolated nations at every SF), symmetrized,
-    labeled by dedup's component_labels (the SAME min-label
-    machinery that clusters near-duplicate documents — one
-    implementation, three consumers: dedup_clusters,
-    dedup_semantic_clusters, and this graph view), singletons
-    restored from the nation dim so components partition ALL nations.
+    giant component plus isolated nations at every SF), labeled by
+    dedup's pair_graph_labels (the SAME min-label machinery that
+    clusters near-duplicate documents), singletons restored from the
+    nation dim so components partition ALL nations.
     Output: (component = min nation id, n_nodes).
 
-    Scale: the edge build is the PageRank/BFS star join; label
-    propagation is one groupBy exchange per sweep over the
-    (dimension-sized here, arbitrary in general) edge list with
-    convergence-checked snapshots — the posture that holds when the
-    graph grows with the data, unlike closure enumeration. Oracle:
-    DuckDB set-semantics recursive closure (start-label pairs, min
-    per node) — an independent algorithm."""
+    Scale: the edge build is :func:`major_lanes`; label propagation
+    is one groupBy exchange per sweep over the (dimension-sized here,
+    arbitrary in general) edge list with convergence-checked
+    snapshots — the posture that holds when the graph grows with the
+    data, unlike closure enumeration. Oracle: DuckDB set-semantics
+    recursive closure (start-label pairs, min per node) — an
+    independent algorithm."""
     from mapreducewordcounting_spark.operators.dedup import (
-        component_labels,
+        pair_graph_labels,
     )
 
-    edges = trade_edges(spark, sf_dir)  # (src, dst, weight=count)
-    w_all = Window.partitionBy()  # |nations|² rows max — tiny
-    d = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * WCC_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select(F.col("src").cast("bigint").alias("id_a"),
-                 F.col("dst").cast("bigint").alias("id_b")))
-    sym = d.unionByName(d.select(F.col("id_b").alias("id_a"),
-                                 F.col("id_a").alias("id_b")))
-    sym = sym.localCheckpoint(eager=True)  # lineage-cut: the loop re-reads it
-    labels = component_labels(sym)  # (node, label)
-    release(sym)
+    lanes = major_lanes(spark, sf_dir, WCC_EDGE_MULT)
+    labels = pair_graph_labels(lanes.select(
+        F.col("src").cast("bigint").alias("id_a"),
+        F.col("dst").cast("bigint").alias("id_b")))
     nations = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").cast("bigint").alias("node"))
     full = (nations.join(labels, "node", "left")
@@ -817,13 +758,9 @@ def jaccard_link_scores(edges: DataFrame) -> DataFrame:
     budget, never |V|²; degrees are a dimension-sized aggregate
     broadcast back; the existing-edge removal is one anti-join on the
     oriented edge set."""
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("u"),
-                   F.greatest("src", "dst").alias("v"))
-           .distinct()
-           .localCheckpoint())  # 3 consumers: adjacency, anti-join, degrees
-    adj = und.union(und.select(F.col("v").alias("u"),
-                               F.col("u").alias("v")))
+    # 3 consumers: adjacency, anti-join, degrees
+    und = undirected(edges).localCheckpoint()
+    adj = adjacency(und)
     deg = adj.groupBy("u").agg(F.count("*").alias("deg"))
     a_side = adj.select(F.col("v").alias("c"), F.col("u").alias("a"))
     b_side = adj.select(F.col("u").alias("c2"), F.col("v").alias("b"))
@@ -895,23 +832,15 @@ def graph_jaccard_link_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     major-trade-lane graph (graph_bfs_hops' subgraph): which nation
     pairs do NOT trade today but share the most trading partners —
     the classic 'who should trade next' recommender primitive
-    (Liben-Nowell & Kleinberg 2003), and the fourth consumer of the
-    one trade-graph machinery (BFS, WCC, triangles, now link
-    prediction). Top-{LINKPRED_TOP_K} candidate pairs by
-    (jaccard DESC, a, b).
+    (Liben-Nowell & Kleinberg 2003). Top-{LINKPRED_TOP_K} candidate
+    pairs by (jaccard DESC, a, b).
 
-    The fact-sized stage is the shared trade_edges star join; the
+    The fact-sized stage is the :func:`major_lanes` edge build; the
     wedge join, degree aggregate, anti-join and ranking all run on
     the dimension-sized edge list. Jaccard = exact BIGINT counts in
     one double division (identical operands on both engines), and the
     rank key (score DESC, a, b) is total so ties are deterministic."""
-    edges = trade_edges(spark, sf_dir)
-    w_all = Window.partitionBy()
-    e = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * BFS_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select("src", "dst"))
-    scored = jaccard_link_scores(e)
+    scored = jaccard_link_scores(major_lanes(spark, sf_dir, BFS_EDGE_MULT))
     w_rank = Window.orderBy(F.desc("jaccard"), F.asc("a"), F.asc("b"))
     return (scored.withColumn("rnk", F.row_number().over(w_rank))
             .filter(F.col("rnk") <= LINKPRED_TOP_K)
@@ -967,8 +896,8 @@ def graph_degree_assortativity(spark: SparkSession,
     2002): the Pearson correlation of endpoint degrees over all edge
     ends — positive means hubs trade with hubs (a core-periphery
     economy shows strongly negative). One number that summarizes the
-    topology the BFS/WCC/triangle/link-pred family walks, and the
-    sixth consumer of the shared trade-graph machinery.
+    topology the BFS/WCC/triangle/link-pred family walks, over the
+    :func:`major_lanes` graph.
 
     Every sufficient statistic (M, Σx, Σy, Σxy, Σx², Σy²) is an exact
     BIGINT sum of integer degrees — no float accumulates anywhere, so
@@ -978,19 +907,9 @@ def graph_degree_assortativity(spark: SparkSession,
     edge-end join, and the 6-number fold all run on the
     dimension-sized edge list (both orientations included, the
     standard undirected convention)."""
-    edges = trade_edges(spark, sf_dir)
-    w_all = Window.partitionBy()
-    e = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * BFS_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select("src", "dst"))
-    und = (e.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("u"),
-                   F.greatest("src", "dst").alias("v"))
-           .distinct()
+    und = (undirected(major_lanes(spark, sf_dir, BFS_EDGE_MULT))
            .localCheckpoint())  # adjacency + degree consumers
-    adj = und.union(und.select(F.col("v").alias("u"),
-                               F.col("u").alias("v")))
+    adj = adjacency(und)
     deg = adj.groupBy("u").agg(F.count("*").alias("deg"))
     da = deg.select(F.col("u").alias("a"), F.col("deg").alias("x"))
     db = deg.select(F.col("u").alias("b"), F.col("deg").alias("y"))
@@ -1027,10 +946,15 @@ def lpa_labels(adj: DataFrame) -> DataFrame:
     sweeps over the SYMMETRIC ``(u, v)`` adjacency ``adj``: every node
     starts as its own label and adopts the most frequent neighbor
     label, ties to the smallest. The labels (one row per node, at most
-    one per nation) broadcast, so AQE has no join to re-plan. Each
-    sweep's labels are checkpointed and the superseded sweep released;
-    the seed reads ``adj``, which every sweep re-reads, so it is never
-    released. Only the final snapshot stays pinned."""
+    one per nation) broadcast, so AQE has no join to re-plan.
+
+    Every sweep re-reads ``adj``, so callers pass it cut. The cut is
+    the caller's because ``graph_modularity_score`` reads the same
+    adjacency after the loop: a second cut in here would cost it one
+    more job (measured on the ledger). Each sweep's labels are
+    checkpointed and the superseded sweep released; the seed reads
+    ``adj``, so it is never released. Only the final snapshot stays
+    pinned."""
     labels = adj.select("u").distinct().select(
         F.col("u").alias("node"), F.col("u").alias("label"))
     for i in range(LPA_ITERS):
@@ -1099,10 +1023,10 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own label and repeatedly adopts the most frequent label among
     its neighbors (ties to the SMALLEST label — the deterministic
     variant, since classic random-tie LPA is irreproducible by
-    design), for a FIXED 5 sweeps. Emits (community, size, min
-    member). The seventh consumer of the shared trade-graph machinery
-    and the modularity-flavored sibling of graph_wcc_trade: WCC asks
-    "connected at all", LPA asks "densely connected together".
+    design), for a FIXED 5 sweeps, over the :func:`major_lanes`
+    graph. Emits (community, size, min member). The modularity-flavored
+    sibling of graph_wcc_trade: WCC asks "connected at all", LPA asks
+    "densely connected together".
 
     Fixed iteration count => the loop unrolls into chained CTEs for
     the oracle (the pagerank_nation_trade precedent), so this
@@ -1111,19 +1035,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(struct(n, -label)) — exact integers, no RNG); at a
     billion-edge graph each sweep is the canonical pre-partitioned
     join, the BFS/pagerank budget."""
-    edges = trade_edges(spark, sf_dir)
-    w_all = Window.partitionBy()
-    e = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * BFS_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select("src", "dst"))
-    und = (e.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("u"),
-                   F.greatest("src", "dst").alias("v"))
-           .distinct())
-    adj = (und.union(und.select(F.col("v").alias("u"),
-                                F.col("u").alias("v")))
-           .localCheckpoint())  # reused every sweep
+    adj = adjacency(undirected(
+        major_lanes(spark, sf_dir, BFS_EDGE_MULT))).localCheckpoint()
     labels = lpa_labels(adj)
     release(adj)  # the returned plan reads only the final snapshot
     return (labels.groupBy("label")
@@ -1185,19 +1098,8 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     divisions are the only doubles, rounded at 6. Spark side re-runs
     the LPA loop (dimension-sized) and adds two joins + one fold —
     all on the |nodes| grain."""
-    edges = trade_edges(spark, sf_dir)
-    w_all = Window.partitionBy()
-    e = (edges
-         .withColumn("thr", F.avg("weight").over(w_all) * BFS_EDGE_MULT)
-         .filter(F.col("weight") >= F.col("thr"))
-         .select("src", "dst"))
-    und = (e.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("u"),
-                   F.greatest("src", "dst").alias("v"))
-           .distinct())
-    adj = (und.union(und.select(F.col("v").alias("u"),
-                                F.col("u").alias("v")))
-           .localCheckpoint())
+    adj = adjacency(undirected(
+        major_lanes(spark, sf_dir, BFS_EDGE_MULT))).localCheckpoint()
     labels = lpa_labels(adj)
     deg = adj.groupBy("u").agg(F.count("*").alias("deg"))
     la = labels.select(F.col("node").alias("u"),

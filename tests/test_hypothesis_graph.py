@@ -219,18 +219,15 @@ def test_degree_assortativity_matches_bruteforce(spark_h, edges):
     import math as m
 
     from mapreducewordcounting_spark.operators.iterative import (
-        graph_degree_assortativity,  # noqa: F401 (import = registration)
+        adjacency,
+        undirected,
     )
     from pyspark.sql import functions as F
 
     df = (spark_h.createDataFrame(edges, "src INT, dst INT") if edges
           else spark_h.createDataFrame([], "src INT, dst INT"))
     # inline the operator's post-edge pipeline on the raw edge list
-    und = (df.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("u"),
-                   F.greatest("src", "dst").alias("v")).distinct())
-    adj = und.union(und.select(F.col("v").alias("u"),
-                               F.col("u").alias("v")))
+    adj = adjacency(undirected(df))
     deg = adj.groupBy("u").agg(F.count("*").alias("deg"))
     da = deg.select(F.col("u").alias("a"), F.col("deg").alias("x"))
     db = deg.select(F.col("u").alias("b"), F.col("deg").alias("y"))
@@ -282,20 +279,17 @@ def test_label_propagation_matches_bruteforce(spark_h, edges):
     its final snapshot pinned."""
     from collections import Counter
 
-    from pyspark.sql import functions as F
     from mapreducewordcounting_spark.checkpoints import n_pinned, release
     from mapreducewordcounting_spark.operators.iterative import (
         LPA_ITERS,
+        adjacency,
         lpa_labels,
+        undirected,
     )
 
     df = (spark_h.createDataFrame(edges, "src INT, dst INT") if edges
           else spark_h.createDataFrame([], "src INT, dst INT"))
-    und = (df.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("u"),
-                   F.greatest("src", "dst").alias("v")).distinct())
-    adj = und.union(und.select(F.col("v").alias("u"),
-                               F.col("u").alias("v")))
+    adj = adjacency(undirected(df))
     base = n_pinned(spark_h)
     labels = lpa_labels(adj)
     assert n_pinned(spark_h) - base <= 1  # only the final sweep

@@ -21,9 +21,11 @@ from mapreducewordcounting_spark.operators.relational import (
 from mapreducewordcounting_spark.operators.wordcount import word_count
 from mapreducewordcounting_spark.plans import (
     exchange_array_columns,
+    exchange_input_names,
     formatted_plan,
     has_broadcast_join,
     has_partial_aggregation,
+    is_vector_named,
     n_exchanges,
     pushed_filters,
     read_schema_columns,
@@ -984,3 +986,32 @@ def test_tfidf_consumers_share_one_word_exchange(spark, sf_dir):
     one_key = re.findall(
         r"\+- Exchange hashpartitioning\((\w+)#\d+L?, \d+\)", final)
     assert sorted(one_key) == ["doc_id", "word"], final
+
+
+def test_is_vector_named_component_matching():
+    """Vector columns match on '_'-separated name components, not raw
+    substrings."""
+    assert is_vector_named("emb")
+    assert is_vector_named("q_emb")
+    assert is_vector_named("a_emb")
+    assert is_vector_named("embedding")
+    assert is_vector_named("c_embedding")
+    assert is_vector_named("embeddings")
+    # the ADVICE false-positives: 'emb' as a raw substring only
+    assert not is_vector_named("members")
+    assert not is_vector_named("n_members")
+    assert not is_vector_named("december")
+
+
+def test_exchange_input_names_parses_names(spark):
+    """Names come back parsed (no '#id' suffixes) for a plan with a
+    real shuffle exchange."""
+    df = (spark.range(100)
+          .select((F.col("id") % 7).alias("members"),
+                  F.col("id").alias("value"))
+          .groupBy("members").agg(F.sum("value").alias("total")))
+    names = exchange_input_names(df)
+    assert names, "expected the aggregate exchange"
+    flat = [n for cols in names for n in cols]
+    assert all("#" not in n for n in flat)
+    assert any("members" in cols for cols in names), names

@@ -58,7 +58,7 @@ BNL_ALLOWED = {
     "dedup_embedding_cosine": "K-row (B×(B+1)/2 block-pair key table)",
     "dedup_semantic_clusters": "K-row (dedup_embedding_cosine's "
                                "B×(B+1)/2 block-pair key table, in the "
-                               "pair_graph_labels edge-list checkpoint "
+                               "component_labels edge-list checkpoint "
                                "build)",
     "drift_psi_value": "1-row x2 (the time-midpoint split attached to "
                        "the events twice, for the reference-window "

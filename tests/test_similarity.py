@@ -1,19 +1,26 @@
 """Recall tests for the approximate similarity paths vs brute force
 (the fixture embeddings are near-random — max pairwise cosine ≈ 0.51 —
 so bars are structural, not quality claims), and the df-cap boundary
-of the sparse tf-idf index on a hand-built corpus."""
+of the sparse tf-idf index on a hand-built corpus, the anchor
+assignment's zero-norm guard and the IVF index's session-scoped path."""
 
 from __future__ import annotations
 
+import os
+
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
+from mapreducewordcounting_spark.operators.io_roundtrip import _io_path
 from mapreducewordcounting_spark.operators.similarity import (
     K,
     N_QUERIES,
     TFIDF_COS_MIN,
     TFIDF_DF_CAP,
+    _anchor_argmax_assign,
     similarity_ann_ivf,
+    similarity_ann_ivf_pruned,
     similarity_ann_lsh,
     similarity_tfidf_pairs,
     similarity_topk_bruteforce,
@@ -244,3 +251,38 @@ def test_tfidf_df_cap_boundary(spark, tmp_path):
     assert [r[:2] for r in got] == pairs
     for g, e in zip(got, expected):
         assert abs(g[2] - e[2]) < 1e-6
+
+
+def test_anchor_argmax_zero_norm_vector_raises(spark):
+    """A zero-norm vector has a NULL cosine to every anchor, so the
+    strict fold would leave it on the seed sentinel a_id=-1: a phantom
+    cell. The a_id expression raises at execution time instead."""
+    anchors = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+        "a_id long, a_emb array<double>")
+    emb = spark.createDataFrame(
+        [(7, [0.0, 0.0])], "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="unassignable|vec_id=7"):
+        _anchor_argmax_assign(emb, anchors).collect()
+
+
+def test_anchor_argmax_normal_vectors_still_assign(spark):
+    anchors = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+        "a_id long, a_emb array<double>")
+    emb = spark.createDataFrame(
+        [(7, [2.0, 0.1]), (8, [0.1, 3.0]), (9, [1.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    got = {r.vec_id: r.a_id
+           for r in _anchor_argmax_assign(emb, anchors).collect()}
+    # 9 ties on cosine -> smallest a_id wins (the strict-fold rule)
+    assert got == {7: 0, 8: 1, 9: 0}
+
+
+def test_ivf_pruned_store_path_is_session_scoped(spark, sf_dir):
+    """The at-rest index path carries the session's applicationId, so
+    two sessions on the same sf dir never race overwrite-against-read."""
+    similarity_ann_ivf_pruned(spark, sf_dir)
+    app_id = spark.sparkContext.applicationId
+    store = _io_path(sf_dir, f"ivf_index_{app_id}")
+    assert os.path.isdir(store), store
