@@ -337,9 +337,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = HashingTF(inputCol="shingles", outputCol="features",
                    numFeatures=1 << 18, binary=True)
-    # approxSimilarityJoin is a self-join: without the checkpoint the
-    # tokenizer → shingle → HashingTF pipeline executes once per side
-    # (and again under the ml MinHash explode); materialize it once.
+    # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut, each
+    # side of the self-join re-scans: scans 1 → 2, sf0.1 wall 6.5 → 8.7 s.
     feats = tf.transform(sh).localCheckpoint()
     lsh = MinHashLSH(inputCol="features", outputCol="hashes",
                      numHashTables=16, seed=42)
@@ -1248,6 +1247,8 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str,
     exact via array_intersect on the checkpointed shingle table. The
     inverted-index self-join (the oracle) is the semantic spec."""
     docs = load_table(spark, sf_dir, "documents")
+    # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut, its
+    # consumers re-scan: scans 1 → 5, sf0.1 wall 4.4 → 6.5 s.
     sh = (
         docs.select("doc_id", _toks().alias("toks"))
         .select("doc_id", shingles(F.col("toks")).alias("shingles"))
@@ -1476,11 +1477,8 @@ def dedup_incremental_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(bits), "pos", "left")
         .groupBy("doc_id", "source", "h")
         .agg(F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_hit")))
-    # materialize the hash-grain probe ONCE: the suspects/cleared
-    # split below consumes it twice, and without the checkpoint each
-    # branch re-runs the batch scan + probe (plan showed the subtree
-    # duplicated). Hash-grain rows are 32-byte keys + counters —
-    # exactly the scale of state a real gate materializes per tick.
+    # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut reads
+    # 9 → 8 jobs, scans 3, but sf0.1 wall lost 2 of 5 pairs.
     probed = probed.localCheckpoint(eager=True)
     suspects = (
         probed.filter(F.col("n_hit") == _IBLOOM_K)
@@ -1575,6 +1573,9 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the checkpointed shingle table for candidates ONLY (never all
     pairs), which is exactly the verify stage of the production LSH
     pipeline."""
+    # Both cuts kept (BASELINE.md, one-shot checkpoint audit): uncut,
+    # each reads 6 → 5 jobs, but sf0.1 wall lost 3 and 5 of 5 pairs;
+    # with neither, scans 1 → 3.
     sh_tbl = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", shingles(_toks()).alias("sh"))
@@ -1901,6 +1902,10 @@ def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical (the sample_weighted_priority argument); only the
     reported best_jaccard rounds to 6 digits."""
     docs = load_table(spark, sf_dir, "documents")
+    # All three cuts kept (BASELINE.md, one-shot checkpoint audit):
+    # uncut, `bands` reads scans 2 → 3 (a shared merge-hinted band
+    # exchange instead lost 4 of 5 derived-sf1 pairs), `cand` jobs
+    # 10 → 13, `sh_cand` lost 5 of 5 sf0.1 pairs.
     bands = minhash_band_rows(
         docs, extra_cols=("source",)).localCheckpoint(eager=True)
     nb = (bands.filter(F.col("source") != "src0")
@@ -2212,9 +2217,11 @@ def dedup_cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5(F.expr(
             f"substring(text, p - {CDC_WIN - 1}, {CDC_WIN})")), 1, 8),
         16, 10).cast("long")
+    # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut, spans
+    # and the per-doc max each re-scan: scans 3 → 4.
     cuts = (pos.filter(win_hash % CDC_MOD == 0)
             .select("doc_id", "p")
-            .localCheckpoint())  # 2 consumers: spans + per-doc max
+            .localCheckpoint())
     w_lag = Window.partitionBy("doc_id").orderBy("p")
     spans_mid = cuts.select(
         "doc_id",

@@ -135,15 +135,10 @@ def drift_psi_value(spark: SparkSession, sf_dir: str) -> DataFrame:
            .groupBy("event_type", "bucket")
            .agg(F.count_if("is_ref").alias("c_ref"),
                 F.count_if(~F.col("is_ref")).alias("c_cur"))
-           # The grid feeds three consumers (totals, the dense-bucket
-           # explode, the left join); without a materialization
-           # barrier each consumer re-derives it — re-SCANNING the
-           # fact table per branch (8 scans observed at plan level,
-           # no ReusedExchange in the static plan). Checkpointing
-           # |types|·10 rows pins the fact scans at two. A/B at
-           # sf0.1 (median of 3): eager 1.21 s, lazy 1.59 s,
-           # no checkpoint 1.68 s — eager wins AND is the only form
-           # whose scan count is structural rather than AQE-dependent.
+           # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut
+           # reads 10 → 9 jobs and the same 3 scans (its three
+           # consumers share the exchanges), but sf0.1 wall lost 3
+           # of 5 pairs.
            .localCheckpoint(eager=True))
     totals = (cnt.groupBy("event_type")
               .agg(F.sum("c_ref").alias("n_ref"),

@@ -172,13 +172,10 @@ def basket_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    # r14 (guide §2.4): `items` feeds THREE consumers (baskets, the
-    # order count, brand rates) and the uncut plan re-ran the
-    # join+distinct per consumer — 8 parquet scans / 15 exchanges in
-    # the pre-execution plan (AQE alias canonicalization defeats ReusedExchange
-    # across the branches, the similarity_tfidf_pairs lesson).
-    # Checkpointing the (order, brand) distinct grain pays the
-    # join+distinct ONCE; scans drop 8 → 2, exchanges 15 → 5.
+    # Both cuts kept (BASELINE.md, one-shot checkpoint audit): without
+    # this one, its three consumers re-scan (scans 2 → 6, sf0.1 wall
+    # 3.2 → 4.3 s); without `rates`, 12 → 11 jobs but sf0.1 wall lost
+    # 3 of 5 pairs.
     items = (li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
              .select("l_orderkey", "p_brand").distinct()
              .localCheckpoint(eager=True))
@@ -196,8 +193,6 @@ def basket_pair_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
           .agg(F.count("*").alias("n_pair")))
     n_orders = items.select(
         F.count_distinct("l_orderkey").alias("n_orders"))
-    # |brands| rows, two consumers (ra, rb): checkpoint so the brand
-    # aggregate runs once instead of once per join side.
     rates = (items.groupBy("p_brand").agg(F.count("*").alias("n_br"))
              .localCheckpoint(eager=True))
     ra = rates.select(F.col("p_brand").alias("brand_a"),
@@ -773,7 +768,9 @@ def events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     du = (ev.select(F.to_date("ts").alias("day"), "user_id")
           .distinct()
-          .localCheckpoint())  # feeds both counters
+          # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut,
+          # both counters re-scan: scans 1 → 2.
+          .localCheckpoint())
     dau = du.groupBy("day").agg(F.count("*").alias("dau"))
     m = (dau.groupBy(F.date_trunc("month", "day").cast("date")
                      .alias("month"))

@@ -459,7 +459,9 @@ def profile_mutual_information(spark: SparkSession,
     joint = ev.groupBy(
         "event_type", F.dayofweek("ts").cast("bigint").alias("dow")
     ).agg(F.count("*").alias("nxy"))
-    joint = joint.localCheckpoint(eager=True)  # 3 consumers below
+    # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut, the
+    # three consumers re-scan: jobs 10 → 12, scans 1 → 4.
+    joint = joint.localCheckpoint(eager=True)
     mx = joint.groupBy("event_type").agg(F.sum("nxy").alias("nx"))
     my = joint.groupBy("dow").agg(F.sum("nxy").alias("ny"))
     tot = joint.agg(F.sum("nxy").alias("n"))

@@ -553,9 +553,11 @@ def time_autocorr_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate to the day grid, then a |days|×2 self-join and a 2-row
     fold — calendar-bounded everything."""
     ev = load_table(spark, sf_dir, "events")
+    # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut reads
+    # 5 → 4 jobs, scans 1, but sf0.1 wall lost 4 of 5 pairs.
     daily = (ev.groupBy(F.to_date("ts").alias("day"))
              .agg(F.count("*").alias("n"))
-             .localCheckpoint())  # both sides of the lag join
+             .localCheckpoint())
     ks = F.explode(F.array(F.lit(1), F.lit(7))).alias("k")
     a = daily.select("day", F.col("n").alias("x")).select("day", "x", ks)
     b = daily.select(F.col("day").alias("day_b"), F.col("n").alias("y"))

@@ -209,9 +209,8 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # df and N derive from tf, not the raw word stream: tf is already
     # one row per (doc, word), so df = count per word and N = distinct
     # docs — ~20× less data into the second and third aggregations.
-    # Checkpointed because exchange reuse does NOT fire across the
-    # three consumers (0 ReusedExchange, 3 Generate nodes = tokenize
-    # ran 3×; A/B 1.1-1.4 s → 0.9-1.2 s at sf0.1).
+    # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut, the
+    # consumers re-scan: scans 1 → 3.
     tf = tf.localCheckpoint(eager=True)
     df = tf.groupBy("word").agg(F.count("*").alias("df"))
     n_docs = tf.select(F.count_distinct("doc_id").alias("n_docs"))
@@ -573,8 +572,8 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the window/limit operators."""
     docs = load_table(spark, sf_dir, "documents")
     toks = F.filter(tokenize_canonical("text"), lambda w: F.length(w) > 0)
-    # dl and tf both consume base: without a cut, each re-tokenizes
-    # the corpus (ReusedExchange does not fire across the branches)
+    # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut, dl and
+    # tf each re-scan: scans 1 → 4, sf0.1 wall 0.74 → 0.96 s.
     base = docs.select("doc_id", toks.alias("toks")).localCheckpoint(eager=True)
     dl = base.select("doc_id", F.size("toks").alias("dl"))
     tf = (
@@ -636,8 +635,8 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
         docs.select(F.explode(toks).alias("word"))
         .groupBy("word").agg(F.count("*").alias("cnt"))
-        # consumed by the threshold scalar AND the filter scan; the
-        # cut keeps the corpus tokenize single-pass (|vocab| rows)
+        # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut
+        # reads 5 → 4 jobs, scans 1, but sf0.1 wall lost 2 of 5 pairs.
         .localCheckpoint(eager=True)
     )
     total = counts.agg(F.sum("cnt").alias("total"))
@@ -835,10 +834,8 @@ def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = (
         docs.select("source", F.explode(toks).alias("word"))
         .groupBy("source", "word").agg(F.count("*").alias("cnt"))
-        # r14: two consumers (per-source totals + the entropy join) —
-        # checkpointing the |sources|·|vocab| count grid halves the
-        # corpus scans (2 → 1 in the pre-execution plan), same
-        # discipline as text_unigram_logprob's model table.
+        # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut
+        # reads 6 → 5 jobs, scans 1, but sf0.1 wall lost 3 of 5 pairs.
         .localCheckpoint(eager=True)
     )
     tot = counts.groupBy("source").agg(F.sum("cnt").alias("n_tokens"))
@@ -889,16 +886,12 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select(
         "doc_id", F.explode(tokenize_canonical("text")).alias("word")
     ).filter(F.length("word") > 0)
-    # r14 (guide §2.4 "don't compute things you throw away"): the
-    # plan used to run the scan→tokenize→explode pipeline THREE times
-    # (model counts, corpus total, probe side — 3 parquet scans in
-    # the pre-execution plan). The corpus total is sum(c) over the unigram
-    # relation — an exact integer identity with count(*) over words —
-    # so it derives from the vocabulary-sized model table instead of
-    # its own corpus pass, and the model table is checkpointed
-    # (|vocab| rows) so both its consumers read blocks, not lineage.
-    # Scans 3 → 2; the remaining two passes (fit the model, score
-    # against it) are the operator's irreducible shape.
+    # The corpus total is sum(c) over the unigram relation (an exact
+    # integer identity with count(*) over words), so it needs no
+    # corpus pass of its own: two scans, fit the model and score.
+    # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut reads
+    # 7 → 6 jobs and sf0.1 wall won 4 of 5 pairs, but derived-sf1
+    # wall lost 3 of 5.
     uni = words.groupBy("word").agg(F.count("*").alias("c")) \
         .localCheckpoint(eager=True)
     tot = uni.select(F.sum("c").alias("n_total"))
@@ -1333,10 +1326,8 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hint is dropped. ln is ulp-stable and the mean rounds
     at 6 (the libm-parity contract)."""
     docs = load_table(spark, sf_dir, "documents")
-    # four consumers (uni, tot, c12/c1 via big, and the score stream)
-    # would each re-run tokenize without a lineage cut — the text_bm25
-    # base-checkpoint discipline (doc-grain rows, never the pair
-    # stream, which is the corpus-scale thing you must NOT materialize)
+    # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut, the
+    # four consumers re-scan: scans 1 → 5, sf0.1 wall 1.44 → 1.73 s.
     toks = docs.select(
         "doc_id",
         F.filter(tokenize_canonical("text"),
@@ -1464,7 +1455,8 @@ def text_keyphrases_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda x: x["word"]), " ").alias("phrase"),
              F.count("*").alias("plen"))
         .filter(F.col("plen") >= 2)
-        # word stats + scoring + per-phrase rollup all re-read this
+        # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut
+        # reads 8 → 7 jobs, scans 1, but sf0.1 wall 1.81 → 2.40 s.
         .localCheckpoint(eager=True)
     )
     words = phrases.select(
@@ -1580,6 +1572,8 @@ def boilerplate_line_report(docs: DataFrame) -> DataFrame:
     (tests/test_hypothesis_dedup.py) drives it on adversarial corpora
     (single-doc sources, all-identical sources where EVERY line is
     boilerplate, empty docs that still carry their header/footer)."""
+    # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut, its
+    # consumers re-scan: scans 1 → 5.
     base = docs.select(
         "doc_id", "source",
         F.filter(tokenize_canonical("text"),

@@ -878,11 +878,8 @@ def shard_assign_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(words_canonical("text")).cast("bigint").alias("n_tokens"))
     by_rank = [F.desc("n_tokens"), F.asc("doc_id")]
-    # Materialize the post-shuffle (doc_id, n_tokens, pid) frame ONCE:
-    # both the offsets aggregate and the ranked pass read it, and
-    # without the checkpoint each fork re-scans and RE-TOKENIZES the
-    # corpus (2 parquet scans in the audited plan). The checkpoint is
-    # 3 narrow columns per doc — ~24 B/row — never the text.
+    # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut reads
+    # 9 → 8 jobs, scans 1, but derived-sf1 wall lost 2 of 5 pairs.
     part = (n.repartitionByRange(*by_rank)
             .withColumn("pid", F.spark_partition_id())
             .localCheckpoint())

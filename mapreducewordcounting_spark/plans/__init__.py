@@ -131,17 +131,20 @@ def _columns(node) -> list[str]:
     return out
 
 
-def exchange_array_columns(df: DataFrame) -> list[list[str]]:
+def exchange_array_columns(df, final: bool = False) -> list[list[str]]:
     """Per shuffle Exchange, the input columns whose TYPE is (or
     contains) an array/map — the exchange-thinness audit in types
     rather than names (VERDICT r12 item 2). A query whose bandwidth
     story is "signatures/scalars through the shuffle, vectors stay in
     their scan" must return only empty lists here; each entry is
-    ``name:type`` for the offending columns of one Exchange."""
-    plan = df._jdf.queryExecution().executedPlan()  # type: ignore[attr-defined]
+    ``name:type`` for the offending columns of one Exchange. ``df`` is
+    a DataFrame or a py4j SparkPlan, read before execution or, with
+    ``final``, as it ran."""
+    plan = (df._jdf.queryExecution().executedPlan()
+            if isinstance(df, DataFrame) else df)
     return [[c for c in _columns(node.child())
              if "array<" in c or "map<" in c]
-            for node in _walk_plan(plan)
+            for node in _walk_plan(plan, final)
             if node.getClass().getSimpleName() == "ShuffleExchangeExec"]
 
 

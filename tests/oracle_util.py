@@ -91,3 +91,25 @@ def assert_matches_oracle(spark_df, duck, sql: str,
     if s_norm != d_norm:
         diffs = [(a, b) for a, b in zip(s_norm, d_norm) if a != b][:5]
         raise AssertionError(f"value mismatch; first diffs: {diffs}")
+
+
+def derived_fixture(d: str, src_dir: str, table: str, select_sql: str):
+    """Build fixture dir ``d`` from ``src_dir``: ``table`` rewritten by
+    DuckDB as ``select_sql`` (which reads ``{src}``, the source table),
+    every other table copied through. Returns a DuckDB connection with
+    a view per table of ``d``, for the oracle side."""
+    import shutil
+
+    import duckdb
+
+    from mapreducewordcounting_spark.catalog import TABLES
+
+    con = duckdb.connect()
+    src = f"'{src_dir}/{table}.parquet'"
+    con.execute(f"COPY ({select_sql.format(src=src)}) "
+                f"TO '{d}/{table}.parquet' (FORMAT PARQUET)")
+    for t in TABLES:
+        if t != table:
+            shutil.copy(f"{src_dir}/{t}.parquet", f"{d}/{t}.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{d}/{t}.parquet'")
+    return con

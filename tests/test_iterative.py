@@ -15,7 +15,7 @@ from mapreducewordcounting_spark.operators.iterative import (
     kmeans_embeddings,
     lloyd,
 )
-from tools.measure import _last_execution_id, cost
+from tools.measure import cost
 
 
 def test_inertia_monotone_nonincreasing(spark, sf_dir):
@@ -79,22 +79,12 @@ def test_recursive_cte_bfs_equals_loop_form(spark, sf_dir):
 
 
 def _loop_cost(spark, run) -> tuple[int, int]:
-    """``(jobs, parquet scans)`` of everything ``run()`` executes: the
-    jobs as :func:`tools.measure.cost` counts them, and the ``Scan
-    parquet`` nodes in the plan graphs of the SQL executions it ran,
-    read from the status store the way ``cost()`` reads its operator
-    fields."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    first = _last_execution_id(store) + 1
+    """``(jobs, file scans)`` of everything ``run()`` executes, as
+    :func:`tools.measure.cost` counts them."""
     with cost(spark, "loop scans") as row:
         run()
-    as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
-    scans = sum(node.name().startswith("Scan parquet")
-                for eid in range(first, _last_execution_id(store) + 1)
-                for node in as_java(store.planGraph(eid).allNodes()))
     release_all_pinned(spark)
-    return row["jobs"], scans
+    return row["jobs"], row["scans"]
 
 
 def test_loop_scans_do_not_grow_with_iterations(spark, sf_dir, tmp_path,

@@ -7,7 +7,10 @@ from __future__ import annotations
 
 import statistics
 
-from mapreducewordcounting_spark.checkpoints import n_pinned
+from mapreducewordcounting_spark.checkpoints import (
+    n_pinned,
+    release_all_pinned,
+)
 from tools.bench_scale import decade_ratios
 from tools.measure import WARM_SF_DIR, measure, row_delta
 
@@ -50,13 +53,40 @@ def test_cost_counts_jobs_executions_and_plan_nodes(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
-    assert set(row) == {"jobs", "sql_executions", "python_udf_calls",
+    assert set(row) == {"jobs", "sql_executions", "scans",
+                        "python_udf_calls", "array_shuffle_inputs",
                         *OPERATORS.values(), *EXPRESSIONS}
     assert row["jobs"] >= 1
     assert row["sql_executions"] == 1
     assert row["exchanges"] == 1
     assert row["hash_calls"] >= 1
     assert row["sort_merge_joins"] == row["python_udf_calls"] == 0
+
+
+
+def test_cost_reads_checkpoint_builds(spark, tmp_path):
+    """A checkpoint build that scans a parquet file and shuffles an
+    array column: the row counts both, though the returned plan reads
+    the checkpoint's blocks and shuffles no array."""
+    from pyspark.sql import functions as F
+
+    from mapreducewordcounting_spark.plans import exchange_array_columns
+    from tools.measure import cost
+
+    path = str(tmp_path / "t")
+    spark.range(10).write.parquet(path)
+    with cost(spark) as row:
+        cut = (spark.read.parquet(path)
+               .select((F.col("id") % 3).alias("k"),
+                       F.array("id").alias("arr"))
+               .repartition("k").localCheckpoint(eager=True))
+        out = cut.groupBy("k").count()
+        out.collect()
+    release_all_pinned(spark)
+    assert row["sql_executions"] == 2
+    assert row["scans"] == 1
+    assert row["array_shuffle_inputs"] == 1
+    assert exchange_array_columns(out) == [[]]
 
 
 #: an adaptive self-join's formatted description, cut to its skeleton:
@@ -151,3 +181,42 @@ def test_decade_ratios_per_adjacent_tier_pair():
     assert ratios["q"]["ratio_sf10_vs_sf1"] == 2.0
     # r has no sf1 sample: neither ratio spans the missing tier
     assert ratios["r"] == {"sf0.1": 1.0, "sf1": None, "sf10": 5.0}
+
+
+def test_bench_control_adjudication_thresholds():
+    """A control above 1.5x its pin tags the run host_contended, one at
+    or below it does not, and a missing control timing never raises."""
+    import bench
+
+    pin = bench.CONTROL_PINS[bench.CONTROL_QUERY]
+    hot = bench.control_adjudication({bench.CONTROL_QUERY: pin * 2.0})
+    assert hot["host_contended"] is True
+    assert hot["control"]["ratio"] == 2.0
+    cool = bench.control_adjudication({bench.CONTROL_QUERY: pin * 1.4})
+    assert cool["host_contended"] is False
+    absent = bench.control_adjudication({})
+    assert absent["host_contended"] is None
+    assert absent["control"]["ratio"] is None
+
+
+def test_control_adjudication_adjudicated_cases():
+    import bench
+
+    pin = bench.CONTROL_PINS[bench.CONTROL_QUERY]
+    hot = bench.control_adjudication({bench.CONTROL_QUERY: pin * 2.0})
+    assert hot["host_contended"] is True
+    assert hot["control"]["status"] == "adjudicated"
+    assert hot["drift_kind"] == "unclassified"
+    cool = bench.control_adjudication({bench.CONTROL_QUERY: pin * 1.0})
+    assert cool["host_contended"] is False
+    assert cool["control"]["status"] == "adjudicated"
+
+
+def test_control_adjudication_missing_timing_is_unadjudicated():
+    """Without a control timing the run is not adjudicated: it fails
+    closed (null), never open (False)."""
+    import bench
+
+    out = bench.control_adjudication({})
+    assert out["host_contended"] is None
+    assert out["control"]["status"] == "unadjudicated"

@@ -14,10 +14,8 @@ The same run checks four plan invariants at any sf: no row-at-a-time
 Python UDF (``BatchEvalPython``) anywhere; a ``CartesianProduct`` only
 in ``CARTESIAN_ALLOWED``; a ``BroadcastNestedLoopJoin`` only in
 ``BNL_ALLOWED``; and no array- or map-typed shuffle input outside
-``FAT_EXCHANGE_ALLOWED``. The first three read the cost row, so they
-count every plan that executed, eager checkpoint builds included; the
-fourth reads the returned plan's exchanges
-(``plans.exchange_array_columns``).
+``FAT_EXCHANGE_ALLOWED``. All four read the cost row, so they count
+every plan that executed, eager checkpoint builds included.
 """
 
 from __future__ import annotations
@@ -28,9 +26,8 @@ import os
 import pytest
 
 from mapreducewordcounting_spark.checkpoints import checkpoints_read, pinned
-from mapreducewordcounting_spark.plans import exchange_array_columns
 from mapreducewordcounting_spark.registry import all_queries
-from tests.oracle_util import assert_matches_oracle
+from tests.oracle_util import assert_matches_oracle, derived_fixture
 from tools.measure import LEDGER_PATH, LEDGER_SF_DIR, cost
 
 _SPECS = all_queries()
@@ -167,6 +164,11 @@ FAT_EXCHANGE_ALLOWED = {
     "table), which is the bandwidth contract of any distributed "
     "matmul; projecting vectors out of this exchange would leave "
     "nothing to multiply.",
+    "dedup_semantic_clusters": "runs dedup_embedding_cosine's "
+    "block-matrix form inside component_labels' edge-list cut: its "
+    "one array input is the same embedding column into the same "
+    "bounded block exchange (1 in the ledger row, as for "
+    "dedup_embedding_cosine).",
     "dedup_minhash_lsh": "spark.ml MinHashLSH approxSimilarityJoin "
     "internals (datasetA/B structs incl. hash arrays through the "
     "explode-join) — library-owned plan kept as the spark.ml "
@@ -179,9 +181,8 @@ FAT_EXCHANGE_ALLOWED = {
 }
 
 
-def plan_invariant_problems(name, row, fat_columns):
-    """The plan invariants ``name`` breaks, given its cost ``row`` and
-    the array/map-typed columns its plan feeds to shuffle exchanges;
+def plan_invariant_problems(name, row):
+    """The plan invariants ``name`` breaks, given its cost ``row``;
     ``[]`` when it keeps them all."""
     problems = []
     if row["row_python_udf"]:
@@ -190,8 +191,9 @@ def plan_invariant_problems(name, row, fat_columns):
         problems.append(f"{row['cartesian_products']} CartesianProduct")
     if row["bnl_joins"] and name not in BNL_ALLOWED:
         problems.append(f"{row['bnl_joins']} BroadcastNestedLoopJoin")
-    if fat_columns and name not in FAT_EXCHANGE_ALLOWED:
-        problems.append(f"array/map shuffle input {sorted(fat_columns)}")
+    if row["array_shuffle_inputs"] and name not in FAT_EXCHANGE_ALLOWED:
+        problems.append(
+            f"{row['array_shuffle_inputs']} array/map shuffle input(s)")
     return problems
 
 
@@ -215,8 +217,7 @@ def _collect_at_ledger_cost(name, spark, sf_dir, ledger):
         stray = set(pinned(spark)) - before - set(checkpoints_read(df))
         rows = df.collect()
     assert not stray, f"{len(stray)} pinned RDD(s) the result never reads"
-    fat = {c for cols in exchange_array_columns(df) for c in cols}
-    assert plan_invariant_problems(name, row, fat) == []
+    assert plan_invariant_problems(name, row) == []
     if ledger is not None:
         assert row == ledger.get(name)
     return df, rows
@@ -232,6 +233,33 @@ def test_oracle_match(name, spark, duck, sf_dir, ledger):
 def test_rows_only_runs(name, spark, sf_dir, ledger):
     df, _ = _collect_at_ledger_cost(name, spark, sf_dir, ledger)
     assert len(df.columns) > 0  # runs, stable schema
+
+
+@pytest.fixture(scope="module")
+def null_values(tmp_path_factory, sf_dir):
+    """``(dir, duck)``: the fixture with every 7th ``events.value``
+    NULL; the committed fixtures hold no NULL values."""
+    d = str(tmp_path_factory.mktemp("sf_null_values"))
+    con = derived_fixture(d, sf_dir, "events", """
+        SELECT * REPLACE (
+          CASE WHEN event_id % 7 = 3 THEN NULL ELSE value END AS value)
+        FROM {src}""")
+    assert con.sql("SELECT count(*) FILTER (value IS NULL) "
+                   "FROM events").fetchone()[0] > 0
+    yield d, con
+    con.close()
+
+
+@pytest.mark.parametrize("name", ["window_ewma_smooth",
+                                  "dq_ks_two_sample"])
+def test_null_event_values_still_match_oracle(name, spark, null_values):
+    """Spark's ``collect_list`` drops NULLs where DuckDB's ``list()``
+    keeps them, and the engines sort NULLs to opposite ends: both
+    queries filter NULL values out on both engines, so they still match
+    the oracle when the events carry NULL values."""
+    d, con = null_values
+    spec = _SPECS[name]
+    assert_matches_oracle(spec.fn(spark, d), con, spec.oracle)
 
 
 def test_tpch_q11_matches_oracle_at_sf0_01(spark, sf_dir):
@@ -259,28 +287,29 @@ def test_plan_invariant_problems():
     allowed = set(CARTESIAN_ALLOWED) | set(BNL_ALLOWED) | set(
         FAT_EXCHANGE_ALLOWED)
     assert allowed <= set(_SPECS), sorted(allowed - set(_SPECS))
-    clean = {"row_python_udf": 0, "cartesian_products": 0, "bnl_joins": 0}
-    assert plan_invariant_problems("wordcount_canonical", clean, set()) == []
+    clean = {"row_python_udf": 0, "cartesian_products": 0, "bnl_joins": 0,
+             "array_shuffle_inputs": 0}
+    assert plan_invariant_problems("wordcount_canonical", clean) == []
     # a row-at-a-time UDF fails everywhere, allowlisted or not
     for name in ("wordcount_canonical", "join_cross",
                  "dedup_embedding_cosine"):
         assert plan_invariant_problems(
-            name, {**clean, "row_python_udf": 1}, set()) == [
+            name, {**clean, "row_python_udf": 1}) == [
                 "1 BatchEvalPython"]
     cross = {**clean, "cartesian_products": 1}
-    assert plan_invariant_problems("wordcount_canonical", cross, set()) == [
+    assert plan_invariant_problems("wordcount_canonical", cross) == [
         "1 CartesianProduct"]
-    assert plan_invariant_problems("join_cross", cross, set()) == []
+    assert plan_invariant_problems("join_cross", cross) == []
     bnl = {**clean, "bnl_joins": 2}
-    assert plan_invariant_problems("wordcount_canonical", bnl, set()) == [
+    assert plan_invariant_problems("wordcount_canonical", bnl) == [
         "2 BroadcastNestedLoopJoin"]
-    assert plan_invariant_problems("drift_psi_value", bnl, set()) == []
-    fat = {"vec:array<float>"}
-    assert plan_invariant_problems("wordcount_canonical", clean, fat) == [
-        "array/map shuffle input ['vec:array<float>']"]
-    assert plan_invariant_problems("similarity_ann_lsh", clean, fat) == []
+    assert plan_invariant_problems("drift_psi_value", bnl) == []
+    fat = {**clean, "array_shuffle_inputs": 1}
+    assert plan_invariant_problems("wordcount_canonical", fat) == [
+        "1 array/map shuffle input(s)"]
+    assert plan_invariant_problems("similarity_ann_lsh", fat) == []
     # an allowlist admits only its own operator
-    assert plan_invariant_problems("similarity_ann_lsh", bnl, set()) == [
+    assert plan_invariant_problems("similarity_ann_lsh", bnl) == [
         "2 BroadcastNestedLoopJoin"]
-    assert plan_invariant_problems("drift_psi_value", clean, fat) == [
-        "array/map shuffle input ['vec:array<float>']"]
+    assert plan_invariant_problems("drift_psi_value", fat) == [
+        "1 array/map shuffle input(s)"]

@@ -20,9 +20,11 @@ multi-query sweep runs first.
 ``cost`` is the reader: ``with cost(spark) as row:`` runs its body
 under a fresh job group and fills ``row`` with exact counts that host
 load cannot move — Spark jobs (the dataflow's rounds), SQL executions,
-plan-graph operators (exchanges, joins, Python-eval nodes) and plan
-expressions (HOF folds, hash calls, raise_error, Python UDF calls) in
-the executed (final) plan.
+file scans (the passes over the input tables), plan-graph operators
+(exchanges, joins, Python-eval nodes), array/map-typed shuffle inputs
+and plan expressions (HOF folds, hash calls, raise_error, Python UDF
+calls) in the executed (final) plan of every SQL execution, eager
+checkpoint builds included.
 Stages, tasks and shuffle bytes are left out: they vary with core
 count and run order, and the status store evicts skipped stages.
 
@@ -59,6 +61,9 @@ sys.path.insert(0, REPO)
 from mapreducewordcounting_spark.checkpoints import (  # noqa: E402
     release_all_pinned,
 )
+from mapreducewordcounting_spark.plans import (  # noqa: E402
+    exchange_array_columns,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: tiny fixture for per-query untimed warmups (codegen/JIT, not data)
@@ -85,6 +90,9 @@ OPERATORS = {
     "FlatMapGroupsInPandas": "pandas_group_map",
     "FlatMapCoGroupsInPandas": "pandas_cogroup",
 }
+#: a plan-graph file scan (a pass over a table's files), not a scan of
+#: a checkpoint's blocks (``Scan ExistingRDD``)
+_FILE_SCAN = re.compile(r"Scan (?:parquet|orc|json|csv|text|avro)\b")
 #: row field -> expression counted in each physical plan description
 EXPRESSIONS = {
     "hof_aggregate": re.compile(r"\baggregate\("),
@@ -177,19 +185,43 @@ def _last_execution_id(store) -> int:
     return store.executionsList(n - 1, 1).head().executionId() if n else -1
 
 
+class _Executions:
+    """A py4j ``QueryExecutionListener``: the QueryExecution of every
+    SQL execution that ends while it is registered. Its typed plan is
+    what the status store's plan strings lack."""
+
+    def __init__(self):
+        self.done: list = []
+
+    def onSuccess(self, name, qe, duration_ns):  # noqa: N802
+        self.done.append(qe)
+
+    def onFailure(self, name, qe, exception):  # noqa: N802
+        self.done.append(qe)
+
+    class Java:
+        implements = ["org.apache.spark.sql.util.QueryExecutionListener"]
+
+
 @contextmanager
 def cost(spark, label: str = "cost"):
     """Run the body under a fresh job group; on a clean exit fill the
     yielded dict with the exact cost of everything it ran (see the
     module docstring). The caller's job group and description are
     restored."""
+    from pyspark.java_gateway import ensure_callback_server_started
+
     sc = spark.sparkContext
     bus = sc._jsc.sc().listenerBus()
     store = spark._jsparkSession.sharedState().statusStore()
+    listeners = spark._jsparkSession.listenerManager()
     group = f"cost-{uuid.uuid4().hex}"
     saved = {k: sc.getLocalProperty(k) for k in _JOB_PROPS}
+    ensure_callback_server_started(sc._gateway)
     bus.waitUntilEmpty()
     first = _last_execution_id(store) + 1
+    ended = _Executions()
+    listeners.register(ended)
     row: dict[str, int] = {}
     sc.setJobGroup(group, label)
     try:
@@ -197,19 +229,26 @@ def cost(spark, label: str = "cost"):
     finally:
         for k, v in saved.items():
             sc.setLocalProperty(k, v)
-    # the status store is fed asynchronously by the listener bus
-    bus.waitUntilEmpty()
+        # the status store and the listener are fed asynchronously by
+        # the listener bus
+        bus.waitUntilEmpty()
+        listeners.unregister(ended)
     executions = range(first, _last_execution_id(store) + 1)
     row.update(jobs=len(sc.statusTracker().getJobIdsForGroup(group)),
-               sql_executions=len(executions))
+               sql_executions=len(executions), scans=0)
     row.update(dict.fromkeys(sorted(OPERATORS.values()), 0))
     row.update(dict.fromkeys(EXPRESSIONS, 0), python_udf_calls=0)
+    row["array_shuffle_inputs"] = sum(
+        len(cols) for qe in ended.done
+        for cols in exchange_array_columns(qe.executedPlan(), final=True))
+    ended.done.clear()  # frees the JVM's references to the plans
     as_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
     for eid in executions:
         for node in as_java(store.planGraph(eid).allNodes()):
             field = OPERATORS.get(node.name())
             if field:
                 row[field] += 1
+            row["scans"] += bool(_FILE_SCAN.match(node.name()))
         counts = expression_counts(
             store.execution(eid).get().physicalPlanDescription())
         for field, n in counts.items():
