@@ -1,18 +1,19 @@
 # Evidence + gates (VERDICT r5 item 6). `make check` reproduces the
-# two evidence artifacts, runs the staleness gate and every test tier,
-# and fails non-zero on any regression; `make test` / `make bench` are
-# the other two gates.
+# registry-wide driver simulation (CORRECTNESS_local_full.json), runs
+# the staleness gate and every test tier, and fails non-zero on any
+# regression; `make test` / `make bench` are the other two gates.
 
 SF_DIR ?= /root/testdata/sf0.01
 
 .PHONY: check test test-deep bench sync-check
 
 check:
-	python tools/check.py $(SF_DIR)
+	python tools/verify_full.py $(SF_DIR)
+	python tools/sync_check.py
 	python -m pytest tests/ -q -m ""
 
 # Artifact-staleness gate (VERDICT r8 item 2): committed counts must
-# agree with the live registry. Also the final stage of `make check`.
+# agree with the live registry. Also the second stage of `make check`.
 sync-check:
 	python tools/sync_check.py
 

@@ -1,8 +1,10 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract): run the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
-    {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+local[$SPARK_GRAFT_CPUS], write BENCH_DETAIL.json and print two JSON
+lines: the full contract line, then a compact summary that the driver
+parses as the last line:
+    {"metric": ..., "value": N, "unit": "sec", "sf": ..., "queries": {...}, ...}
 
 Timing protocol: tools/measure.py (one untimed sf0.001 warmup per
 query, then the median of 3 noop-sink materializations at sf0.1, after
@@ -15,6 +17,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+from importlib.metadata import version
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -239,43 +242,23 @@ def main() -> None:
     # host_contended=true applies to every row above (uniform drift)
     full.update(control_adjudication(timings))
 
-    # Driver-environment forensics (VERDICT r4 item 1): bench runs in
-    # the DRIVER's environment, so measure the oracle divergence where
-    # it happens — full report to FORENSICS.json, compact digest onto
-    # the stdout tail.
-    repo = os.path.dirname(os.path.abspath(__file__))
-    probe_line = None
-    try:
-        from tools import forensics
-        fsf = os.environ.get("SPARK_GRAFT_FORENSICS_SF_DIR",
-                             "/root/testdata/sf0.01")
-        if not os.path.isdir(fsf):
-            # ADVICE r5: if the driver host lacks the default probe
-            # fixture, fall back to the bench SF dir so the forensic
-            # digest still measures the real environment instead of
-            # recording an error for every probe.
-            fsf = SF_DIR
-        report = forensics.run(spark, fsf)
-        with open(os.path.join(repo, "FORENSICS.json"), "w") as f:
-            json.dump(report, f, indent=1)
-        probe_line = {"probe": forensics.compact_digest(report)}
-    except Exception as exc:  # forensic failure must not sink bench
-        probe_line = {"probe": {"error": repr(exc)[:200]}}
-
     # full per-query detail as a FILE — the single contract line
     # overflowed the driver's 2000-char stdout tail in r4
-    # (BENCH_r04.json parsed: null; VERDICT r4 item 6)
-    full["env"] = probe_line.get("probe", {})
+    # (BENCH_r04.json parsed: null; VERDICT r4 item 6). "env" holds the
+    # versions the oracle compare depends on.
+    full["env"] = {pkg: version(pkg)
+                   for pkg in ("duckdb", "pyarrow", "pandas", "numpy")}
+    full["env"]["TZ"] = os.environ.get("TZ", "<unset>")
+    repo = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(repo, "BENCH_DETAIL.json"), "w") as f:
         json.dump(full, f, indent=1)
 
     # stdout layout for a 2000-char tail capture: the full contract
     # line FIRST (complete in the log, may run off the tail's start),
-    # then the compact forensic digest, then — LAST, always fully
-    # inside the tail — a compact summary whose "queries" holds the
-    # slowest entries that fit (full set in BENCH_DETAIL.json).
+    # then — LAST, always fully inside the tail — a compact summary
+    # whose "queries" holds the slowest entries that fit (full set in
+    # BENCH_DETAIL.json).
     print(json.dumps(full, separators=(",", ":")))
-    print(json.dumps(probe_line, separators=(",", ":")))
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:8])
     print(json.dumps({
         "metric": "headline_suite_seconds",

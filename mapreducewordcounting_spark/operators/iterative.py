@@ -715,8 +715,8 @@ def graph_wcc_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (component = min nation id, n_nodes).
 
     Scale: the edge build is :func:`major_lanes`; label propagation
-    is one groupBy exchange per sweep over the (dimension-sized here,
-    arbitrary in general) edge list with convergence-checked
+    costs 7 jobs and 5 exchanges per sweep over the (dimension-sized
+    here, arbitrary in general) edge list with convergence-checked
     snapshots — the posture that holds when the graph grows with the
     data, unlike closure enumeration. Oracle: DuckDB set-semantics
     recursive closure (start-label pairs, min per node) — an

@@ -634,13 +634,13 @@ def sample_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate per split. The id_checksum pins exact membership.
 
     100 TB posture: the pair graph + label loop is dedup_clusters'
-    cost (prefix-filtered SSJoin, then one exchange per iteration
-    bounded by component diameter); the split itself adds one
-    doc_id-keyed left join (sort-merge by plan — labels carry a row
-    for every doc that appears in some near-dup pair, which at
-    crawl-corpus dup rates is a constant fraction of the corpus, NOT
-    broadcastable; the join key is the narrow 8-byte id either side)
-    and a 3-row aggregate.
+    cost (prefix-filtered SSJoin, then 7 jobs and 5 exchanges per
+    label sweep, sweeps bounded by component diameter); the split
+    itself adds one doc_id-keyed left join (sort-merge by plan —
+    labels carry a row for every doc that appears in some near-dup
+    pair, which at crawl-corpus dup rates is a constant fraction of
+    the corpus, NOT broadcastable; the join key is the narrow 8-byte
+    id either side) and a 3-row aggregate.
     Assignment stays recomputable from (doc_id → label) alone, so
     incremental corpora re-split without moving old docs unless their
     component grew — the property RNG splits can't give."""

@@ -43,39 +43,12 @@ def register(name: str, oracle: str | None = None,
     return wrap
 
 
-# The driver's per-round CORRECTNESS artifact samples the first ~50
-# entries of ``queries()`` in dict order; the window ROTATES each
-# round (VERDICT r3 item 4) so external evidence accumulates.
-# Round-13 order — STALEST-STRATUM RE-CONFIRMATION (VERDICT r12
-# item 6): r12 burned the r2/r3 strata, so the oldest external proof
-# now sits on the r4/r5 evidence strata. Layout:
-#   (1) position 0: the one r13-new fully-oracled query
-#       (similarity_ann_recall_report — windowed the round it ships;
-#       1 of the 3-query growth cap used);
-#   (2) positions 1-9: the nine r13 code-changed re-confirms — the
-#       five riders of the freq-broadcast kill (VERDICT r12 item 1:
-#       dedup_ngram_jaccard / dedup_containment_pairs /
-#       dedup_clusters / dedup_clusters_sharded /
-#       sample_split_leakage_safe) and the four ANN forms whose
-#       assignment now carries the fail-fast zero-norm guard
-#       (ADVICE r12: similarity_ann_ivf / _ivf_pruned /
-#       _anchor_graph / _greedy_route; _ivf_pruned also moved its
-#       at-rest index to a session-scoped path);
-#   (3) positions 10-26: the COMPLETE r4-evidence stratum (17
-#       queries — the aggregate/sample/UDF families, recursive
-#       hierarchy, triangle count, the tumbling batch twin);
-#   (4) positions 27-47: 21 of the 48 r5-evidence queries (the
-#       non-probe substantive tier: source/sink round-trips, DPP and
-#       runtime-bloom joins, multimodal decode, training pipeline,
-#       SCD2; the probe_* env/type rows and the remainder stay for
-#       r14) — 38 of the 48 coverage slots carry pre-r8-newest
-#       evidence, beyond the ">= 30" bar;
-#   (5) positions 48-49: the 2-entry probe canary kept every round
-#       (env version readout + the deliberate uncast-HUGEINT sentinel
-#       whose hash-fail IS the measurement — it guards against a
-#       silent driver-side DuckDB upgrade);
-#   (6) positions 50+: everything else in its prior order (all
-#       externally green through r12).
+# The driver's CORRECTNESS artifact samples the first 50 entries of
+# ``queries()`` in this order. Every query has been sampled by such a
+# window, so the order is fixed: a new query goes to the head, where
+# the next driver run samples it, and positions 48-49 keep the probe
+# canary (the DuckDB version readout and the uncast-HUGEINT sentinel,
+# whose hash failure is the measurement).
 _PRIORITY: tuple[str, ...] = (
     'similarity_ann_recall_report', 'dedup_ngram_jaccard', 'dedup_containment_pairs', 'dedup_clusters',
     'dedup_clusters_sharded', 'sample_split_leakage_safe', 'similarity_ann_ivf', 'similarity_ann_ivf_pruned',

@@ -68,8 +68,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: fixture streams, 32 state stores are pure per-partition setup
 #: overhead (measured 5.7 s → 0.9 s per query at 4); a 100 TB/day feed
 #: would size this to hundreds and keep it stable across restarts.
-STREAM_SHUFFLE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
+STREAM_SHUFFLE_PARTITIONS = 4
 
 
 class _stream_partitions:

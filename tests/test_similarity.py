@@ -174,12 +174,13 @@ def test_sf1_recall_floors(spark, tmp_path):
     the r12 nlist decouple: at the derived sf1 (20k vectors, fixed
     ANN_NLIST=40 so nprobe=2 covers 5% of the corpus vs 50% at
     sf0.1), every engine-native ANN form must hold a recall floor vs
-    the exact brute force. Measured r13 (tools/ann_recall.py): ivf
-    and ivf_pruned 0.92, anchor-graph 0.96, greedy-route 0.56,
-    binary-quant 1.00, rp-det 1.00 — the derived corpus's per-replica
-    perturbed twins are near-identical true neighbors, which is
-    exactly the locality a cell probe exploits (and real embedding
-    corpora cluster far more than this near-random fixture). Floors
+    the exact brute force. Measured r13 (BASELINE.md "ANN recall at
+    derived sf1"): ivf and ivf_pruned 0.92, anchor-graph 0.96,
+    greedy-route 0.56, binary-quant 1.00, rp-det 1.00 — the derived
+    corpus's per-replica perturbed twins are near-identical true
+    neighbors, which is exactly the locality a cell probe exploits
+    (and real embedding corpora cluster far more than this near-random
+    fixture). Floors
     sit well under the measured points so host-independent noise
     can't flake, but far above collapse (the pre-decouple failure
     mode this guards: a probe whose coverage shrinks with corpus

@@ -5,10 +5,9 @@ this test names the hole."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
-import subprocess
-import sys
 
 from mapreducewordcounting_spark.registry import all_queries
 
@@ -174,7 +173,7 @@ def test_priority_window_is_broad_and_oracled():
     specs = all_queries()
     names = list(specs)
     assert [n for n in _PRIORITY if n not in specs] == []
-    # ADVICE r10: _PRIORITY is hand-rewritten each rotation;
+    # ADVICE r10: _PRIORITY is edited by hand;
     # all_queries() silently dedupes and appends missing names, so a
     # duplicate entry would silently drop another query to the tail
     # and shift the sampled window. Require an exact permutation:
@@ -198,14 +197,12 @@ def test_priority_window_is_broad_and_oracled():
     unoracled = [n for n in window if specs[n].oracle is None
                  and not n.startswith("probe_env_")]
     if unoracled:
-        import glob as _glob
-        import json as _json
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         sampled: set[str] = set()
-        for path in sorted(_glob.glob(os.path.join(repo,
-                                                   "CORRECTNESS_r*.json"))):
+        for path in sorted(glob.glob(os.path.join(repo,
+                                                  "CORRECTNESS_r*.json"))):
             with open(path) as f:
-                sampled.update(_json.load(f))
+                sampled.update(json.load(f))
         oracled_uncovered = [
             n for n in specs
             if specs[n].oracle is not None
@@ -225,69 +222,3 @@ def test_oracle_coverage_ratio():
     specs = all_queries()
     oracled = sum(1 for s in specs.values() if s.oracle is not None)
     assert oracled / len(specs) >= 0.75, (oracled, len(specs))
-
-
-def test_rotation_audit_no_wasted_slots():
-    """tools/rotate_window.py --check: while never-externally-sampled
-    oracled queries remain, no coverage slot in the window head may
-    re-sample a query that already fully passed a driver round
-    (VERDICT r5 item 1 — the probe-slot waste this guards against)."""
-    proc = _rotation_check()
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-
-
-_FULL_PASS = {"rows_match": True, "schema_match": True,
-              "hash_match": True, "spark_rows": 1, "oracle_rows": 1,
-              "err": None}
-
-
-def _rotation_check(artifact_dir=None) -> subprocess.CompletedProcess:
-    """``tools/rotate_window.py --check`` over the committed CORRECTNESS
-    artifacts, or over those in ``artifact_dir``."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    env = dict(os.environ)
-    if artifact_dir is not None:
-        env["ROTATE_WINDOW_ARTIFACT_DIR"] = str(artifact_dir)
-    return subprocess.run(
-        [sys.executable, os.path.join(repo, "tools", "rotate_window.py"),
-         "--check"],
-        env=env, capture_output=True, text=True, cwd=repo, timeout=120)
-
-
-def _wasteful_artifact() -> dict[str, dict]:
-    """An artifact that makes the current window head wasteful: one
-    non-canary head slot already passed in full, while every other
-    oracled query was never sampled."""
-    canary = ("probe_env_duckdb_version", "probe_type_hugeint_sum_uncast")
-    head = [n for n in list(all_queries())[:48] if n not in canary]
-    return {head[0]: dict(_FULL_PASS)}
-
-
-def test_single_artifact_waste_is_not_excused(tmp_path):
-    """With one artifact on disk there is no pre-round history, so a
-    wasted window slot fails ``--check`` rather than being excused as
-    a round boundary."""
-    (tmp_path / "CORRECTNESS_r01.json").write_text(
-        json.dumps(_wasteful_artifact()))
-    assert _rotation_check(tmp_path).returncode == 1
-
-
-def test_two_artifact_round_boundary_still_excused(tmp_path):
-    """The window was clean against every artifact that existed when it
-    was planned (the older one shows the slot not yet passed); only the
-    newest harvested it, so ``--check`` passes."""
-    older = {n: {**_FULL_PASS, "hash_match": False}
-             for n in _wasteful_artifact()}
-    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps(older))
-    (tmp_path / "CORRECTNESS_r02.json").write_text(
-        json.dumps(_wasteful_artifact()))
-    assert _rotation_check(tmp_path).returncode == 0
-
-
-def test_two_artifact_preexisting_waste_still_fails(tmp_path):
-    """The excuse covers the boundary only: waste that the older
-    artifact already shows fails ``--check``."""
-    art = json.dumps(_wasteful_artifact())
-    (tmp_path / "CORRECTNESS_r01.json").write_text(art)
-    (tmp_path / "CORRECTNESS_r02.json").write_text(art)
-    assert _rotation_check(tmp_path).returncode == 1

@@ -1,9 +1,9 @@
 """tools/sync_check.py's doc checks: the SCALING.md "Session defaults"
 table must quote the shipped value of every conf session.py sets, and
-the env var of every knob it reads from the environment (check 6), and
-every quoted ``tools/<name>.py`` path must exist (check 7), and
+the env var of every knob it reads from the environment (check 5), and
+every quoted ``tools/<name>.py`` path must exist (check 6), and
 SCALING.md must state the package's checkpoint call-site count
-(check 9)."""
+(check 8)."""
 
 from __future__ import annotations
 
@@ -75,8 +75,10 @@ def test_committed_tool_paths_exist():
 def test_dangling_tool_path_is_flagged():
     sources = tool_ref_sources(REPO)
     sources["README.md"] += "\npython tools/ab_greedy_route.py\n"
+    sources["Makefile"] += "\ncheck:\n\tpython tools/check.py $(SF_DIR)\n"
     assert dangling_tool_refs(sources, REPO) == [
-        "README.md: quotes missing tools/ab_greedy_route.py"]
+        "README.md: quotes missing tools/ab_greedy_route.py",
+        "Makefile: quotes missing tools/check.py"]
 
 
 def test_scaling_states_the_checkpoint_call_site_count():

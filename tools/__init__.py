@@ -1,1 +1,2 @@
-"""Repo tooling (driver simulation, plan audit, forensics)."""
+"""Repo tooling (driver simulation, timing and cost ledger, timing
+sweeps, derived corpora, oracle inventory, artifact-staleness gate)."""

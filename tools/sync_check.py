@@ -11,27 +11,30 @@ Checks (all against the live registry import):
 
   1. README.md quotes  "<oracled> of <total> queries"
   2. SURVEY.md §2.4 quotes "<total>\nnamed queries — <oracled>"
-  3. TESTDATA.md's mirrored-oracle inventory row count == oracled
-  4. CORRECTNESS_local_full.json: n_queries == total,
+  3. CORRECTNESS_local_full.json: n_queries == total,
      n_oracled == oracled, n_fail == 0
-  5. BENCH_FULL_sf01.json: n_queries == total == len(queries),
+  4. BENCH_FULL_sf01.json: n_queries == total == len(queries),
      errors == {}
-  6. SCALING.md "Session defaults": every row for a conf that
+  5. SCALING.md "Session defaults": every row for a conf that
      session.py sets opens with its shipped value ("true" reads
      "on") and, for a conf read from an env var, quotes that env var
      (the broadcast-threshold, split-size and codec rows must be
      there)
-  7. every ``tools/<name>.py`` path quoted in README.md, SCALING.md,
-     PLANS.md, SURVEY.md, bench.py, tools/*.py or the package sources
-     exists, so a deleted tool leaves no stale instructions behind
-  8. tools/ledger.json holds one cost row per registry query, no more
-  9. SCALING.md's stated count of ``.localCheckpoint(`` call sites
+  6. every ``tools/<name>.py`` path quoted in README.md, SCALING.md,
+     PLANS.md, SURVEY.md, the Makefile, bench.py, tools/*.py or the
+     package sources exists, so a deleted tool leaves no stale
+     instructions behind
+  7. tools/ledger.json holds one cost row per registry query, no more
+  8. SCALING.md's stated count of ``.localCheckpoint(`` call sites
      equals the calls in the package sources (comments and docstrings
      that quote the call do not count)
 
+TESTDATA.md's oracle inventory is asserted whole by
+tests/test_oracle_inventory.py.
+
 `python tools/sync_check.py` exits non-zero on the first disagreement;
-`make sync-check` is an alias and `tools/check.py` runs it as its
-final stage (after the regenerating stages, so it sees fresh files).
+`make sync-check` is an alias and `make check` runs it after
+tools/verify_full.py (so it sees a fresh CORRECTNESS_local_full.json).
 """
 
 from __future__ import annotations
@@ -107,9 +110,9 @@ def scaling_problems(scaling: str, session_source: str) -> list[str]:
     return problems
 
 
-#: files whose quoted ``tools/<name>.py`` paths must exist (check 7)
+#: files whose quoted ``tools/<name>.py`` paths must exist (check 6)
 TOOL_REF_GLOBS = ("README.md", "SCALING.md", "PLANS.md", "SURVEY.md",
-                  "bench.py", "tools/*.py",
+                  "Makefile", "bench.py", "tools/*.py",
                   "mapreducewordcounting_spark/**/*.py")
 
 
@@ -184,17 +187,7 @@ def main() -> int:
         problems.append(
             f"SURVEY.md §2.4: expected {total}/{oracled}, found {got}")
 
-    # 3. TESTDATA.md inventory (oracle_classes.py writes the row count)
-    testdata = read("TESTDATA.md")
-    m = re.search(r"inventory \((\d+) oracles", testdata)
-    n_inv = len(re.findall(r"^\| `", testdata, flags=re.M))
-    if n_inv and n_inv != oracled:
-        problems.append(
-            f"TESTDATA.md inventory: {n_inv} rows != {oracled} oracles "
-            "(run: python tools/oracle_classes.py)")
-    del m
-
-    # 4. CORRECTNESS_local_full.json
+    # 3. CORRECTNESS_local_full.json
     try:
         clf = json.load(open(os.path.join(REPO,
                                           "CORRECTNESS_local_full.json")))
@@ -210,7 +203,7 @@ def main() -> int:
     except Exception as exc:
         problems.append(f"CORRECTNESS_local_full unreadable: {exc!r}")
 
-    # 5. BENCH_FULL_sf01.json
+    # 4. BENCH_FULL_sf01.json
     try:
         bf = json.load(open(os.path.join(REPO, "BENCH_FULL_sf01.json")))
         if bf.get("n_queries") != total or len(bf.get("queries", {})) != total:
@@ -224,15 +217,15 @@ def main() -> int:
     except Exception as exc:
         problems.append(f"BENCH_FULL_sf01 unreadable: {exc!r}")
 
-    # 6. SCALING.md session defaults vs session.py
+    # 5. SCALING.md session defaults vs session.py
     problems += scaling_problems(
         read("SCALING.md"),
         read(os.path.join("mapreducewordcounting_spark", "session.py")))
 
-    # 7. quoted tool paths exist
+    # 6. quoted tool paths exist
     problems += dangling_tool_refs(tool_ref_sources(REPO), REPO)
 
-    # 8. tools/ledger.json rows == registry
+    # 7. tools/ledger.json rows == registry
     try:
         rows = json.load(open(os.path.join(REPO, "tools", "ledger.json")))
         missing = sorted(set(entry.queries()) - set(rows))
@@ -244,7 +237,7 @@ def main() -> int:
     except Exception as exc:
         problems.append(f"ledger unreadable: {exc!r}")
 
-    # 9. SCALING.md's checkpoint call-site count
+    # 8. SCALING.md's checkpoint call-site count
     problems += checkpoint_count_problems(read("SCALING.md"),
                                           checkpoint_call_sites(REPO))
 
