@@ -4,8 +4,9 @@
 # regression; `make test` / `make bench` are the other two gates.
 
 SF_DIR ?= /root/testdata/sf0.01
+SEED ?= 1
 
-.PHONY: check test test-deep bench sync-check
+.PHONY: check test test-deep bench perfbench sync-check
 
 check:
 	python tools/verify_full.py $(SF_DIR)
@@ -29,3 +30,9 @@ test-deep:
 
 bench:
 	python bench.py
+
+# The repository benchmark (BENCHMARK.json): one untraced run of each
+# workload, printing the gated setup_s, jobs and shuffle_mb.
+perfbench:
+	python3 perfbench/run.py --workload wordcount_corpus --seed $(SEED) --seconds 8 --trace 0
+	python3 perfbench/run.py --workload neardup_corpus --seed $(SEED) --seconds 8 --trace 0

@@ -51,3 +51,23 @@ def tokenize_fidelity(text: str | Column) -> Column:
 def words_canonical(text: str | Column) -> Column:
     """Convenience: explode-ready canonical tokens (still an array)."""
     return F.filter(tokenize_canonical(text), lambda w: F.length(w) > 0)
+
+
+def doc_marker(doc_id: str, has_terms: Column) -> Column:
+    """``array<string>`` of one marker term for ``doc_id`` when
+    ``has_terms``, else empty: concatenated onto a document's term array
+    before the explode, it gives tf one marker row per distinct doc_id,
+    so the document count is ``count_if(is_doc_marker(word))`` above the
+    term exchange instead of a distinct over a doc_id exchange. Markers
+    start with ``#``, which no canonical token (``[a-z']+``, n-grams
+    joined by single spaces) contains, and are keyed by the document so
+    they spread across the term partitions. A NULL doc_id gives a NULL
+    term, which no marker test counts, as ``count(DISTINCT)`` skips it."""
+    marker = F.concat(F.lit("#"), F.col(doc_id).cast("string"))
+    return F.when(has_terms, F.array(marker)).otherwise(
+        F.array().cast("array<string>"))
+
+
+def is_doc_marker(word: str) -> Column:
+    """True for the terms :func:`doc_marker` emits."""
+    return F.col(word).startswith("#")

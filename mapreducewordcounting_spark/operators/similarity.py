@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from mapreducewordcounting_spark.catalog import load_table
 from mapreducewordcounting_spark.checkpoints import release
+from mapreducewordcounting_spark.functions.text import doc_marker, is_doc_marker
 from mapreducewordcounting_spark.functions.vectors import (
     cosine_similarity,
     dot,
@@ -1246,12 +1247,19 @@ def similarity_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     norms.
 
     Scale structure — one shuffle on the term, as the reference's word
-    count (PAPER.md §1.1):
+    count (PAPER.md §1.1). The final plan runs six rounds: the word
+    exchange, the doc count's single-partition exchange and its
+    broadcast, the pair exchange, the norms broadcast and the result.
     - The shingle rows hash-partition once by ``word``. tf
-      (``word, doc_id``), the posting lists (``word``) and the doc
-      count all aggregate above that one exchange; AQE reuses it, so
-      the corpus is scanned and tokenized once and no checkpoint is
-      needed.
+      (``word, doc_id``) and the posting lists (``word``) aggregate
+      above that one exchange; AQE reuses it, so the corpus is scanned
+      and tokenized once and no checkpoint is needed.
+    - The doc count N reads the same exchange: each document with a
+      shingle adds one marker term (``functions.text.doc_marker``), so
+      tf holds one marker row per distinct doc_id and N is their count,
+      exact for repeated and NULL doc_ids. The posting-list aggregate
+      drops the markers inside ``collect_list``: a filter on ``word``
+      would be pushed below the ``repartition`` and split the exchange.
     - The posting-list prune (``df <= 20``) bounds each term's pair
       fan-out at df² — hot stop-terms, which carry near-zero idf mass
       anyway, never enter the index. This is the sparse analog of
@@ -1279,18 +1287,21 @@ def similarity_tfidf_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan and tokenizer. tf counts after the exchange: 3-gram shingles
     # almost never repeat inside a document (tf rows ÷ shingle rows
     # 0.9988 at sf0.1), so a map-side combine would save no rows.
-    words = (toks.select("doc_id",
-                         F.explode(ngrams(F.col("toks"), 3)).alias("word"))
+    # A document has a shingle exactly when it has at least 3 tokens.
+    terms = F.concat(ngrams(F.col("toks"), 3),
+                     doc_marker("doc_id", F.size("toks") >= 3))
+    words = (toks.select("doc_id", F.explode(terms).alias("word"))
              .repartition("word"))
     tf = words.groupBy("word", "doc_id").agg(F.count("*").alias("tf"))
-    n_docs = tf.select(F.count_distinct("doc_id").alias("n_docs"))
+    n_docs = tf.agg(F.count_if(is_doc_marker("word")).alias("n_docs"))
     in_term = Window.partitionBy("word").orderBy("doc_id")
     postings = (
         tf.withColumn("rk", F.row_number().over(in_term))
         .filter(F.col("rk") <= TFIDF_DF_CAP + 1)
         .groupBy("word")
-        .agg(F.collect_list(F.struct("doc_id", "tf")).alias("post"))
-        .filter(F.size("post") <= TFIDF_DF_CAP)
+        .agg(F.collect_list(F.when(~is_doc_marker("word"),
+                                   F.struct("doc_id", "tf"))).alias("post"))
+        .filter(F.size("post").between(1, TFIDF_DF_CAP))
         .crossJoin(F.broadcast(n_docs))
         .select("post", F.log((F.col("n_docs") + 1.0)
                               / (F.size("post") + 1.0)).alias("idf"))

@@ -20,7 +20,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreducewordcounting_spark.catalog import load_table
-from mapreducewordcounting_spark.functions.text import tokenize_canonical
+from mapreducewordcounting_spark.functions.text import (
+    doc_marker,
+    is_doc_marker,
+    tokenize_canonical,
+    words_canonical,
+)
 from mapreducewordcounting_spark.registry import register
 
 #: tiny fixed stopword list matching the fixture vocabulary
@@ -201,19 +206,22 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts; the n_docs scalar folds in as a crossjoined literal).
     Smoothed idf = ln((N+1)/(df+1)); ln rounded to 6 (libm parity)."""
     docs = load_table(spark, sf_dir, "documents")
-    words = (
-        docs.select("doc_id", F.explode(tokenize_canonical("text")).alias("word"))
-        .filter(F.length("word") > 0)
-    )
+    toks = docs.select("doc_id", words_canonical("text").alias("toks"))
+    # one marker term per document with a word (functions.text.doc_marker)
+    terms = F.concat("toks", doc_marker("doc_id", F.size("toks") > 0))
+    words = toks.select("doc_id", F.explode(terms).alias("word"))
     tf = words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     # df and N derive from tf, not the raw word stream: tf is already
-    # one row per (doc, word), so df = count per word and N = distinct
-    # docs — ~20× less data into the second and third aggregations.
+    # one row per (doc, word), so df = non-NULL doc_ids per word and N =
+    # its marker rows; neither needs a doc_id exchange. Markers stay out
+    # of df, so the broadcast df table stays vocabulary-sized and the
+    # inner join drops them from the output.
     # Cut kept (BASELINE.md, one-shot checkpoint audit): uncut, the
     # consumers re-scan: scans 1 → 3.
     tf = tf.localCheckpoint(eager=True)
-    df = tf.groupBy("word").agg(F.count("*").alias("df"))
-    n_docs = tf.select(F.count_distinct("doc_id").alias("n_docs"))
+    df = (tf.filter(~is_doc_marker("word"))
+          .groupBy("word").agg(F.count("doc_id").alias("df")))
+    n_docs = tf.agg(F.count_if(is_doc_marker("word")).alias("n_docs"))
     return (
         tf.join(F.broadcast(df), "word")
         .crossJoin(F.broadcast(n_docs))

@@ -956,10 +956,13 @@ def test_tfidf_consumers_share_one_word_exchange(spark, sf_dir):
     checkpoint (Scan ExistingRDD). Each posting list is bounded at
     TFIDF_DF_CAP + 1 rows by a WindowGroupLimit before it is collected.
     A df aggregate joined back to tf gets its own exchange (column
-    pruning) and re-scans the corpus. The norms are the pair
-    aggregate's diagonal: the pair exchange is reused, one broadcast
-    serves both norms joins, and the only shuffle on one doc key is the
-    doc count's distinct (a norms aggregate of its own adds another)."""
+    pruning) and re-scans the corpus. The doc count is the marker rows
+    of tf, so it needs no doc_id exchange: its one shuffle is the
+    single-partition exchange of a global count, and ``word`` is the
+    only single-key shuffle (a distinct over doc_id, or a norms
+    aggregate of its own, adds a doc_id one). The norms are the pair
+    aggregate's diagonal: the pair exchange is reused and one broadcast
+    serves both norms joins."""
     from mapreducewordcounting_spark.operators.similarity import (
         TFIDF_DF_CAP,
         similarity_tfidf_pairs,
@@ -985,7 +988,8 @@ def test_tfidf_consumers_share_one_word_exchange(spark, sf_dir):
         "+- BroadcastExchange HashedRelationBroadcastMode") == 1, final
     one_key = re.findall(
         r"\+- Exchange hashpartitioning\((\w+)#\d+L?, \d+\)", final)
-    assert sorted(one_key) == ["doc_id", "word"], final
+    assert one_key == ["word"], final
+    assert final.count("Exchange SinglePartition") == 1, final
 
 
 def test_is_vector_named_component_matching():

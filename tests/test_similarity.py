@@ -1,8 +1,9 @@
 """Recall tests for the approximate similarity paths vs brute force
 (the fixture embeddings are near-random — max pairwise cosine ≈ 0.51 —
 so bars are structural, not quality claims), and the df-cap boundary
-of the sparse tf-idf index on a hand-built corpus, the anchor
-assignment's zero-norm guard and the IVF index's session-scoped path."""
+of the sparse tf-idf index and the tf-idf document count on hand-built
+corpora, the anchor assignment's zero-norm guard and the IVF index's
+session-scoped path."""
 
 from __future__ import annotations
 
@@ -252,6 +253,53 @@ def test_tfidf_df_cap_boundary(spark, tmp_path):
     assert [r[:2] for r in got] == pairs
     for g, e in zip(got, expected):
         assert abs(g[2] - e[2]) < 1e-6
+
+
+def test_tfidf_doc_count_exact_on_irregular_ids(spark, tmp_path):
+    """Both tf-idf queries count N from one marker term per document,
+    which must equal the oracle's ``count(DISTINCT doc_id)`` over the
+    documents with a term: a doc_id on two rows counts once, a NULL
+    doc_id and a NULL text not at all, and neither does a document
+    whose tokens (``#7``, ``42``) normalize away or that has fewer than
+    three tokens for the shingle query. Here N differs from the row
+    count, so a row-count or first-shingle count fails."""
+    import duckdb
+
+    from mapreducewordcounting_spark.operators.text_analysis import text_tfidf
+    from mapreducewordcounting_spark.registry import oracle_sql
+    from tests.oracle_util import assert_matches_oracle
+
+    docs = [
+        (1, "aa bb cc dd ee"),
+        (1, "aa bb cc ff gg"),          # repeated doc_id: one document
+        (None, "aa bb cc dd ee ff"),     # NULL doc_id: not counted
+        (2, None),                       # NULL text: no terms
+        (3, "aa bb"),                    # a word doc, no shingle
+        (4, "#7 42 aa bb cc dd"),        # '#7' and '42' normalize away
+        (5, "#7 42"),                    # no canonical token at all
+        (6, "bb cc dd ee ff hh"),
+        (7, "cc dd ee ff gg hh ii"),
+        (8, "jj kk ll mm jj kk ll"),
+    ]
+    pq.write_table(pa.table({
+        "doc_id": pa.array([d for d, _ in docs], pa.int64()),
+        "text": pa.array([t for _, t in docs], pa.string()),
+        "lang": ["en"] * len(docs),
+        "source": ["web"] * len(docs),
+        "n_chars": pa.array([len(t or "") for _, t in docs], pa.int64()),
+    }), tmp_path / "documents.parquet")
+    # N is 5 for the shingles (docs 1, 4, 6, 7, 8) and 6 for the words
+    # (3 too); 7 rows have a shingle and 10 rows are in the table
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM "
+                f"'{tmp_path}/documents.parquet'")
+    oracles = oracle_sql()
+    for fn in (similarity_tfidf_pairs, text_tfidf):
+        out = fn(spark, str(tmp_path))
+        rows = out.collect()
+        assert rows, fn.__name__
+        assert_matches_oracle(out, con, oracles[fn.__name__], rows=rows)
+    con.close()
 
 
 def test_anchor_argmax_zero_norm_vector_raises(spark):
